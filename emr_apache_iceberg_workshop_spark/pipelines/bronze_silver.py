@@ -2,7 +2,7 @@
 end-to-end, SURVEY.md §3.2).
 
 Semantics preserved:
-- table history scan + latest snapshot top-1            (`bronze-silver.py:116-138`)
+- latest snapshot (main's head) lookup                  (`bronze-silver.py:116-138`)
 - no-new-data short-circuit (ckpt == latest)            (`bronze-silver.py:140-142`)
 - snapshot-range incremental read                       (`bronze-silver.py:146-149`)
 - Avro-schema-driven empty-table DDL on first run       (`bronze-silver.py:171-203`)
@@ -74,13 +74,14 @@ class BronzeSilverConfig:
 
 
 def get_incremental_data(spark: SparkSession, cfg: BronzeSilverConfig):
-    """History top-1 + checkpoint gate + incremental scan (S6/S7/S8/O1)."""
+    """Latest snapshot + checkpoint gate + incremental scan (S6/S7/S8/O1).
+    "Latest" is main's head, not the newest snapshot over all refs: a
+    write-audit-publish commit staged on a branch is not published data,
+    and checkpointing it would skip it for good once it is published."""
     bronze = SnapshotTable(spark, cfg.bronze_root)
-    hist = bronze.history()
-    latest_row = hist.orderBy(F.desc("made_current_at")).limit(1).collect()
-    if not latest_row:
+    latest = bronze.latest_snapshot_id()
+    if latest is None:
         return None, None
-    latest = latest_row[0]["snapshot_id"]
     ckpt = CheckpointStore(cfg.checkpoint_path)
     last = ckpt.last_processed_snapshot()
     if last is not None and last == latest:

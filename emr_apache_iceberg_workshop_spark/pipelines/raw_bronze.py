@@ -99,7 +99,9 @@ def run_raw_bronze(
         )
         sid = table.write(df, mode="append", operation="create")
 
-    rows = table.scan_incremental(sid - 1, sid).count()
+    # appended rows from the new snapshot's manifest (parquet footers)
+    snap = next(s for s in table.snapshots() if s.snapshot_id == sid)
+    rows = sum(f["rows"] for f in snap.files)
     # commit watermark only after the write landed
     ckpt.commit_processed_time(max_mtime)
     return {"files": len(files), "rows": rows, "snapshot_id": sid, "skipped": False}

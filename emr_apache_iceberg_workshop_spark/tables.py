@@ -37,7 +37,16 @@ Scale: the table state is a list of parquet directories; Spark scans them
 as a multi-path parquet read with `basePath`, so partition pruning, column
 pruning, and predicate pushdown all work normally. Incremental reads scan
 only the snapshot directories in range — the same file-skipping effect as
-Iceberg's incremental scan.
+Iceberg's incremental scan. Every file the engine wrote is read with the
+schema the metadata records (data dirs: the table schema; equality
+deletes: their key fields; positional deletes: `file_rel, pos`; masks:
+the partition tuple), so building a scan launches no Spark job. A MOR
+scan tags each data row with its snapshot id parsed from the file path,
+and all delete files of a key set form one relation with their ids
+parsed the same way: every data dir anti-joins that one relation, AQE
+broadcasts it once, and the jobs a scan runs stay flat as history grows.
+Planning work still grows with the number of data dirs, one relation
+each (`tools/history_probe.py` measures both).
 """
 
 from __future__ import annotations
@@ -176,6 +185,31 @@ def _entry_excl_full(root: str, e) -> list:
 def _dir_sid(rel: str) -> int:
     """data/s7 or deletes/s7 → 7 (the snapshot that wrote the dir)."""
     return int(rel.rsplit("/s", 1)[-1])
+
+
+# positional-delete file layout: (data file path relative to the table
+# root, row index in that file) — what `_positions_where` writes
+_POS_DELETE_SCHEMA = T.StructType(
+    [T.StructField("file_rel", T.StringType()), T.StructField("pos", T.LongType())]
+)
+
+
+def _data_sid_expr(rel):
+    """Column: the snapshot id of a data row's dir, parsed from its
+    root-relative path `rel` (`data/s<id>/...`). A per-row expression,
+    not a literal per dir: Catalyst cannot fold it into the delete side
+    of the MOR anti-join, so every dir's branch joins the SAME delete
+    relation and AQE broadcasts it once (a literal sid made one filtered
+    delete relation — and one broadcast job — per dir)."""
+    return F.regexp_extract(rel, r"^data/s(\d+)/", 1).cast("long")
+
+
+def _file_sid_expr():
+    """Column: the snapshot id in the path of the file a row was read
+    from, for the flat `<kind>/s<id>/<file>` dirs (deletes, masks).
+    Anchored at the file name, so the table root's own form (URI
+    encoding, a `/s9/` segment of its own) cannot match."""
+    return F.regexp_extract("_metadata.file_path", r"/s(\d+)/[^/]+$", 1).cast("long")
 
 
 def _part_str(v):
@@ -1647,9 +1681,14 @@ class SnapshotTable:
         derived from the parquet `_metadata` column (scheme-independent).
         (rel_path, row_index) is the positional-delete row identity."""
         root = os.path.abspath(self.root)
-        # strip any URI scheme ('file:', 'file://') down to the plain path,
-        # then drop '<root>/'
-        plain = "regexp_replace(_metadata.file_path, '^[a-zA-Z0-9]+:/+', '/')"
+        # `_metadata.file_path` is a URI: strip the scheme ('file:',
+        # 'file://') down to the plain path and percent-decode it (a
+        # literal '+' is kept — URI paths leave it unencoded, while the
+        # decoder would read it as a space), then drop '<root>/'
+        plain = (
+            "url_decode(replace(regexp_replace(_metadata.file_path,"
+            " '^[a-zA-Z0-9]+:/+', '/'), '+', '%2B'))"
+        )
         return F.expr(f"substring({plain}, {len(root) + 2})")
 
     @staticmethod
@@ -1722,19 +1761,21 @@ class SnapshotTable:
     ) -> DataFrame:
         """Union of per-dir reads. Dict entries carry partition-exclusion
         masks (partitions rewritten by a later partition-scoped merge);
-        `with_sid` tags rows with the snapshot id of their dir so MOR
-        delete files can be applied with a sid-conditioned anti-join;
-        `with_pos` adds (__rel, __pos) — the row's physical identity for
-        positional deletes. Columns renamed AFTER a dir was written are
-        read under their historical name and aliased (Iceberg reads by
-        field id; this layer reads by the per-snapshot name mapping —
-        `as_of` bounds the mapping for time-travel reads)."""
+        `with_sid` adds `__sid`, the snapshot id of the row's dir, so MOR
+        delete files can be applied with a sid-conditioned anti-join. It
+        is parsed per row from the file path (`_data_sid_expr`), never a
+        per-dir literal, so the anti-join's delete side stays one shared
+        relation. `with_pos` adds (__rel, __pos) — the row's physical
+        identity for positional deletes. Columns renamed AFTER a dir was
+        written are read under their historical name and aliased (Iceberg
+        reads by field id; this layer reads by the per-snapshot name
+        mapping — `as_of` bounds the mapping for time-travel reads)."""
         meta = self._load()
         schema = schema or self.schema()
         if not entries:
             df = self.spark.createDataFrame([], schema)
             if with_sid:
-                df = df.withColumn("__sid", F.lit(0).cast("long"))
+                df = df.withColumn("__sid", F.lit(None).cast("long"))
             if with_pos:
                 df = df.withColumn("__rel", F.lit("").cast("string")).withColumn(
                     "__pos", F.lit(0).cast("long")
@@ -1743,6 +1784,7 @@ class SnapshotTable:
         all_fields = self._all_part_fields(meta)
         renames = self._renames(meta)
         births = self._births(meta, as_of)
+        mask_dfs: dict[str, DataFrame] = {}  # a mask file applies to many dirs
         dfs = []
         for e in entries:
             rel, excl = _entry_rel(e), _entry_excl(e)
@@ -1768,10 +1810,6 @@ class SnapshotTable:
             )
             # basePath per snapshot dir so partition columns resolve
             df = self.spark.read.option("basePath", p).schema(read_schema).parquet(p)
-            if with_pos:
-                df = df.withColumn("__rel", self._rel_path_expr()).withColumn(
-                    "__pos", F.col("_metadata.row_index")
-                )
             # alias historical names back to the requested schema, and drop
             # the derived directory column hidden-partition dirs append
             sel = [
@@ -1779,7 +1817,7 @@ class SnapshotTable:
                 if f.name in force_null
                 else F.col(hn).alias(f.name)
                 for hn, f in hist
-            ] + ([F.col("__rel"), F.col("__pos")] if with_pos else [])
+            ] + self._identity_cols(with_sid, with_pos)
             df = df.select(*sel)
             if excl:
                 # exclusion re-derives partition values from data columns
@@ -1791,18 +1829,90 @@ class SnapshotTable:
                 # mask-FILE exclusion (capped COW): anti-join the dir's
                 # rows against the touched-partition parquet — no inline
                 # list, no giant predicate, any cardinality
-                mdf = self.spark.read.parquet(os.path.join(self.root, mrel))
-                df = self._mask_join(df, mdf, all_fields, schema, "left_anti")
-            if with_sid:
-                df = df.withColumn("__sid", F.lit(dsid).cast("long"))
+                if mrel not in mask_dfs:
+                    mask_dfs[mrel] = self._read_files(
+                        [mrel], self._mask_schema(meta, mrel)
+                    )
+                df = self._mask_join(
+                    df, mask_dfs[mrel], all_fields, schema, "left_anti"
+                )
             dfs.append(df)
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
         return out
 
+    def _identity_cols(self, with_sid: bool, with_pos: bool) -> list:
+        """The internal row-identity columns a data read carries: `__sid`
+        (see `_data_sid_expr`) and the positional (`__rel`, `__pos`)."""
+        rel = self._rel_path_expr()
+        cols = [_data_sid_expr(rel).alias("__sid")] if with_sid else []
+        if with_pos:
+            cols += [rel.alias("__rel"), F.col("_metadata.row_index").alias("__pos")]
+        return cols
+
     def _read_dirs(self, rels: list[str], schema: T.StructType | None = None) -> DataFrame:
         return self._read_entries(rels, schema=schema)
+
+    def _read_files(
+        self, rels: list[str], schema: T.StructType, with_sid: bool = False
+    ) -> DataFrame:
+        """One relation over engine-written delete or mask dirs, read
+        with the schema metadata records for them — never an inferring
+        read (parquet schema inference is one Spark job per read).
+        `with_sid` adds `__file_sid`, the id in each file's `s<id>` dir.
+        Spark lists more paths than `parallelPartitionDiscovery.threshold`
+        with a Spark job, so a longer list is read as a union of scans of
+        at most that many dirs — still one relation to the plan above."""
+        n = int(
+            self.spark.conf.get(
+                "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
+            )
+        )
+        paths = [os.path.join(self.root, r) for r in rels]
+        out = None
+        for i in range(0, len(paths), n):
+            one = self.spark.read.schema(schema).parquet(*paths[i : i + n])
+            if with_sid:
+                one = one.withColumn("__file_sid", _file_sid_expr())
+            out = one if out is None else out.unionByName(one)
+        return out
+
+    @staticmethod
+    def _ddl_at(meta: dict, snapshot_id: int) -> str:
+        """Schema DDL current AS OF `snapshot_id`: the earliest later
+        evolve-schema commit recorded what the schema was before it."""
+        for s in meta["snapshots"]:
+            if s["snapshot_id"] > snapshot_id and s["operation"] == "evolve-schema":
+                return s["summary"]["prev_schema"]
+        return meta["schema"]
+
+    @staticmethod
+    def _spec_at(meta: dict, snapshot_id: int) -> list[str]:
+        """Partition spec current AS OF `snapshot_id` (same walk as
+        `_ddl_at`, over evolve-partition commits)."""
+        for s in meta["snapshots"]:
+            if s["snapshot_id"] > snapshot_id and s["operation"] == "evolve-partition":
+                return s["summary"]["prev_partition_by"]
+        return meta["partition_by"]
+
+    @staticmethod
+    def _key_schema(ddl: str, keys) -> T.StructType:
+        """Columns of an equality-delete file: its key fields, typed as
+        in `ddl`, the schema current when the file's snapshot wrote it."""
+        by_name = {f.name: f.dataType for f in T.StructType.fromDDL(ddl).fields}
+        return T.StructType([T.StructField(k, by_name[k]) for k in keys])
+
+    def _mask_schema(self, meta: dict, mrel: str) -> T.StructType:
+        """Columns of mask file `mrel`: the partition tuple of the spec
+        current when it was written, typed by each transform over that
+        snapshot's schema (resolved on an empty frame — analysis only)."""
+        msid = _dir_sid(mrel)
+        schema = T.StructType.fromDDL(self._ddl_at(meta, msid))
+        fields = parse_spec(self._spec_at(meta, msid))
+        sel = [field_expr(f, schema).alias(f.name) for f in fields]
+        derived = self.spark.createDataFrame([], schema).select(*sel).schema
+        return T.StructType([T.StructField(f.name, f.dataType) for f in derived.fields])
 
     def _apply_deletes(
         self, df: DataFrame, deletes: list, keep_identity: bool = False
@@ -1810,19 +1920,23 @@ class SnapshotTable:
         """MOR read path: suppress any row whose key appears in a delete
         file COMMITTED AFTER the row's own snapshot (equality deletes with
         sequence-number semantics, like Iceberg v2). One anti-join per
-        distinct key set (normally exactly one). The delete side is the
-        accumulated merge keys — small relative to data and compacted away
-        by `compact()`; AQE picks broadcast vs shuffle by size."""
+        distinct key set (normally exactly one). Each key set's delete
+        files are ONE relation read with the key schema metadata records
+        (no inference job), `__del_sid` parsed from each file's path.
+        The data side's `__sid` is a per-row path expression too, so the
+        sid condition stays in the join: every data dir's union branch
+        anti-joins the same delete relation and AQE broadcasts it once —
+        the scan's job count does not grow with the table's history. The
+        delete side is the accumulated merge keys — small relative to
+        data and compacted away by `compact()`."""
         # positional deletes first: (file, row_index) pairs bind to physical
         # rows, no sequence-number condition needed (files are immutable
         # and later appends land in new files)
         pos_dels = [d for d in deletes if d.get("style") == "position"]
         if pos_dels:
-            pairs = None
-            for d in pos_dels:
-                one = self.spark.read.parquet(os.path.join(self.root, d["file"]))
-                pairs = one if pairs is None else pairs.unionByName(one)
-            pairs = pairs.select(
+            pairs = self._read_files(
+                [d["file"] for d in pos_dels], _POS_DELETE_SCHEMA
+            ).select(
                 F.col("file_rel").alias("__del_rel"), F.col("pos").alias("__del_pos")
             )
             df = df.join(
@@ -1832,19 +1946,22 @@ class SnapshotTable:
                 "left_anti",
             )
         deletes = [d for d in deletes if d.get("style") != "position"]
-        by_keys: dict[tuple, list] = {}
+        meta = self._load() if deletes else None
+        # one relation per key set (and key typing — only a drop and
+        # re-add of a key column could split one); each schema version
+        # is parsed once
+        by_ddl: dict[tuple, list] = {}
         for d in deletes:
-            by_keys.setdefault(tuple(d["keys"]), []).append(d)
-        for keys, ds in by_keys.items():
-            dels = None
-            for d in ds:
-                p = os.path.join(self.root, d["file"])
-                one = self.spark.read.parquet(p).withColumn(
-                    "__del_sid", F.lit(d["sid"]).cast("long")
-                )
-                dels = one if dels is None else dels.unionByName(one)
-            dels = dels.select(
-                *[F.col(k).alias(f"__del_{k}") for k in keys], "__del_sid"
+            by_ddl.setdefault(
+                (tuple(d["keys"]), self._ddl_at(meta, d["sid"])), []
+            ).append(d["file"])
+        by_keys: dict[tuple, list] = {}
+        for (keys, ddl), files in by_ddl.items():
+            by_keys.setdefault((keys, self._key_schema(ddl, keys)), []).extend(files)
+        for (keys, kschema), files in by_keys.items():
+            dels = self._read_files(files, kschema, with_sid=True).select(
+                *[F.col(k).alias(f"__del_{k}") for k in keys],
+                F.col("__file_sid").alias("__del_sid"),
             )
             cond = F.col("__del_sid") > F.col("__sid")
             for k in keys:
@@ -1861,11 +1978,8 @@ class SnapshotTable:
         snapshot's rows at the recorded (file_rel, pos) identities."""
         if prev_snap is None:
             return self.spark.createDataFrame([], schema)
-        pairs = (
-            self.spark.read.parquet(os.path.join(self.root, drel))
-            .select(
-                F.col("file_rel").alias("__del_rel"), F.col("pos").alias("__del_pos")
-            )
+        pairs = self._read_files([drel], _POS_DELETE_SCHEMA).select(
+            F.col("file_rel").alias("__del_rel"), F.col("pos").alias("__del_pos")
         )
         deletes = prev_snap.get("active_deletes", [])
         df = self._read_entries(
@@ -2131,9 +2245,8 @@ class SnapshotTable:
                     prev_snap = s
                     continue
                 keys = dentry["keys"]
-                dels = self.spark.read.parquet(
-                    os.path.join(self.root, s["delete_file"])
-                )
+                kschema = self._key_schema(self._ddl_at(meta, sid), keys)
+                dels = self._read_files([s["delete_file"]], kschema)
                 frames.append(eq_preimages(dels, keys, prev_snap, sid))
                 prev_snap = s
                 continue
@@ -2163,9 +2276,8 @@ class SnapshotTable:
                     prev_snap = s
                     continue
                 keys = dentry["keys"]
-                dels = self.spark.read.parquet(
-                    os.path.join(self.root, s["delete_file"])
-                )
+                kschema = self._key_schema(self._ddl_at(meta, sid), keys)
+                dels = self._read_files([s["delete_file"]], kschema)
                 frames.append(eq_preimages(dels, keys, prev_snap, sid))
             else:
                 raise ValueError(
@@ -2421,16 +2533,14 @@ class SnapshotTable:
         )
         if not pos_dels:
             return self.spark.createDataFrame([], schema)
-        out = None
-        for d in pos_dels:
-            one = self.spark.read.parquet(os.path.join(self.root, d["file"])).select(
-                F.col("file_rel").alias("file_path"),
-                F.col("pos").cast("long").alias("pos"),
-                F.lit(d["file"]).alias("delete_file"),
-                F.lit(d["sid"]).cast("long").alias("delete_snapshot_id"),
-            )
-            out = one if out is None else out.unionByName(one)
-        return out
+        return self._read_files(
+            [d["file"] for d in pos_dels], _POS_DELETE_SCHEMA, with_sid=True
+        ).select(
+            F.col("file_rel").alias("file_path"),
+            "pos",
+            F.concat(F.lit("deletes/s"), F.col("__file_sid")).alias("delete_file"),
+            F.col("__file_sid").alias("delete_snapshot_id"),
+        )
 
     def entries_table(self) -> DataFrame:
         """Metadata table (`<table>.entries` analogue): one row per
@@ -3157,10 +3267,7 @@ class SnapshotTable:
     def schema_at(self, snapshot_id: int) -> T.StructType:
         """Schema current AS OF `snapshot_id`: the earliest later
         evolve-schema commit recorded what the schema was before it."""
-        for s in self._load()["snapshots"]:
-            if s["snapshot_id"] > snapshot_id and s["operation"] == "evolve-schema":
-                return T.StructType.fromDDL(s["summary"]["prev_schema"])
-        return self.schema()
+        return T.StructType.fromDDL(self._ddl_at(self._load(), snapshot_id))
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> int:
         """Named immutable ref to a snapshot (Iceberg `CREATE TAG` /
@@ -3517,6 +3624,7 @@ class SnapshotTable:
             by_dir.setdefault(rel, []).append(os.path.join(self.root, f["path"]))
         head = self._head(self._load())
         deletes = head.get("active_deletes", []) if (kept and head) else []
+        has_pos = any(d.get("style") == "position" for d in deletes)
         if not by_dir:
             return self.spark.createDataFrame([], schema)
         dfs = []
@@ -3536,13 +3644,10 @@ class SnapshotTable:
                 .parquet(*paths)
             )
             # alias historical names to current; drops hidden-partition cols
-            df = df.select(*[F.col(hn).alias(f.name) for hn, f in hist])
-            if deletes:
-                df = df.withColumn("__sid", F.lit(_dir_sid(rel)).cast("long"))
-                if any(d.get("style") == "position" for d in deletes):
-                    df = df.withColumn("__rel", self._rel_path_expr()).withColumn(
-                        "__pos", F.col("_metadata.row_index")
-                    )
+            df = df.select(
+                *[F.col(hn).alias(f.name) for hn, f in hist],
+                *self._identity_cols(bool(deletes), has_pos),
+            )
             dfs.append(df)
         out = dfs[0]
         for d in dfs[1:]:
@@ -3582,8 +3687,12 @@ class SnapshotTable:
         # expire_age). They are metadata-only (no dirs), so retention
         # costs nothing — the moral equivalent of Iceberg's metadata.json
         # keeping every schema id forever, independent of snapshot expiry.
+        # evolve-partition commits likewise: `_spec_at` reads a mask
+        # file's columns from the spec they record.
         protected |= {
-            s["snapshot_id"] for s in snaps if s["operation"] == "evolve-schema"
+            s["snapshot_id"]
+            for s in snaps
+            if s["operation"] in ("evolve-schema", "evolve-partition")
         }
         tail = {s["snapshot_id"] for s in snaps[-keep_last:]}
         if older_than is not None:
