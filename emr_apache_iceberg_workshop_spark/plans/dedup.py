@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..catalog import load_table, fan_out
 from ..functions import dsum, osum, sdot, sdot_approx, odot
@@ -71,7 +71,7 @@ _CLUSTER_LOCAL_MAX = 100_000
 # Completeness-probe collect with the incremental-limit scale-up
 # disabled (canonical implementation + rationale in tables.py — the
 # same idiom guards the COW partition-scope probes there).
-from ..tables import _probe_collect  # noqa: E402
+from ..tables import _is_local, _probe_collect  # noqa: E402
 
 
 def _jaccard_scored_pairs(s: "DataFrame", materialized: bool = False) -> "DataFrame":
@@ -2082,6 +2082,21 @@ def _fresh_ids(df: DataFrame) -> DataFrame:
     return df.select(*[F.col(c).alias(c) for c in df.columns])
 
 
+def _in_ids(ids) -> Column:
+    """`doc_id IN (<ids>)` over an id set the driver already holds.
+
+    Store scans filter on the literal list instead of semi-joining a
+    labels_df frame of the ids: that join broadcasts the frame, one Spark
+    job per probe, for data that never left the driver. The list is
+    parsed from ONE SQL string because `Column.isin(list)` makes a py4j
+    call per literal (~0.2s per 400 ids); both build the same `In`
+    expression. The literals are bigint (`L`), the store key's type, so
+    the analyzer adds no cast per literal (100k ids: 1.3s, not 6.5s)."""
+    if not ids:
+        return F.lit(False)
+    return F.expr(f"doc_id IN ({', '.join(f'{int(i)}L' for i in sorted(ids))})")
+
+
 def build_label_store(spark, sig_store, root: str):
     """Day-1 cluster build: banded candidate edges from the persisted
     signature store (the d_minhash_lsh self-join, fingerprint-level), one
@@ -2182,8 +2197,9 @@ def fold_batch_clusters(
     # operator COLLECTS it anyway — so probe-collect the batch edges
     # (`limit(cap+1)`: ≤ cap rows back ⇒ the limit did not truncate and
     # we hold the FULL set in one job), collect the touched components'
-    # members in ONE more job (the touched-label set rides inline as a
-    # broadcast subplan, bounded by the endpoint count), and solve the
+    # members in ONE more job (the endpoint ids filter the label scan as
+    # literals; the touched-label set rides inline as a broadcast
+    # subplan, bounded by the endpoint count), and solve the
     # union-find locally. This replaces two eager localCheckpoint
     # materializations + the operator's own normalize/count/collect.
     # Over cap — a pathological mega-batch or a giant touched component —
@@ -2194,12 +2210,7 @@ def fold_batch_clusters(
     if len(edge_rows) <= cap:
         if edge_rows:
             ep_ids = {r["u"] for r in edge_rows} | {r["v"] for r in edge_rows}
-            eps = labels_df(spark, {i: i for i in ep_ids}).select("doc_id")
-            tlbl = (
-                labels.join(F.broadcast(eps), "doc_id", "left_semi")
-                .select("label")
-                .distinct()
-            )
+            tlbl = labels.filter(_in_ids(ep_ids)).select("label").distinct()
             members_rows = _probe_collect(
                 labels.join(F.broadcast(tlbl), "label", "left_semi"), cap
             )
@@ -2283,8 +2294,9 @@ def retract_batch_clusters(
     Steps, all bounded by the affected components' member count:
     1. affected labels = labels of the retracted ids (≤ |ids|, broadcast);
     2. survivors = affected components' members minus the retracted ids —
-       their signatures are pulled from `sig_store` by a semi-join
-       (column-pruned store stream, never a full materialization);
+       their signatures are pulled from `sig_store` by their ids (a
+       literal filter on the driver fast path, a semi-join on the
+       distributed one; never a full materialization);
     3. survivor edges = the banded self-join over THAT subset only
        (identical arithmetic to `build_label_store`, so recomputed labels
        match a from-scratch build on corpus-minus-retracted exactly);
@@ -2312,7 +2324,11 @@ def retract_batch_clusters(
         union_find_labels,
     )
 
-    ids = _fresh_ids(ids.select("doc_id").distinct().localCheckpoint(eager=True))
+    ids = ids.select("doc_id").distinct()
+    if not _is_local(ids):
+        # pin a lazy id source once (it is read by the probe, the deletes
+        # and the label MERGE); a driver-built one re-reads by value
+        ids = _fresh_ids(ids.localCheckpoint(eager=True))
     labels = label_store.scan()
 
     # Bounded driver fast path (r15, mirror of the fold's): collect the
@@ -2351,15 +2367,14 @@ def retract_batch_clusters(
         survivor_set = {
             r["doc_id"] for r in members_rows if r["doc_id"] not in id_set
         }
-        sdf = labels_df(spark, {i: i for i in survivor_set}).select("doc_id")
         if band_store is not None:
             # narrow index read (3 cols) instead of two stacked streams of
             # the 17-col signature store for the survivor self-join legs
-            sub_bands = band_store.scan().join(F.broadcast(sdf), "doc_id", "left_semi")
+            sub_bands = band_store.scan().filter(_in_ids(survivor_set))
             a = sub_bands.selectExpr("doc_id AS u", "band_idx", "band_key")
             b = sub_bands.selectExpr("doc_id AS v", "band_idx", "band_key")
         else:
-            sub_sigs = sig_store.scan().join(F.broadcast(sdf), "doc_id", "left_semi")
+            sub_sigs = sig_store.scan().filter(_in_ids(survivor_set))
             a = _bands_long(sub_sigs, "u")
             b = _bands_long(sub_sigs, "v")
         edge_rows = _probe_collect(
@@ -2435,26 +2450,70 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
     instead of the retract-then-fold pair of each (which solved two
     overlapping subgraphs and committed four snapshots per mixed batch).
 
-    Sequence (commit order preserves the retract-then-fold crash
-    contract — signature state is correct before any label commit):
-      1. equality-delete the D ∪ U keys' signatures (`retract_batch`);
-      2. append the I ∪ U rows' new signatures (keyed-idempotent);
-      3. solve ONE driver union-find over batch candidate edges +
-         re-derived survivor edges of the D ∪ U-affected components +
-         carried star edges of batch-touched unaffected components;
-      4. ONE op-column MOR MERGE: relabeled survivors and batch docs as
-         upserts, pure-delete keys as D rows (a key carrying both D and
-         U resolves upsert-wins, the documented same-batch semantics).
+    Steps of a mixed batch (commit order preserves the retract-then-fold
+    crash contract — signature state is correct before any label commit):
+      1. ONE probe collects the batch's (Op, doc_id) rows together with
+         the I ∪ U rows' minhash signatures; the signatures become an
+         Arrow local relation, so no later consumer re-derives or
+         checkpoints them;
+      2. one probe collects the members of the components the D ∪ U keys
+         belong to (the keys filter the label scan as literals);
+      3. ONE signature commit: an op-column merge deletes the D ∪ U keys'
+         old signatures and upserts the I ∪ U rows' new ones;
+      4. ONE fused edge probe: the batch's candidate edges and the
+         affected components' survivor edges, against the post-merge
+         store; then one probe for the star edges of the batch-touched
+         unaffected components (skipped when there are none);
+      5. ONE driver union-find over those edges and ONE op-column MOR
+         MERGE of the labels: relabeled survivors and batch docs as
+         upserts, pure-delete keys as D rows (a key carrying both D and U
+         resolves upsert-wins, the documented same-batch semantics).
+    Every id set the driver holds filters a store scan as a literal list
+    (`_in_ids`) and every merge source built on the driver is read by
+    value (`tables._is_local`), so no Spark job only moves driver data.
+    Job budget per mixed batch, micro-batch confs (AQE off), copy-on-
+    write signature store and MOR label store (lakebench `dedup_drain`,
+    tests/test_cluster_apply_jobs.py): 10 jobs on a fresh label store,
+    14 once it carries delete files —
+      step 1: 1 job; step 2: 2 jobs, 4 with delete files;
+      step 3: 1 job (the rewrite; an MOR signature store: 2);
+      step 4: 2 jobs for the edge probe, then 2, 4 with delete files;
+      step 5: 2 jobs (the MERGE's data write and delete-file write).
     Replay converges with no stamp for the same reasons the unfused
     sequence does: the delete is idempotent, the append anti-joins, and
     the merge re-asserts identical labels (pytest: full and mid-crash
-    replays). Falls back to the unfused retract+fold when the batch or
-    any probe overflows _CLUSTER_LOCAL_MAX."""
-    from ..operators.graph import labels_df, union_find_labels
+    replays). Pure-insert and pure-delete batches take
+    `fold_batch_clusters` / `retract_batch_clusters`; the unfused
+    retract+fold pair also runs when the batch or any probe overflows
+    _CLUSTER_LOCAL_MAX."""
+    from ..operators.graph import labels_df, local_frame, union_find_labels
 
     cap = _CLUSTER_LOCAL_MAX
-    op_rows = _probe_collect(bdf.select("Op", "doc_id"), cap)
-    if len(op_rows) > cap:
+    # one probe, two legs (the `retract_batch_clusters` fused-probe
+    # pattern): the op rows and the I ∪ U signatures, collected at 2×cap
+    # with a cap check per leg. A signature leg never has more rows than
+    # the op rows it groups, so an overflowing union implies an
+    # overflowing op leg — mega-batch routing depends on the op-row
+    # count alone.
+    sig = minhash_signature_df(
+        bdf.filter(F.col("Op").isin("I", "U")).select("doc_id", "text")
+    )
+    pad = [
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in sig.schema.fields
+        if f.name != "doc_id"
+    ]
+    rows = _probe_collect(
+        bdf.select("Op", "doc_id", *pad, F.lit(False).alias("__sig")).unionByName(
+            sig.select(
+                F.lit(None).cast("string").alias("Op"), "*", F.lit(True).alias("__sig")
+            )
+        ),
+        2 * cap,
+    )
+    op_rows = [r for r in rows if not r["__sig"]]
+    sig_rows = [r for r in rows if r["__sig"]]
+    if len(rows) > 2 * cap or len(op_rows) > cap or len(sig_rows) > cap:
         # mega-batch: the truncated sample must not gate ANYTHING (a D
         # row beyond the first cap+1 collected rows would be silently
         # dropped — review r15); compute the side counts exactly with one
@@ -2476,43 +2535,47 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
         return
     ups_ids = {r["doc_id"] for r in op_rows if r["Op"] in ("I", "U")}
     del_ids = {r["doc_id"] for r in op_rows if r["Op"] in ("D", "U")}
-    if not del_ids and not ups_ids:
-        return
-    if not del_ids or not ups_ids:
-        # pure-insert / pure-delete batches take the single-sided ops
-        # (each already runs its own bounded fast path)
+    # pure-delete / pure-insert batches take the single-sided ops (each
+    # runs its own bounded fast path)
+    if not ups_ids:
         if del_ids:
             retract_batch_clusters(
                 spark, labels_df(spark, {i: i for i in del_ids}).select("doc_id"),
                 sig_store, label_store, band_store=band_store,
             )
-        else:
-            fold_batch_clusters(
-                spark, bdf.filter(F.col("Op").isin("I", "U")).select("doc_id", "text"),
-                sig_store, label_store, append=True, band_store=band_store,
-            )
+        return
+    batch_sig = local_frame(
+        spark, {c: [r[c] for r in sig_rows] for c in sig.columns}, sig.schema
+    )
+    if not del_ids:
+        fold_batch_clusters(
+            spark, None, sig_store, label_store, append=True,
+            batch_sig=batch_sig, band_store=band_store,
+        )
         return
 
-    labels = label_store.scan()  # pins the PRE-batch label snapshot
-    dids = labels_df(spark, {i: i for i in del_ids}).select("doc_id")
-    # affected components' members (one probe; `alb` ≤ one label per key)
-    alb = labels.join(F.broadcast(dids), "doc_id", "left_semi").select(
-        "label"
-    ).distinct()
-    aff_members = _probe_collect(
-        labels.join(F.broadcast(alb), "label", "left_semi"), cap
-    )
-    batch_sig = minhash_signature_df(
-        bdf.filter(F.col("Op").isin("I", "U")).select("doc_id", "text")
-    ).localCheckpoint(eager=True)
-    if len(aff_members) > cap:
+    def unfused() -> None:
+        # retract-then-fold over the same batch; every step is idempotent,
+        # so after the signature commit below this is exactly the
+        # mid-crash replay path the pytests cover — retract re-labels the
+        # affected components, fold re-contracts the batch-touched ones
         retract_batch_clusters(
-            spark, dids, sig_store, label_store, band_store=band_store
+            spark, labels_df(spark, {i: i for i in del_ids}).select("doc_id"),
+            sig_store, label_store, band_store=band_store,
         )
         fold_batch_clusters(
             spark, None, sig_store, label_store, append=True,
             batch_sig=batch_sig, band_store=band_store,
         )
+
+    labels = label_store.scan()  # pins the PRE-batch label snapshot
+    # affected components' members (one probe; `alb` ≤ one label per key)
+    alb = labels.filter(_in_ids(del_ids)).select("label").distinct()
+    aff_members = _probe_collect(
+        labels.join(F.broadcast(alb), "label", "left_semi"), cap
+    )
+    if len(aff_members) > cap:
+        unfused()
         return
     affected_labels = {r["label"] for r in aff_members}
     survivor_set = {r["doc_id"] for r in aff_members} - del_ids
@@ -2575,9 +2638,7 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
     # in `fold_batch_clusters`/`retract_batch_clusters` (equivalence
     # pytest: fused-vs-unfused stores byte-equal over an I/U/D
     # lifecycle).
-    probe_ids = labels_df(
-        spark, {i: i for i in (ups_ids | survivor_set)}
-    ).select("doc_id")
+    probe_ids = _in_ids(ups_ids | survivor_set)
     if band_store is not None:
         # index form (r16): the probe side reads the 3-column band index
         # instead of stacking the 17-column store, and the store side is
@@ -2585,7 +2646,7 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
         # replacement for the full store-band stream (one O(corpus) read
         # becomes O(probe-bands / buckets); falls back to the full index
         # scan if the key collect overflows the cap)
-        l_src = band_store.scan().join(F.broadcast(probe_ids), "doc_id", "left_semi")
+        l_src = band_store.scan().filter(probe_ids)
         key_rows = _probe_collect(l_src.select("band_key").distinct(), cap)
         r_src = (
             band_store.scan_pruned_in(
@@ -2597,7 +2658,7 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
         l = l_src.selectExpr("doc_id AS u", "band_idx", "band_key")
         r = r_src.selectExpr("doc_id AS v", "band_idx", "band_key")
     else:
-        sub_sigs = sig_store.scan().join(F.broadcast(probe_ids), "doc_id", "left_semi")
+        sub_sigs = sig_store.scan().filter(probe_ids)
         l = _bands_long(sub_sigs, "u")
         r = _bands_long(sig_store.scan(), "v")
     # probe at 2×cap: this is the UNION of the two edge sets the unfused
@@ -2612,19 +2673,10 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
         2 * cap,
     )
     if len(fused_rows) > 2 * cap:
-        # Overflow after the signature commits: finish with the unfused
-        # label-side sequence. The re-delete inside retract is a no-op
-        # (idempotent equality delete) and the re-append anti-joins, so
-        # this is exactly the mid-crash replay path the pytests cover —
-        # retract re-labels the affected components distributed, fold
-        # re-contracts the batch-touched ones.
-        retract_batch_clusters(
-            spark, dids, sig_store, label_store, band_store=band_store
-        )
-        fold_batch_clusters(
-            spark, None, sig_store, label_store, append=True,
-            batch_sig=batch_sig, band_store=band_store,
-        )
+        # overflow after the signature commit: finish with the unfused
+        # label-side sequence (the re-delete inside retract is a no-op
+        # and the re-append anti-joins)
+        unfused()
         return
     # ≤ cap ⇒ the fused set is COMPLETE; only now derive the two lists
     # (deriving from a truncated sample would drop edges — r15 review)
@@ -2643,10 +2695,7 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
         {r["u"] for r in batch_edges} | {r["v"] for r in batch_edges}
     ) - ups_ids - survivor_set - del_ids
     if ep_ids:
-        eps = labels_df(spark, {i: i for i in ep_ids}).select("doc_id")
-        tlbl = labels.join(F.broadcast(eps), "doc_id", "left_semi").select(
-            "label"
-        ).distinct()
+        tlbl = labels.filter(_in_ids(ep_ids)).select("label").distinct()
         touched_rows = _probe_collect(
             labels.join(F.broadcast(tlbl), "label", "left_semi"), cap
         )
@@ -2654,13 +2703,7 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
         touched_rows = []
     if len(touched_rows) > cap:
         # same post-signature-commit repair as the edge-probe overflow
-        retract_batch_clusters(
-            spark, dids, sig_store, label_store, band_store=band_store
-        )
-        fold_batch_clusters(
-            spark, None, sig_store, label_store, append=True,
-            batch_sig=batch_sig, band_store=band_store,
-        )
+        unfused()
         return
     star = [
         (r["doc_id"], r["label"])

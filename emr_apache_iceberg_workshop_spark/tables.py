@@ -143,6 +143,26 @@ def _probe_collect(df, cap: int) -> list:
             spark.conf.set(key, prev)
 
 
+def _is_local(df: DataFrame) -> bool:
+    """True when `df` is data the driver already holds: a deterministic
+    plan whose optimized leaves are all `LocalRelation` — the
+    `operators.graph.labels_df` Arrow frames and any select, filter,
+    distinct or union over them. Re-evaluating such a plan yields the
+    same rows by value, so an eager localCheckpoint taken to pin it is a
+    pure extra Spark job. Determinism is read off the ANALYZED plan: the
+    optimizer folds a `rand()` projection over a LocalRelation into fresh
+    literal rows, so the optimized plan looks deterministic while every
+    re-optimization draws new values."""
+    qe = df._jdf.queryExecution()
+    if not qe.analyzed().deterministic():
+        return False
+    leaves = qe.optimizedPlan().collectLeaves()
+    return all(
+        leaves.apply(i).getClass().getSimpleName() == "LocalRelation"
+        for i in range(leaves.size())
+    )
+
+
 def _entry_rel(e) -> str:
     """active_dirs entry → data dir rel path (entries are either a plain
     rel string or {"dir": rel, "exclude": [partition tuples],
@@ -2712,12 +2732,12 @@ class SnapshotTable:
                 summary_extra=summary_extra,
             )
         merged = merge_upsert(target, src, keys, op_col=op_col, delete_value=delete_value)
-        merged = merged.select(*target.columns)
-        # materialize: the merged plan reads the current snapshot dirs and
-        # must not be re-evaluated lazily after the metadata swap
-        merged_local = merged.localCheckpoint(eager=True)
+        # no checkpoint: write() evaluates the plan exactly once, into a
+        # staged dir, before the metadata swap — the snapshot dirs it reads
+        # are immutable, and an overwrite refuses a stale base with
+        # CommitConflict, so nothing re-evaluates it after the swap
         return self.write(
-            merged_local, mode="overwrite", operation="merge",
+            merged.select(*target.columns), mode="overwrite", operation="merge",
             summary_extra=summary_extra,
         )
 
@@ -2745,17 +2765,12 @@ class SnapshotTable:
         # batch's whole minhash text pass — r15 left the op-column key write
         # re-deriving it from the unmaterialized source, one redundant
         # source evaluation per merge commit, r15 verdict task 7).
-        # Exception (r15 job diet): a source Catalyst folds to a single
-        # LocalRelation (the driver-built label/CDC frames from
-        # operators.graph.labels_df) is already materialized BY VALUE —
+        # Exception: a source built on the driver (`_is_local`: a
+        # deterministic plan whose leaves are all LocalRelations — the
+        # labels_df label/CDC frames, the cluster tier's Arrow signature
+        # batch, and unions of them) is already materialized BY VALUE;
         # re-evaluation cannot differ and the eager checkpoint would be a
         # pure extra Spark job per merge commit.
-        def _is_local(df: DataFrame) -> bool:
-            return (
-                df._jdf.queryExecution().optimizedPlan().getClass().getSimpleName()
-                == "LocalRelation"
-            )
-
         if op_col is not None:
             src_local = src if _is_local(src) else src.localCheckpoint(eager=True)
             upserts_local = src_local.filter(

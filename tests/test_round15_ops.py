@@ -422,6 +422,46 @@ def test_fused_cdc_apply_fallback_matches_fast(spark, tmp_path, monkeypatch):
     exp = _drain(spark, _cdc_batches(spark), s2, l2, fused=True)
     assert got == exp and got
 
+    # Only ONE leg of the fused ops/signature probe overflows: 12 I + 4 U
+    # + 8 D rows are 24 op rows but 16 signature rows, so at cap 20 the
+    # union (40 rows) fits the probe's 2×cap while the op leg does not.
+    # The batch must still take the mega-batch route (its fold gets the
+    # batch's text, every other fold gets the collected signatures).
+    seed = _cdc_batches(spark)[0]
+    base = "the quick brown fox jumps over the lazy dog and then runs far away"
+    mixed = spark.createDataFrame(
+        [("I", i, f"{base} new{i % 3}") for i in range(40, 52)]
+        + [("U", i, f"{base} moved{i}") for i in (0, 4, 8, 12)]
+        + [("D", i, None) for i in (1, 2, 3, 5, 6, 7, 9, 10)],
+        "Op string, doc_id bigint, text string",
+    )
+    folds = []
+    fold = D.fold_batch_clusters
+
+    def spy(spark_, batch_docs, *args, **kwargs):
+        folds.append(batch_docs is not None)
+        return fold(spark_, batch_docs, *args, **kwargs)
+
+    states = []
+    for tag, cap in (("leg_fast", 100_000), ("leg_gated", 20)):
+        monkeypatch.setattr(D, "_CLUSTER_LOCAL_MAX", 100_000)
+        sig, lab = _mk_stores(spark, tmp_path, tag)
+        D.apply_cdc_batch_clusters(spark, seed, sig, lab)
+        monkeypatch.setattr(D, "_CLUSTER_LOCAL_MAX", cap)
+        monkeypatch.setattr(D, "fold_batch_clusters", spy)
+        folds.clear()
+        D.apply_cdc_batch_clusters(spark, mixed, sig, lab)
+        monkeypatch.setattr(D, "fold_batch_clusters", fold)
+        states.append((
+            folds[:],
+            {tuple(r) for r in lab.scan().select("doc_id", "label").collect()},
+            {tuple(r) for r in sig.scan().collect()},
+        ))
+    (fast_folds, fast_labels, fast_sigs), (gated_folds, gated_labels, gated_sigs) = states
+    assert fast_folds == [] and gated_folds == [True]
+    assert gated_labels == fast_labels and len(fast_labels) == 44
+    assert gated_sigs == fast_sigs
+
 
 def test_fold_fast_path_matches_fallback(spark, tmp_path, monkeypatch):
     """fold_batch_clusters: the bounded driver path and the distributed
