@@ -59,12 +59,12 @@ N_BANDS = 4  # 3 rows per band
 # (such docs are boilerplate dups caught by d_exact_dup / d_minhash_lsh).
 MAX_SHINGLE_DF = 1000
 
-# Edge/member cap for the cluster folds' bounded driver fast path — the
-# same class as connected_components_adaptive's local_max: 100k rows ≈ a
-# few MB of driver state. At or under the cap a fold's touched subgraph
-# is probe-collected (limit(cap+1) — a short result proves completeness)
-# and solved with the shared driver union-find; above it the distributed
-# star-contraction path runs unchanged.
+# Edge/member cap for the cluster CDC kernel's bounded driver fast path
+# — the same class as connected_components_adaptive's local_max: 100k
+# rows ≈ a few MB of driver state. At or under the cap a batch's touched
+# subgraph is probe-collected (limit(cap+1) — a short result proves
+# completeness) and solved with the shared driver union-find; above it
+# `_cluster_cdc_distributed` runs.
 _CLUSTER_LOCAL_MAX = 100_000
 
 
@@ -1288,72 +1288,6 @@ def _bands_long(df: DataFrame, id_alias: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Band index (r16, VERDICT r15 task 4): a long-form (doc_id, band_idx,
-# band_key) SnapshotTable partitioned by `bucket(B, band_key)` (Iceberg-
-# parity murmur bucketing), maintained in lockstep with a cluster-tier
-# signature store. Every per-batch band probe against a flat signature
-# store must stream ALL the store's bands — the only O(corpus) term per
-# micro-batch. With the index, the probe plans `band_key IN (batch keys)`
-# at the MANIFEST level (`scan_pruned_in`) and reads only the matching
-# buckets' files: O(batch-bands / B) of the index instead of O(corpus).
-#
-# Scale posture (measured, OPTIMIZATION_r16.md): on these fixtures each
-# micro-batch is a PROPORTIONAL slice of the corpus (~1/15th), so its
-# band keys cover every bucket and pruning cannot engage at ANY fixture
-# scale — the graded drains therefore keep the flat-store probe (passing
-# band_store=None costs nothing). The index pays exactly in the 100 TB
-# regime the drains model: a bounded trigger batch (10^3-10^5 docs)
-# against an unbounded corpus, where batch-bands/B → 0. The focused tests
-# pin (a) with-index == without-index store states over a full I/U/D
-# lifecycle and (b) that a small batch's probe keeps a strict subset of
-# the index files.
-#
-# Sync contract: the index is derived state, owned by whoever mutates the
-# signature store — fold appends ride the same keyed-idempotent anti-join,
-# retractions equality-delete the index FIRST (a crash between the two
-# deletes leaves missing index rows for not-yet-retracted docs; the
-# documented repair — re-run the retraction — restores sync, and the
-# sig-store delete still commits before any label merge).
-
-_BANDIDX_DDL = "doc_id bigint, band_idx int, band_key string"
-
-# local default: 16 buckets (pruning is demonstrative at fixture scale).
-# Production: size so that expected batch-bands per trigger ≪ buckets —
-# e.g. 65536 for 10^10-doc corpora with 10^4-doc triggers (each bucket
-# then holds ~600k band rows ≈ 30 MB, and a trigger touches ≤ 4×10^4
-# buckets = 60% ... size UP from there; the knob is per-store, set at
-# index creation).
-BAND_INDEX_BUCKETS = int(os.environ.get("EIWS_BAND_INDEX_BUCKETS", "16"))
-
-
-def build_band_index(spark, sig_store, root: str, buckets: int | None = None):
-    """Create the band index for `sig_store` at `root` and seed it with
-    the store's current bands — the day-1 twin of `build_signature_store`."""
-    from ..tables import SnapshotTable
-
-    t = SnapshotTable.create(
-        spark, root, _BANDIDX_DDL,
-        partition_by=[f"bucket({buckets or BAND_INDEX_BUCKETS}, band_key)"],
-        properties={"write.merge.mode": "merge-on-read"},
-    )
-    t.write(_bands_long(sig_store.scan(), "doc_id"))
-    return t
-
-
-def _pruned_store_bands(band_store, batch_sig: DataFrame, cap: int):
-    """Store-side band rows manifest-pruned to the batch's band keys
-    (`scan_pruned_in` keeps only files whose bucket partition can hold
-    one of the keys), or None when the batch's key set overflows `cap`
-    (mega-batch — the caller falls back to the full store stream)."""
-    key_rows = _probe_collect(
-        _bands_long(batch_sig, "b_id").select("band_key").distinct(), cap
-    )
-    if len(key_rows) > cap:
-        return None
-    return band_store.scan_pruned_in("band_key", [r["band_key"] for r in key_rows])
-
-
 def _bands_long_mh(df: DataFrame, id_alias: str, mh_alias: str) -> DataFrame:
     """`_bands_long` carrying the minhash signature as an array column, so
     a band join can compute signature-agreement similarity on the
@@ -1385,8 +1319,11 @@ def _append_new_ids(
     rows enter — the same anti-join `decontaminate_batch` applies to its
     gram appends. Cost: one column-pruned store-id stream against the
     (small, AQE-broadcast) batch id set per append. Text updates to an
-    EXISTING id are not an append — route them through apply_cdc_batch
-    (retract-then-upsert); `warn_on_drop=True` (debug/audit paths) makes
+    EXISTING id are not an append — the signature tiers route them
+    through apply_cdc_batch (retract-then-upsert), and the cluster tier's
+    kernel (`_cluster_cdc`) calls this only for a batch that replaces no
+    stored key, upserting any other through its op-column MERGE;
+    `warn_on_drop=True` (debug/audit paths) makes
     that misuse visible: colliding ids are counted (one extra semi-join
     job, off the default hot path) and reported with a warning instead
     of being silently ignored (ADVICE r12)."""
@@ -1406,26 +1343,13 @@ def _append_new_ids(
     store.write(frame.join(existing, key, "left_anti"), **write_kw)
 
 
-def _batch_band_candidates(
-    batch_sig: DataFrame, others: DataFrame, store_bands: DataFrame | None = None
-) -> DataFrame:
+def _batch_band_candidates(batch_sig: DataFrame, others: DataFrame) -> DataFrame:
     """Banded candidate pairs for a batch: batch-vs-store band collisions
-    plus batch-internal ones — (doc_a < doc_b), distinct. Shared by
-    `dedup_batch_incremental` (which adds the signature-agreement
-    `est_sim` join on top) and the cluster folds (whose edge definition
-    IS the band collision — `build_label_store` uses the identical
-    arithmetic — so they skip the two signature-lookup joins entirely,
-    r15 fold diet). `store_bands` (r16) substitutes an already-long
-    (doc_id, band_idx, band_key) relation — e.g. a bucket-pruned band
-    index scan — for the flat store's stacked bands; any store band row
-    whose key the batch lacks can never join, so pruning the store side
-    to the batch's keys preserves the candidate set exactly."""
+    plus batch-internal ones — (doc_a < doc_b), distinct. The pair set
+    `dedup_batch_incremental` computes on the band join before it adds
+    `est_sim` (its pytest reference)."""
     bl = _bands_long(batch_sig, "b_id")
-    sl = (
-        store_bands.selectExpr("doc_id AS s_id", "band_idx", "band_key")
-        if store_bands is not None
-        else _bands_long(others, "s_id")
-    )
+    sl = _bands_long(others, "s_id")
     vs_store = bl.join(sl, ["band_idx", "band_key"]).selectExpr(
         "least(b_id, s_id) AS doc_a", "greatest(b_id, s_id) AS doc_b"
     )
@@ -1914,8 +1838,9 @@ def d_incremental_exact(spark, sf_dir) -> DataFrame:
 # doc REMOVED from the corpus (takedown, license filter — the reference's
 # own CDC stream carries Op='D', datagen/raw-datagen.py:16) must stop
 # producing dup verdicts. The stores are SnapshotTables with sequence-
-# aware equality deletes, so retraction is one O(|ids|) delete commit —
-# no store rewrite, no corpus rescan.
+# aware equality deletes, so `retract_batch` is one O(|ids|) delete
+# commit — no store rewrite, no corpus rescan. The cluster tier commits
+# a D-only batch's signature deletes the same way (`_cluster_cdc`).
 
 
 def retract_batch(
@@ -2049,20 +1974,19 @@ def d_incremental_retract(spark, sf_dir) -> DataFrame:
 # Incremental dup-CLUSTER maintenance — the last day-2 tier (VERDICT r12
 # task 5): `d_simhash_clusters`/`c_dup_groups` recompute connected
 # components from scratch each run; the production shape folds a batch's
-# NEW edges into PERSISTED component labels. State = a (doc_id, label)
+# changes into PERSISTED component labels. State = a (doc_id, label)
 # SnapshotTable over the corpus (label = the component's min doc_id; an
-# isolated doc labels itself). Per batch: only the components an edge
-# TOUCHES are re-contracted — batch edges plus the touched components'
-# member→label star edges (stars are connectivity-equivalent to the
-# original component edges, which is all components need) — and untouched
-# labels are carried verbatim. Equivalence to the full recompute is exact:
-# a component no new edge touches is final, and the star edges put every
-# old member (including the old min) into the re-contraction, so merged
-# components land on the true global min. Retraction (a doc REMOVED from
-# the corpus) can SPLIT a component — star edges cannot witness a split,
-# so `retract_batch_clusters` re-derives the affected components' true
-# edges from the SIGNATURE store (survivor-restricted banded self-join)
-# and re-labels only those components, O(affected members).
+# isolated doc labels itself) next to the minhash signature store, the
+# edge source of record (an edge IS a band collision, the arithmetic of
+# `build_label_store`). Every change is one CDC batch of (Op, doc_id,
+# text) rows through one kernel, `_cluster_cdc`: a fold is an I-only
+# batch, a retraction a D-only batch. Only the components the batch
+# touches are re-labeled: the components of its stored keys are
+# re-derived from their surviving members' signature edges (a removed doc
+# can SPLIT its component, which carried labels cannot witness), and the
+# components its new edges reach contribute member→label star edges
+# (connectivity-equivalent to their original edges). Untouched labels are
+# carried verbatim, so the result equals the full recompute exactly.
 
 _LABELS_DDL = "doc_id bigint, label bigint"
 
@@ -2107,15 +2031,7 @@ def build_label_store(spark, sig_store, root: str):
     from ..tables import SnapshotTable
 
     sigs = sig_store.scan()
-    a = _bands_long(sigs, "u")
-    b = _bands_long(sigs, "v")
-    edges = (
-        a.join(b, ["band_idx", "band_key"])
-        .filter(F.col("u") < F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
-    labels, _rounds = connected_components(edges)
+    labels, _rounds = connected_components(_band_edges(sigs, sigs))
     full = sigs.select("doc_id").join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("label", F.col("doc_id")).alias("label")
     )
@@ -2133,378 +2049,121 @@ def fold_batch_clusters(
     sig_store,
     label_store,
     append: bool = False,
-    batch_sig: DataFrame | None = None,
-    band_store=None,
 ) -> DataFrame:
-    """Fold one batch into the persisted component labels and return the
-    FULL post-fold label table (doc_id, label) — equal, by construction,
-    to a from-scratch recompute over corpus ∪ batch (oracle-checked by
-    `d_incremental_clusters`; two sequential folds compose, pytest).
+    """Fold one batch of (doc_id, text) docs into the persisted component
+    labels — an I-only batch through `_cluster_cdc` — and return the FULL
+    post-fold label table (doc_id, label), equal by construction to a
+    from-scratch recompute over the stored signatures (oracle-checked by
+    `d_incremental_clusters`; sequential folds compose, pytest). `append`
+    commits the signatures and the changed labels; `append=False` commits
+    nothing. A doc_id the store already holds takes its new text, as an
+    upsert (the MERGE INTO semantics of an I row)."""
+    bdf = batch_docs.select(F.lit("I").alias("Op"), "doc_id", "text")
+    return _cluster_cdc(spark, bdf, sig_store, label_store, append)[1]
 
-    Work per batch: the batch's candidate edges come from
-    `dedup_batch_incremental` (O(batch + matches) text work, store pruned
-    map-side); `touched` — the labels those edges' endpoints carry — is
-    bounded by the edge-endpoint count (≤ 2 × the batch's candidate
-    pairs, itself O(|batch|) by the banding analysis), so it broadcasts;
-    the re-contraction runs over batch edges + touched members only —
-    via the ADAPTIVE components operator: the touched subgraph is
-    O(batch) by construction, so at steady state it is solved in one
-    bounded driver union-find (zero contraction shuffle rounds); a
-    pathological mega-batch falls back to the distributed
-    star-contraction (operators/graph.py:connected_components_adaptive).
-    When `append`, the commit is ONE merge-on-read MERGE of the changed
-    labels (O(batch + touched members), never a label-table rewrite) plus
-    the signature append `dedup_batch_incremental` already stamps —
-    replay-safe end to end (keyed-idempotent signature appends; the label
-    MERGE re-asserts identical labels). The O(corpus) carried stream
-    below exists only because the graded artifact is the full state; the
-    production commit path is the merge."""
-    from ..operators.graph import (
-        connected_components_adaptive,
-        labels_df,
-        union_find_labels,
+
+def retract_batch_clusters(spark, ids: DataFrame, sig_store, label_store) -> int:
+    """Remove the docs in `ids` (a doc_id column) from the cluster tier — a
+    D-only batch through `_cluster_cdc`: the signatures are deleted and
+    the components they belonged to are re-labeled from their survivors'
+    signature edges, splits included. Replay is idempotent, including
+    from the state a crash between the signature and the label commit
+    leaves (pytest). Returns the label-store MERGE snapshot id, the commit
+    that completes the retraction (None for an empty `ids`)."""
+    bdf = ids.selectExpr("'D' AS Op", "doc_id", "CAST(NULL AS STRING) AS text")
+    return _cluster_cdc(spark, bdf, sig_store, label_store)[0]
+
+
+def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store) -> None:
+    """Apply one micro-batch of (Op, doc_id, text) rows, Op ∈ I/U/D, to a
+    signature + label store pair (`_cluster_cdc`): the drains'
+    foreachBatch body and `CALL system.apply_cdc_clusters`."""
+    _cluster_cdc(spark, bdf.select("Op", "doc_id", "text"), sig_store, label_store)
+
+
+def _band_edges(left: DataFrame, right: DataFrame) -> DataFrame:
+    """Distinct (u < v) band collisions between two signature frames."""
+    return (
+        _bands_long(left, "u")
+        .join(_bands_long(right, "v"), ["band_idx", "band_key"])
+        .filter(F.col("u") != F.col("v"))
+        .selectExpr("least(u, v) AS u", "greatest(u, v) AS v")
+        .distinct()
     )
 
-    if batch_sig is None:
-        batch_sig = minhash_signature_df(batch_docs).localCheckpoint(eager=True)
-    labels = label_store.scan()  # plan pins the PRE-fold snapshot's files
-    if append:
-        _append_new_ids(sig_store, batch_sig)
-        if band_store is not None:
-            # keep the band index in lockstep (same keyed-idempotent
-            # anti-join; the index is derived state of the sig store)
-            _append_new_ids(band_store, _bands_long(batch_sig, "doc_id"))
-    # cluster edges ARE the band collisions (build_label_store uses the
-    # identical arithmetic) — no est_sim threshold, so the two
-    # signature-lookup joins dedup_batch_incremental adds are skipped
-    others = sig_store.scan().join(batch_sig.select("doc_id"), "doc_id", "left_anti")
-    store_bands = None
-    if band_store is not None:
-        pruned = _pruned_store_bands(band_store, batch_sig, _CLUSTER_LOCAL_MAX)
-        if pruned is not None:
-            # bucket-pruned index read instead of the full store-band
-            # stream; the batch's own (just-appended) index rows are
-            # anti-joined out exactly like `others` above
-            store_bands = pruned.join(
-                batch_sig.select("doc_id"), "doc_id", "left_anti"
-            )
-    edges_plan = _batch_band_candidates(
-        batch_sig, others, store_bands=store_bands
-    ).selectExpr("doc_a AS u", "doc_b AS v")
 
-    # Bounded driver fast path (r15 fold diet): the steady-state touched
-    # subgraph is O(batch) by construction, and the adaptive components
-    # operator COLLECTS it anyway — so probe-collect the batch edges
-    # (`limit(cap+1)`: ≤ cap rows back ⇒ the limit did not truncate and
-    # we hold the FULL set in one job), collect the touched components'
-    # members in ONE more job (the endpoint ids filter the label scan as
-    # literals; the touched-label set rides inline as a broadcast
-    # subplan, bounded by the endpoint count), and solve the
-    # union-find locally. This replaces two eager localCheckpoint
-    # materializations + the operator's own normalize/count/collect.
-    # Over cap — a pathological mega-batch or a giant touched component —
-    # falls back to the distributed path below, identical to r14's code.
-    cap = _CLUSTER_LOCAL_MAX
-    edge_rows = _probe_collect(edges_plan, cap)
-    members_rows = None
-    if len(edge_rows) <= cap:
-        if edge_rows:
-            ep_ids = {r["u"] for r in edge_rows} | {r["v"] for r in edge_rows}
-            tlbl = labels.filter(_in_ids(ep_ids)).select("label").distinct()
-            members_rows = _probe_collect(
-                labels.join(F.broadcast(tlbl), "label", "left_semi"), cap
-            )
-        else:
-            members_rows = []
-    fast = members_rows is not None and len(members_rows) <= cap
-    if fast:
-        # driver union-find over batch edges + the touched components'
-        # prior star edges (member -> label) — same arithmetic as the
-        # distributed path, zero extra materialization jobs
-        local = union_find_labels(
-            [(r["u"], r["v"]) for r in edge_rows]
-            + [(r["doc_id"], r["label"]) for r in members_rows]
-        )
-        sub_labels = labels_df(spark, local)
-        touched = labels_df(
-            spark, {r["label"]: r["label"] for r in members_rows}
-        ).selectExpr("doc_id AS label")
-    else:
-        edges = _fresh_ids(edges_plan.localCheckpoint(eager=True))
-        endpoint_ids = (
-            edges.selectExpr("u AS doc_id")
-            .union(edges.selectExpr("v AS doc_id"))
-            .distinct()
-        )
-        # `touched` stays LAZY: it fuses into the components operator's
-        # normalize-checkpoint job (one labels scan + self-semi-join
-        # instead of a separate checkpoint job per fold). Plain parquet
-        # self-join — the analyzer's standard dedup handles it under any
-        # AQE setting (the r13 conflicting-references defect was specific
-        # to checkpointed LogicalRDD derivatives, AQE-off pytest).
-        touched = (
-            labels.join(endpoint_ids, "doc_id", "left_semi")
-            .select("label")
-            .distinct()
-        )
-        members = labels.join(F.broadcast(touched), "label", "left_semi")
-        prior_star = members.selectExpr("doc_id AS u", "label AS v")
-        sub_labels, _rounds = connected_components_adaptive(
-            edges.unionByName(prior_star)
-        )
-    # singles: batch docs with NO candidate pair today label themselves.
-    # No label-store anti-join is needed — signatures are immutable and a
-    # retracted partner already relabeled its survivors
-    # (retract_batch_clusters), so a pairless doc's true component label
-    # IS its own id whether the doc is new, a replay, or a mid-crash
-    # replay (sig appended, label merge lost): the merge re-asserts
-    # doc_id, which equals the stored label in every already-labeled
-    # pairless case.
-    singles = (
-        batch_sig.select("doc_id")
-        .join(sub_labels.select("doc_id"), "doc_id", "left_anti")
-        .selectExpr("doc_id", "doc_id AS label")
-    )
-    if fast:
-        # sub_labels is a local Arrow relation and the merge materializes
-        # its input itself — an extra eager checkpoint here would be a
-        # second materialization job for an already-cheap plan
-        changed = sub_labels.unionByName(singles)
-    else:
-        changed = _fresh_ids(
-            sub_labels.unionByName(singles).localCheckpoint(eager=True)
-        )
-    if append:
-        label_store.merge(changed, keys=["doc_id"])
-    carried = labels.join(F.broadcast(touched), "label", "left_anti").join(
-        changed.select("doc_id"), "doc_id", "left_anti"
-    )
-    return carried.unionByName(changed)
+def _null_cols(df: DataFrame) -> list:
+    """A typed null for every column of `df` but doc_id."""
+    return [
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in df.schema.fields
+        if f.name != "doc_id"
+    ]
 
 
-def retract_batch_clusters(
-    spark, ids: DataFrame, sig_store, label_store, band_store=None
-) -> int:
-    """Retraction for the cluster tier — closes the append-only caveat: a
-    doc REMOVED from the corpus can SPLIT its component, which carried
-    star edges cannot witness, so the affected components' true edges are
-    RE-DERIVED from the signature store (the signatures are the edge
-    source of record) and only those components are re-labeled.
-
-    Steps, all bounded by the affected components' member count:
-    1. affected labels = labels of the retracted ids (≤ |ids|, broadcast);
-    2. survivors = affected components' members minus the retracted ids —
-       their signatures are pulled from `sig_store` by their ids (a
-       literal filter on the driver fast path, a semi-join on the
-       distributed one; never a full materialization);
-    3. survivor edges = the banded self-join over THAT subset only
-       (identical arithmetic to `build_label_store`, so recomputed labels
-       match a from-scratch build on corpus-minus-retracted exactly);
-    4. the ids are equality-deleted from the SIGNATURE store first
-       (`retract_batch` — survivor signatures are untouched, so the
-       edge re-derivation above, which is still lazy at this point,
-       semi-joins survivors only and is unaffected), THEN one atomic
-       MOR MERGE commits the rebuilt labels (op-column form: retracted
-       ids ride as D rows, survivor labels as upserts). The relabeling
-       uses the adaptive components operator — bounded driver
-       union-find at steady state, distributed fallback above the cap.
-
-    Crash ordering (r13 review): the signature delete commits FIRST so a
-    crash between the two commits can never leave a ghost signature for
-    a later `fold_batch_clusters` to resurrect into the label store —
-    the worst post-crash state is a stale (unsplit) label entry, which
-    re-running this retraction repairs: the re-run re-derives survivor
-    edges from the already-retracted signature store and re-commits the
-    same labels. Replay is idempotent end to end (pytest, including from
-    the mid-crash state). Components not containing a retracted id are
-    never touched."""
-    from ..operators.graph import (
-        connected_components_adaptive,
-        labels_df,
-        union_find_labels,
+def _with_deletes(upserts: DataFrame, d_only: DataFrame) -> DataFrame:
+    """An op-column MERGE source: `upserts` as U rows, the `d_only`
+    doc_ids as D rows."""
+    return upserts.withColumn("Op", F.lit("U")).unionByName(
+        d_only.select("doc_id", *_null_cols(upserts), F.lit("D").alias("Op"))
     )
 
-    ids = ids.select("doc_id").distinct()
-    if not _is_local(ids):
-        # pin a lazy id source once (it is read by the probe, the deletes
-        # and the label MERGE); a driver-built one re-reads by value
-        ids = _fresh_ids(ids.localCheckpoint(eager=True))
-    labels = label_store.scan()
 
-    # Bounded driver fast path (r15, mirror of the fold's): collect the
-    # affected components' (member, label) rows AND the retraction ids in
-    # ONE fused probe-collect (r16, verdict task 5 — the two independent
-    # probes union-tag into a single job; the affected-label set rides
-    # inline as a bounded broadcast subplan), then the survivor-edge set
-    # in a second probe (it genuinely depends on the driver-side survivor
-    # set, so two probes is this path's floor), and relabel locally. The
-    # distributed path below is the r14 code, taken when either leg
-    # overflows _CLUSTER_LOCAL_MAX. The fused probe caps the union at
-    # 2×cap — each leg then gets its own cap check, so the fast-path
-    # gating is byte-identical to the two separate cap-sized probes.
-    cap = _CLUSTER_LOCAL_MAX
-    alb = labels.join(ids, "doc_id", "left_semi").select("label").distinct()
-    fused = (
-        labels.join(F.broadcast(alb), "label", "left_semi")
-        .selectExpr("doc_id", "label", "false AS __is_id")
-        .unionByName(
-            ids.selectExpr(
-                "doc_id", "CAST(NULL AS BIGINT) AS label", "true AS __is_id"
-            )
-        )
-    )
-    fused_rows = _probe_collect(fused, 2 * cap)
-    members_rows = [r for r in fused_rows if not r["__is_id"]]
-    id_rows = [r for r in fused_rows if r["__is_id"]]
-    edge_rows = None
-    if (
-        len(fused_rows) <= 2 * cap
-        and len(members_rows) <= cap
-        and len(id_rows) <= cap
-    ):
-        # both probes proved complete (<= cap rows back from limit(cap+1))
-        id_set = {r["doc_id"] for r in id_rows}
-        survivor_set = {
-            r["doc_id"] for r in members_rows if r["doc_id"] not in id_set
-        }
-        if band_store is not None:
-            # narrow index read (3 cols) instead of two stacked streams of
-            # the 17-col signature store for the survivor self-join legs
-            sub_bands = band_store.scan().filter(_in_ids(survivor_set))
-            a = sub_bands.selectExpr("doc_id AS u", "band_idx", "band_key")
-            b = sub_bands.selectExpr("doc_id AS v", "band_idx", "band_key")
-        else:
-            sub_sigs = sig_store.scan().filter(_in_ids(survivor_set))
-            a = _bands_long(sub_sigs, "u")
-            b = _bands_long(sub_sigs, "v")
-        edge_rows = _probe_collect(
-            a.join(b, ["band_idx", "band_key"])
-            .filter(F.col("u") < F.col("v"))
-            .select("u", "v")
-            .distinct(),
-            cap,
-        )
-    if edge_rows is not None and len(edge_rows) <= cap:
-        relabeled = union_find_labels((r["u"], r["v"]) for r in edge_rows)
-        full_map = {i: relabeled.get(i, i) for i in survivor_set}
-        cdc = (
-            labels_df(spark, full_map)
-            .withColumn("Op", F.lit("U"))
-            .unionByName(
-                labels_df(spark, {i: i for i in id_set}).selectExpr(
-                    "doc_id", "CAST(NULL AS BIGINT) AS label", "'D' AS Op"
-                )
-            )
-        )  # local relations — labels fixed BEFORE the sig delete by value
-    else:
-        affected = _fresh_ids(
-            labels.join(ids, "doc_id", "left_semi")
-            .select("label")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        members = labels.join(F.broadcast(affected), "label", "left_semi").select(
-            "doc_id"
-        )
-        survivors = members.join(ids, "doc_id", "left_anti")
-        if band_store is not None:
-            sub_bands = band_store.scan().join(survivors, "doc_id", "left_semi")
-            a = sub_bands.selectExpr("doc_id AS u", "band_idx", "band_key")
-            b = sub_bands.selectExpr("doc_id AS v", "band_idx", "band_key")
-        else:
-            sub_sigs = sig_store.scan().join(survivors, "doc_id", "left_semi")
-            a = _bands_long(sub_sigs, "u")
-            b = _bands_long(sub_sigs, "v")
-        edges = (
-            a.join(b, ["band_idx", "band_key"])
-            .filter(F.col("u") < F.col("v"))
-            .select("u", "v")
-            .distinct()
-        )
-        relabeled, _rounds = connected_components_adaptive(edges)
-        full = survivors.join(relabeled, "doc_id", "left").select(
-            "doc_id", F.coalesce("label", F.col("doc_id")).alias("label")
-        )
-        cdc = full.withColumn("Op", F.lit("U")).unionByName(
-            ids.selectExpr("doc_id", "CAST(NULL AS BIGINT) AS label", "'D' AS Op")
-        ).localCheckpoint(eager=True)  # labels computed BEFORE the sig delete
-    if band_store is not None:
-        # index delete FIRST: a crash between the two deletes then leaves
-        # the index MISSING rows the sig store still has — re-running the
-        # retraction (the documented repair for any mid-retraction crash)
-        # restores sync; the reverse order could leave ghost index rows
-        # that a fold's pruned probe would resurrect into edges
-        retract_batch(band_store, ids)
-    retract_batch(sig_store, ids)
-    # return the label-store MERGE snapshot id so facade callers get a
-    # commit handle from BOTH retract_batch forms (ADVICE r13: the plain
-    # path returns the delete snapshot id; this path made two commits but
-    # returned None — the label merge is the one that completes the op)
-    return label_store.merge(cdc, keys=["doc_id"], op_col="Op")
+def _cluster_cdc(spark, bdf, sig_store, label_store, append=True):
+    """The cluster tier's CDC kernel: one batch of (Op, doc_id, text) rows
+    applied to the signature + label store pair.
 
+    The batch's keys are "stored" when the label store holds them (it
+    holds every stored doc_id). An I on a stored key replaces it like a
+    U, and a key carrying both D and U (or I) resolves upsert-wins. The
+    post-batch store drops every batch key and gains the batch's
+    signatures. The components of the stored keys are re-derived from
+    their survivors' edges; every other component a batch edge reaches
+    joins the union-find through its member→label star edges.
 
-def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None) -> None:
-    """Fused CDC apply for the cluster tier (r15, VERDICT r14 task 4):
-    one micro-batch of (Op, doc_id, text) rows — I/U/D — folded into the
-    signature + label store pair with ONE union-find and ONE label MERGE,
-    instead of the retract-then-fold pair of each (which solved two
-    overlapping subgraphs and committed four snapshots per mixed batch).
+    Bounded driver fast path, four probes (`limit(cap+1)`: ≤ cap rows
+    back proves the set complete):
+      1. the op rows and the I ∪ U signatures, one union at 2×cap with a
+         cap check per leg (an overflowing union overflows a leg); the
+         signatures become an Arrow local relation;
+      2. the batch's band collisions with the post-batch store (skipped
+         for a D-only batch);
+      3. the members of the components of the batch keys and of those
+         edges' endpoints, at 2×cap (the ids filter the label scan as
+         literals, `_in_ids`): this gives the stored keys, the survivors
+         and the reached components' stars;
+      4. the survivors' band collisions with each other (skipped when
+         there are none; components are closed under collisions, so a
+         survivor collides only with survivors and batch docs);
+    then ONE driver union-find. Any overflow runs
+    `_cluster_cdc_distributed` instead, the same plan kept distributed.
 
-    Steps of a mixed batch (commit order preserves the retract-then-fold
-    crash contract — signature state is correct before any label commit):
-      1. ONE probe collects the batch's (Op, doc_id) rows together with
-         the I ∪ U rows' minhash signatures; the signatures become an
-         Arrow local relation, so no later consumer re-derives or
-         checkpoints them;
-      2. one probe collects the members of the components the D ∪ U keys
-         belong to (the keys filter the label scan as literals);
-      3. ONE signature commit: an op-column merge deletes the D ∪ U keys'
-         old signatures and upserts the I ∪ U rows' new ones;
-      4. ONE fused edge probe: the batch's candidate edges and the
-         affected components' survivor edges, against the post-merge
-         store; then one probe for the star edges of the batch-touched
-         unaffected components (skipped when there are none);
-      5. ONE driver union-find over those edges and ONE op-column MOR
-         MERGE of the labels: relabeled survivors and batch docs as
-         upserts, pure-delete keys as D rows (a key carrying both D and U
-         resolves upsert-wins, the documented same-batch semantics).
-    Every id set the driver holds filters a store scan as a literal list
-    (`_in_ids`) and every merge source built on the driver is read by
-    value (`tables._is_local`), so no Spark job only moves driver data.
-    Job budget per mixed batch, micro-batch confs (AQE off), copy-on-
-    write signature store and MOR label store (lakebench `dedup_drain`,
-    tests/test_cluster_apply_jobs.py): 10 jobs on a fresh label store,
-    14 once it carries delete files —
-      step 1: 1 job; step 2: 2 jobs, 4 with delete files;
-      step 3: 1 job (the rewrite; an MOR signature store: 2);
-      step 4: 2 jobs for the edge probe, then 2, 4 with delete files;
-      step 5: 2 jobs (the MERGE's data write and delete-file write).
-    Replay converges with no stamp for the same reasons the unfused
-    sequence does: the delete is idempotent, the append anti-joins, and
-    the merge re-asserts identical labels (pytest: full and mid-crash
-    replays). Pure-insert and pure-delete batches take
-    `fold_batch_clusters` / `retract_batch_clusters`; the unfused
-    retract+fold pair also runs when the batch or any probe overflows
-    _CLUSTER_LOCAL_MAX."""
+    Commits, only when `append`, signatures FIRST, in the cheapest form
+    that is exact (a copy-on-write store is rewritten only by the MERGE):
+    an I-only batch that replaces no stored key takes the keyed append
+    (`_append_new_ids`), a D-only batch one O(|keys|) equality-delete
+    file (`retract_batch`), any other batch an op-column MERGE (D-only
+    keys as D rows); then ONE op-column MOR MERGE of the labels. Every
+    probe reads the pre-batch snapshots, so a crash between the commits
+    leaves stale labels that a replay of the batch recomputes
+    identically. Job budget under the micro-batch confs, with a
+    copy-on-write signature store and an MOR label store
+    (tests/test_cluster_apply_jobs.py): probe 1: 1 job; probes 2 and 4:
+    2 each; probe 3: 2, 4 once the label store carries delete files; the
+    keyed append 2, the equality delete 1, the signature MERGE 1; the
+    label MERGE 2.
+
+    Returns (label MERGE snapshot id or None, post-batch label frame)."""
     from ..operators.graph import labels_df, local_frame, union_find_labels
 
     cap = _CLUSTER_LOCAL_MAX
-    # one probe, two legs (the `retract_batch_clusters` fused-probe
-    # pattern): the op rows and the I ∪ U signatures, collected at 2×cap
-    # with a cap check per leg. A signature leg never has more rows than
-    # the op rows it groups, so an overflowing union implies an
-    # overflowing op leg — mega-batch routing depends on the op-row
-    # count alone.
+    labels, sigs = label_store.scan(), sig_store.scan()  # pre-batch snapshots
     sig = minhash_signature_df(
         bdf.filter(F.col("Op").isin("I", "U")).select("doc_id", "text")
     )
-    pad = [
-        F.lit(None).cast(f.dataType).alias(f.name)
-        for f in sig.schema.fields
-        if f.name != "doc_id"
-    ]
+    op_leg = bdf.select("Op", "doc_id", *_null_cols(sig), F.lit(False).alias("__sig"))
     rows = _probe_collect(
-        bdf.select("Op", "doc_id", *pad, F.lit(False).alias("__sig")).unionByName(
+        op_leg.unionByName(
             sig.select(
                 F.lit(None).cast("string").alias("Op"), "*", F.lit(True).alias("__sig")
             )
@@ -2513,224 +2172,114 @@ def apply_cdc_batch_clusters(spark, bdf, sig_store, label_store, band_store=None
     )
     op_rows = [r for r in rows if not r["__sig"]]
     sig_rows = [r for r in rows if r["__sig"]]
-    if len(rows) > 2 * cap or len(op_rows) > cap or len(sig_rows) > cap:
-        # mega-batch: the truncated sample must not gate ANYTHING (a D
-        # row beyond the first cap+1 collected rows would be silently
-        # dropped — review r15); compute the side counts exactly with one
-        # aggregation, then run the unfused distributed sequence
-        ops = bdf.groupBy().agg(
-            F.sum(F.when(F.col("Op").isin("D", "U"), 1).otherwise(0)).alias("nd"),
-            F.sum(F.when(F.col("Op").isin("I", "U"), 1).otherwise(0)).alias("nu"),
-        ).first()
-        if ops and int(ops["nd"] or 0):
-            retract_batch_clusters(
-                spark, bdf.filter(F.col("Op").isin("D", "U")).select("doc_id"),
-                sig_store, label_store, band_store=band_store,
-            )
-        if ops and int(ops["nu"] or 0):
-            fold_batch_clusters(
-                spark, bdf.filter(F.col("Op").isin("I", "U")).select("doc_id", "text"),
-                sig_store, label_store, append=True, band_store=band_store,
-            )
-        return
-    ups_ids = {r["doc_id"] for r in op_rows if r["Op"] in ("I", "U")}
-    del_ids = {r["doc_id"] for r in op_rows if r["Op"] in ("D", "U")}
-    # pure-delete / pure-insert batches take the single-sided ops (each
-    # runs its own bounded fast path)
-    if not ups_ids:
-        if del_ids:
-            retract_batch_clusters(
-                spark, labels_df(spark, {i: i for i in del_ids}).select("doc_id"),
-                sig_store, label_store, band_store=band_store,
-            )
-        return
-    batch_sig = local_frame(
-        spark, {c: [r[c] for r in sig_rows] for c in sig.columns}, sig.schema
-    )
-    if not del_ids:
-        fold_batch_clusters(
-            spark, None, sig_store, label_store, append=True,
-            batch_sig=batch_sig, band_store=band_store,
+    fast = len(op_rows) <= cap and len(sig_rows) <= cap
+    if fast:
+        if not op_rows:
+            return None, labels
+        keys = {r["doc_id"] for r in op_rows}
+        ups = {r["doc_id"] for r in sig_rows}
+        batch_sig = local_frame(
+            spark, {c: [r[c] for r in sig_rows] for c in sig.columns}, sig.schema
         )
-        return
-
-    def unfused() -> None:
-        # retract-then-fold over the same batch; every step is idempotent,
-        # so after the signature commit below this is exactly the
-        # mid-crash replay path the pytests cover — retract re-labels the
-        # affected components, fold re-contracts the batch-touched ones
-        retract_batch_clusters(
-            spark, labels_df(spark, {i: i for i in del_ids}).select("doc_id"),
-            sig_store, label_store, band_store=band_store,
+        post = sigs.filter(~_in_ids(keys)).unionByName(batch_sig)
+        edges = _probe_collect(_band_edges(batch_sig, post), cap) if ups else []
+        fast = len(edges) <= cap
+    if fast:
+        ids = keys | ({r[c] for r in edges for c in ("u", "v")} - ups)
+        alb = labels.filter(_in_ids(ids)).select("label").distinct()
+        members = _probe_collect(
+            labels.join(F.broadcast(alb), "label", "left_semi"), 2 * cap
         )
-        fold_batch_clusters(
-            spark, None, sig_store, label_store, append=True,
-            batch_sig=batch_sig, band_store=band_store,
+        fast = len(members) <= 2 * cap
+    if fast:
+        label_of = {r["doc_id"]: r["label"] for r in members}
+        affected = {label_of[k] for k in keys if k in label_of}
+        survivors = {i for i, lb in label_of.items() if lb in affected} - keys
+        surv_sig = sigs.filter(_in_ids(survivors))
+        surv_edges = (
+            _probe_collect(_band_edges(surv_sig, surv_sig), cap) if survivors else []
         )
-
-    labels = label_store.scan()  # pins the PRE-batch label snapshot
-    # affected components' members (one probe; `alb` ≤ one label per key)
-    alb = labels.filter(_in_ids(del_ids)).select("label").distinct()
-    aff_members = _probe_collect(
-        labels.join(F.broadcast(alb), "label", "left_semi"), cap
-    )
-    if len(aff_members) > cap:
-        unfused()
-        return
-    affected_labels = {r["label"] for r in aff_members}
-    survivor_set = {r["doc_id"] for r in aff_members} - del_ids
-
-    # 1. ONE atomic signature commit (VERDICT r14 task 4): the op-column
-    # MOR MERGE deletes the D ∪ U keys' old signatures and appends the
-    # I ∪ U rows' new ones in a single snapshot — strictly stronger than
-    # the delete-then-append crash contract (no window between them) and
-    # replay-idempotent (a re-merge re-asserts identical rows)
-    null_sig = [
-        f"CAST(NULL AS {'STRING' if c.startswith('band') else 'BIGINT'}) AS {c}"
-        for c in batch_sig.columns
-        if c != "doc_id"
-    ]
-    d_only_sig = labels_df(spark, {i: i for i in del_ids - ups_ids}).selectExpr(
-        "doc_id", *null_sig, "'D' AS Op"
-    )
-    sig_store.merge(
-        batch_sig.withColumn("Op", F.lit("U")).unionByName(d_only_sig),
-        keys=["doc_id"],
-        op_col="Op",
-    )
-    if band_store is not None:
-        # mirror the signature merge into the band index (one op-column
-        # MOR merge: the batch's band rows as upserts, pure-delete keys as
-        # D rows). Committed after the signature merge; a crash between
-        # the two fails the batch, and foreachBatch replays the SAME
-        # batch before any other work — both merges are idempotent, so
-        # the replay restores index/store sync before any probe reads it.
-        d_only_band = labels_df(spark, {i: i for i in del_ids - ups_ids}).selectExpr(
-            "doc_id",
-            "CAST(NULL AS INT) AS band_idx",
-            "CAST(NULL AS STRING) AS band_key",
-            "'D' AS Op",
+        fast = len(surv_edges) <= cap
+    if fast:
+        local = union_find_labels(
+            [(r["u"], r["v"]) for r in edges + surv_edges]
+            + [(i, lb) for i, lb in label_of.items() if lb not in affected]
         )
-        band_store.merge(
-            _bands_long(batch_sig, "doc_id")
-            .withColumn("Op", F.lit("U"))
-            .unionByName(d_only_band),
-            keys=["doc_id"],
-            op_col="Op",
-        )
-
-    # ONE fused edge probe (r15 job diet) for both edge sets the
-    # union-find needs — the batch's candidate edges AND the affected
-    # components' survivor edges. Both are band collisions against the
-    # post-merge store (the merge just committed the batch signatures,
-    # so the batch side's stored rows equal `batch_sig` by value; the
-    # D ∪ U keys' old rows are equality-deleted in the same snapshot):
-    # stream the store's bands ONCE against bands(batch ∪ survivors) and
-    # classify the pairs on the driver from the already-known id sets.
-    #   - batch edge  ⇔ ≥1 endpoint ∈ ups_ids (= batch×store ∪
-    #     batch-internal, exactly `_batch_band_candidates`' output);
-    #   - survivor edge ⇔ both endpoints ∈ survivor_set.
-    # No extra output class exists: components are CLOSED under
-    # collision edges, so a survivor's only non-survivor collisions are
-    # with deleted rows (gone from the post-merge scan) or with batch
-    # docs (wanted batch edges anyway). Replaces two probes — and two
-    # store band streams — with one; the unfused two-probe shape remains
-    # in `fold_batch_clusters`/`retract_batch_clusters` (equivalence
-    # pytest: fused-vs-unfused stores byte-equal over an I/U/D
-    # lifecycle).
-    probe_ids = _in_ids(ups_ids | survivor_set)
-    if band_store is not None:
-        # index form (r16): the probe side reads the 3-column band index
-        # instead of stacking the 17-column store, and the store side is
-        # MANIFEST-PRUNED to the probe side's band-key buckets — the r16
-        # replacement for the full store-band stream (one O(corpus) read
-        # becomes O(probe-bands / buckets); falls back to the full index
-        # scan if the key collect overflows the cap)
-        l_src = band_store.scan().filter(probe_ids)
-        key_rows = _probe_collect(l_src.select("band_key").distinct(), cap)
-        r_src = (
-            band_store.scan_pruned_in(
-                "band_key", [k["band_key"] for k in key_rows]
-            )
-            if len(key_rows) <= cap
-            else band_store.scan()
-        )
-        l = l_src.selectExpr("doc_id AS u", "band_idx", "band_key")
-        r = r_src.selectExpr("doc_id AS v", "band_idx", "band_key")
+        # batch docs and survivors without an edge label themselves
+        relabel = {i: local.get(i, i) for i in ups | survivors}
+        relabel.update(local)
+        changed = labels_df(spark, relabel)
+        d_only = labels_df(spark, {i: i for i in keys - ups}).select("doc_id")
+        carried = labels.filter(~_in_ids(keys | set(relabel)))
+        if not ups:
+            commit = "delete"
+        elif keys == ups and not affected:
+            commit = "append"
+        else:
+            commit = "merge"
     else:
-        sub_sigs = sig_store.scan().filter(probe_ids)
-        l = _bands_long(sub_sigs, "u")
-        r = _bands_long(sig_store.scan(), "v")
-    # probe at 2×cap: this is the UNION of the two edge sets the unfused
-    # sequence capped at `cap` EACH, so 2×cap keeps the fast-path headroom
-    # identical (ADVICE r15 — capping the union at cap silently halved it)
-    # with the same driver memory bound as the old two cap-sized lists
-    fused_rows = _probe_collect(
-        l.join(r, ["band_idx", "band_key"])
-        .filter(F.col("u") != F.col("v"))
-        .selectExpr("least(u, v) AS u", "greatest(u, v) AS v")
-        .distinct(),
-        2 * cap,
-    )
-    if len(fused_rows) > 2 * cap:
-        # overflow after the signature commit: finish with the unfused
-        # label-side sequence (the re-delete inside retract is a no-op
-        # and the re-append anti-joins)
-        unfused()
-        return
-    # ≤ cap ⇒ the fused set is COMPLETE; only now derive the two lists
-    # (deriving from a truncated sample would drop edges — r15 review)
-    batch_edges = [
-        e for e in fused_rows if e["u"] in ups_ids or e["v"] in ups_ids
-    ]
-    surv_edges = [
-        e for e in fused_rows if e["u"] in survivor_set and e["v"] in survivor_set
-    ]
+        batch_sig, d_only, changed, carried, commit = _cluster_cdc_distributed(
+            bdf, sig, labels, sigs
+        )
+    sid = None
+    if append:
+        if commit == "append":
+            _append_new_ids(sig_store, batch_sig)
+        elif commit == "delete":
+            retract_batch(sig_store, d_only)
+        else:
+            sig_store.merge(_with_deletes(batch_sig, d_only), keys=["doc_id"], op_col="Op")
+        sid = label_store.merge(
+            _with_deletes(changed, d_only), keys=["doc_id"], op_col="Op"
+        )
+    return sid, carried.unionByName(changed)
 
-    # touched-but-unaffected components carry their star edges; only
-    # endpoints NOT already accounted for need the label lookup (batch
-    # docs get union-find labels; survivors' components are affected and
-    # fully re-derived — carrying their stale star would be wrong anyway)
-    ep_ids = (
-        {r["u"] for r in batch_edges} | {r["v"] for r in batch_edges}
-    ) - ups_ids - survivor_set - del_ids
-    if ep_ids:
-        tlbl = labels.filter(_in_ids(ep_ids)).select("label").distinct()
-        touched_rows = _probe_collect(
-            labels.join(F.broadcast(tlbl), "label", "left_semi"), cap
+
+def _cluster_cdc_distributed(bdf, sig, labels, sigs):
+    """`_cluster_cdc`'s plan with every set kept distributed, for a batch
+    or a touched subgraph over _CLUSTER_LOCAL_MAX. Returns the kernel's
+    (batch signatures, D-only keys, changed labels, carried labels,
+    signature commit) with the frames pinned by checkpoints: the commits
+    run after, and must not re-read the stores they change."""
+    from ..operators.graph import connected_components_adaptive
+
+    def pin(df):
+        return _fresh_ids(df.localCheckpoint(eager=True))
+
+    keys = pin(bdf.select("doc_id").distinct())
+    batch_sig = pin(sig)
+    ups = batch_sig.select("doc_id")
+    affected = pin(labels.join(keys, "doc_id", "left_semi").select("label").distinct())
+    members = labels.join(F.broadcast(affected), "label", "left_semi").select("doc_id")
+    nodes = members.join(keys, "doc_id", "left_anti").unionByName(ups)
+    post = sigs.join(keys, "doc_id", "left_anti").unionByName(batch_sig)
+    edges = pin(_band_edges(post.join(nodes, "doc_id", "left_semi"), post))
+    reached = (
+        edges.selectExpr("u AS doc_id")
+        .union(edges.selectExpr("v AS doc_id"))
+        .join(nodes, "doc_id", "left_anti")
+    )
+    touched = labels.join(reached, "doc_id", "left_semi").select("label").distinct()
+    star = labels.join(F.broadcast(touched), "label", "left_semi").selectExpr(
+        "doc_id AS u", "label AS v"
+    )
+    comp, _rounds = connected_components_adaptive(edges.unionByName(star))
+    changed = pin(
+        comp.unionByName(
+            nodes.join(comp, "doc_id", "left_anti").selectExpr("doc_id", "doc_id AS label")
         )
+    )
+    d_only = keys.join(ups, "doc_id", "left_anti")
+    carried = labels.join(
+        changed.select("doc_id").union(keys), "doc_id", "left_anti"
+    )
+    if ups.isEmpty():
+        commit = "delete"
+    elif d_only.isEmpty() and affected.isEmpty():
+        commit = "append"
     else:
-        touched_rows = []
-    if len(touched_rows) > cap:
-        # same post-signature-commit repair as the edge-probe overflow
-        unfused()
-        return
-    star = [
-        (r["doc_id"], r["label"])
-        for r in touched_rows
-        if r["label"] not in affected_labels
-    ]
-    local = union_find_labels(
-        [(r["u"], r["v"]) for r in batch_edges]
-        + [(r["u"], r["v"]) for r in surv_edges]
-        + star
-    )
-    # every batch doc and every survivor gets a row: union-find label if
-    # connected, else its own id (isolated docs label themselves)
-    upsert_map = {i: local.get(i, i) for i in (ups_ids | survivor_set)}
-    for node, lab in local.items():
-        upsert_map[node] = lab
-    d_only = del_ids - ups_ids  # same-key D+U resolves upsert-wins
-    cdc = (
-        labels_df(spark, upsert_map)
-        .withColumn("Op", F.lit("U"))
-        .unionByName(
-            labels_df(spark, {i: i for i in d_only}).selectExpr(
-                "doc_id", "CAST(NULL AS BIGINT) AS label", "'D' AS Op"
-            )
-        )
-    )
-    label_store.merge(cdc, keys=["doc_id"], op_col="Op")
+        commit = "merge"
+    return batch_sig, d_only, changed, carried, commit
 
 
 _incr_labels_cache: dict[str, str] = {}
@@ -2759,7 +2308,7 @@ def _cluster_retract_stores_for(spark, sf_dir: str) -> str:
     ALREADY taken a retraction: day-1 builds both over the corpus slice
     (doc_id % 5 != 0), day-1.5 retracts the takedown slice (doc_id % 7
     = 1) through `retract_batch_clusters` — affected components
-    re-labeled from re-derived edges, signatures equality-deleted."""
+    re-labeled from re-derived edges, signatures deleted."""
     from ..catalog import persisted_store_for
     from ..tables import SnapshotTable
 
@@ -2850,7 +2399,7 @@ def d_incremental_cluster_retract(spark, sf_dir) -> DataFrame:
 # comparison fails. Shared by d_incremental_clusters (one-shot batch),
 # q_stream_cluster_maintain (the same fold split across micro-batches —
 # folds compose, so ONE contract covers both), and — with a post-CDC
-# universe — q_stream_cluster_cdc (retract-then-fold per micro-batch).
+# universe — q_stream_cluster_cdc (one CDC batch per micro-batch).
 def clusters_oracle(
     universe_sql: str = "SELECT doc_id, text FROM documents",
 ) -> str:

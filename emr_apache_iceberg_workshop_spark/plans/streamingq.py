@@ -1001,9 +1001,10 @@ def q_stream_cdc_store(spark, sf_dir) -> DataFrame:
 # d_incremental_clusters — each document micro-batch folded into the
 # persisted component labels as it arrives. No replay stamp is needed
 # for correctness here (unlike the summed-count MERGE folds): both
-# commits a fold makes are idempotent by construction — the signature
-# append is keyed-idempotent (`_append_new_ids` anti-join) and the label
-# MERGE re-asserts identical labels on a replay — so the at-least-once
+# commits a fold makes are idempotent by construction — a replayed batch
+# finds its keys stored and re-merges identical signatures and labels
+# (after a crash between the two commits, the keyed `_append_new_ids`
+# anti-join drops the signatures already there) — so the at-least-once
 # foreachBatch contract converges to exactly-once state.
 
 from .dedup import INCR_CLUSTERS_ORACLE as _INCR_CLUSTERS_ORACLE  # noqa: E402
@@ -1098,16 +1099,13 @@ def q_stream_cluster_maintain(spark, sf_dir) -> DataFrame:
 # Streaming CDC cluster maintenance (r14): the full I/U/D lifecycle through
 # the cluster tier — q_stream_cdc_store proves CDC folding for the
 # SIGNATURE store; this proves it for the DERIVED label state, where a
-# delete or an update's retraction can SPLIT a component. Per micro-batch:
-# retract-then-fold, the same sequence apply_cdc_batch applies to flat
-# stores — D ∪ U keys first through retract_batch_clusters (old
-# signatures equality-deleted, affected components re-labeled from the
-# store's surviving edges), then I ∪ U rows through fold_batch_clusters
-# (new signatures appended, edge-touched components re-contracted).
-# Replay-safe with NO stamp: retraction re-runs to the same state (the
-# re-derived survivor edges are unchanged) and the fold's two commits are
-# idempotent by construction — a replayed U re-deletes its own new
-# signatures and re-appends identical ones, converging to the same state.
+# delete or an update's retraction can SPLIT a component. Each
+# micro-batch is one `apply_cdc_batch_clusters` call: the batch's
+# signatures replace or delete their keys' old ones, the components of
+# the stored keys are re-labeled from their survivors' edges, and the
+# components the batch's new edges reach are re-contracted. Replay-safe
+# with NO stamp: every probe reads the pre-batch snapshots and both
+# commits are idempotent, so a replayed batch converges to the same state.
 
 from .dedup import clusters_oracle as _clusters_oracle  # noqa: E402
 
@@ -1129,12 +1127,11 @@ from .dedup import clusters_oracle as _clusters_oracle  # noqa: E402
 def q_stream_cluster_cdc(spark, sf_dir) -> DataFrame:
     """CDC-maintained dup-cluster labels: the I/U/D feed drained as three
     micro-batches into an initially-empty signature-store + label-store
-    pair, each batch applied retract-then-fold — deletes and updates
-    first retract their keys (component splits re-derived from surviving
-    signatures), then inserts and updated texts fold in (component merges
-    re-contracted). The graded output is the drained LABEL-STORE STATE,
-    matched against the from-scratch component recompute over the
-    post-CDC corpus."""
+    pair — deletes and updates split the components they leave
+    (re-derived from surviving signatures), inserts and updated texts
+    merge the components they reach. The graded output is the drained
+    LABEL-STORE STATE, matched against the from-scratch component
+    recompute over the post-CDC corpus."""
     from ..tables import SnapshotTable
     from .dedup import _LABELS_DDL, _SIG_DDL, apply_cdc_batch_clusters
 
@@ -1152,11 +1149,9 @@ def q_stream_cluster_cdc(spark, sf_dir) -> DataFrame:
     ).parquet(_cdc_stream_src_dir(spark, sf_dir))
 
     def _fb(bdf, batch_id: int) -> None:
-        # Fused CDC apply (r15): ONE gating collect (the op/doc_id pairs,
-        # micro-batch-bounded), one union-find, one label MERGE per mixed
-        # batch — apply_cdc_batch_clusters owns the retract-then-fold
-        # sequencing, the same-key D+U upsert-wins resolution (ADVICE
-        # r14, documented there), and the distributed fallbacks.
+        # one union-find and one label MERGE per batch; the same-key D+U
+        # upsert-wins resolution and the distributed fallback are
+        # documented at plans/dedup.py:_cluster_cdc
         apply_cdc_batch_clusters(bdf.sparkSession, bdf, sig_store, label_store)
 
     with _microbatch_confs(spark):

@@ -79,8 +79,8 @@ Supported grammar (case-insensitive keywords; one statement per call):
   stores — doc_id-keyed, mutually exclusive with ``key``) /
   ``apply_cdc_clusters('<store>', source => '<view>',
   labels => '<label store>')``
-  (extension, r15: the FUSED I/U/D apply for the cluster tier — one
-  op-column signature MERGE + one label MERGE per batch via
+  (extension, r15: the I/U/D apply for the cluster tier — one
+  signature commit + one label MERGE per batch via
   `apply_cdc_batch_clusters`; returns the post-apply label state) —
   named (``arg => v``) or positional.
 - ``ALTER TABLE <name> RENAME TO <new>`` (catalog re-key, data in place)
@@ -926,9 +926,11 @@ class SqlCatalog:
             )
             labels_name = val("labels", 3)
             if labels_name is not None:
-                # cluster-tier retraction: re-derive affected components'
-                # edges from the signature store, re-label survivors,
-                # equality-delete the ids from BOTH stores — one call.
+                # cluster-tier retraction, a D-only batch through the
+                # cluster kernel: equality-delete the ids' signatures,
+                # re-derive the affected components from the survivors'
+                # signature edges, and delete the ids and re-label the
+                # survivors in ONE label-store MERGE — one call.
                 # The cluster stores are doc_id-keyed by construction, so
                 # a custom key cannot combine with labels (r13 review:
                 # silently selecting `key` then reading doc_id would
@@ -946,14 +948,13 @@ class SqlCatalog:
                 )
             return retract_batch(t, ids, key=key)
         if proc == "apply_cdc_clusters":
-            # extension procedure (r15): the fused CDC apply for the
-            # cluster tier — one micro-batch of (Op, doc_id, text) rows
-            # from `source` folded into the signature store (`table`) +
-            # label store (labels =>) with ONE op-column signature MERGE
-            # and ONE label MERGE (plans/dedup.py
-            # apply_cdc_batch_clusters; same-key D+U resolves
-            # upsert-wins, documented there). Returns the post-apply
-            # label state for inspection.
+            # extension procedure (r15): the CDC apply for the cluster
+            # tier — one micro-batch of (Op, doc_id, text) rows from
+            # `source` folded into the signature store (`table`) + label
+            # store (labels =>) with ONE signature commit and ONE label
+            # MERGE (plans/dedup.py apply_cdc_batch_clusters; same-key
+            # D+U resolves upsert-wins, documented there). Returns the
+            # post-apply label state for inspection.
             src = val("source", 1)
             labels_name = val("labels", 2)
             if src is None or labels_name is None:

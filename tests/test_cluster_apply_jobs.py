@@ -4,10 +4,11 @@ the driver already holds.
 A merge source built on the driver (labels_df frames and unions of them)
 is read by value instead of checkpointed, unless its plan is
 nondeterministic; an unpartitioned copy-on-write merge hands its plan
-straight to the staged write; and a mixed I/U/D micro-batch costs a flat
-number of jobs once the label store carries delete files. Job counts are
-read with `dagScheduler().nextJobId()`, under the drains' micro-batch
-confs (AQE off: with AQE each shuffle stage is a job of its own).
+straight to the staged write; and a CDC micro-batch, mixed I/U/D, pure
+insert or pure delete, costs a flat number of jobs once the label store
+carries delete files. Job counts are read with
+`dagScheduler().nextJobId()`, under the drains' micro-batch confs (AQE
+off: with AQE each shuffle stage is a job of its own).
 """
 
 from __future__ import annotations
@@ -15,6 +16,7 @@ from __future__ import annotations
 import hashlib
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from emr_apache_iceberg_workshop_spark.operators.graph import labels_df
@@ -140,12 +142,34 @@ def _doc(family: int, variant: int) -> str:
     return f"{_BASE[family]} {_BASE[family]} tail{variant}"
 
 
-def test_mixed_cdc_apply_job_budget(spark, tmp_path):
-    """One mixed I/U/D batch against a store with prior merges launches
-    at most 14 jobs, and the same number at the 2nd and 3rd batch. Each
-    batch inserts near copies into a component it does not otherwise
-    touch (so the star-edge probe runs), updates a doc of a second
-    component and deletes a doc of a third."""
+def _batch_rows(shape: str, b: int) -> list:
+    inserts = [
+        ("I", 100 + 10 * b + v, _doc(b % 2 + 1, 10 * b + v)) for v in range(3)
+    ]
+    if shape == "insert":
+        return inserts
+    if shape == "delete":
+        return [("D", b, None), ("D", 30 + b, None)]
+    return inserts + [("U", b, _doc(0, 20 + b)), ("D", 30 + b, None)]
+
+
+# shape -> (job budget per steady-state batch, docs stored after 3 batches)
+_SHAPES = {
+    "mixed": (14, 16 + 9 - 3),
+    "insert": (14, 16 + 9),
+    "delete": (11, 16 - 6),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_mixed_cdc_apply_job_budget(spark, tmp_path, shape):
+    """One CDC batch against a store with prior merges launches no more
+    jobs than its budget, and the same number at the 2nd and 3rd batch.
+    The mixed batch inserts near copies into a component it does not
+    otherwise touch (so the star-edge probe runs), updates a doc of a
+    second component and deletes a doc of a third; the pure-insert
+    batch is its three inserts, the pure-delete batch deletes the
+    updated and the deleted doc."""
     corpus = spark.createDataFrame(
         [(f * 10 + v, _doc(f, v)) for f in range(4) for v in range(4)],
         "doc_id bigint, text string",
@@ -158,19 +182,12 @@ def test_mixed_cdc_apply_job_budget(spark, tmp_path):
     counts = []
     with _microbatch_confs(spark):
         for b in range(3):
-            rows = [
-                ("I", 100 + 10 * b + v, _doc(b % 2 + 1, 10 * b + v))
-                for v in range(3)
-            ] + [
-                ("U", b, _doc(0, 20 + b)),
-                ("D", 30 + b, None),
-            ]
             path = str(tmp_path / f"batch{b}")
-            spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+            spark.createDataFrame(_batch_rows(shape, b), schema).coalesce(1).write.parquet(path)
             bdf = spark.read.schema(schema).parquet(path)
             j0 = _jobs(spark)
             dedup.apply_cdc_batch_clusters(spark, bdf, sig, lab)
             counts.append(_jobs(spark) - j0)
-    assert counts[1] == counts[2] <= 14, counts
-    # the stores hold the batches: 16 corpus docs + 9 inserted - 3 deleted
-    assert lab.scan().count() == sig.scan().count() == 22
+    budget, stored = _SHAPES[shape]
+    assert counts[1] == counts[2] <= budget, counts
+    assert lab.scan().count() == sig.scan().count() == stored

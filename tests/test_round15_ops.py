@@ -396,9 +396,10 @@ def _drain(spark, batches, sig, lab, fused: bool):
 
 
 def test_fused_cdc_apply_equals_unfused_sequence(spark, tmp_path):
-    """apply_cdc_batch_clusters (one sig MERGE + one label MERGE + one
-    union-find per mixed batch) must land the exact label state of the
-    unfused retract-then-fold sequence across an I/U/D lifecycle."""
+    """A mixed batch through apply_cdc_batch_clusters must land the exact
+    label and signature state of its D part (retract_batch_clusters)
+    followed by its I ∪ U part (fold_batch_clusters) across an I/U/D
+    lifecycle."""
     s1, l1 = _mk_stores(spark, tmp_path, "fused")
     s2, l2 = _mk_stores(spark, tmp_path, "unfused")
     got = _drain(spark, _cdc_batches(spark), s1, l1, fused=True)
@@ -425,8 +426,7 @@ def test_fused_cdc_apply_fallback_matches_fast(spark, tmp_path, monkeypatch):
     # Only ONE leg of the fused ops/signature probe overflows: 12 I + 4 U
     # + 8 D rows are 24 op rows but 16 signature rows, so at cap 20 the
     # union (40 rows) fits the probe's 2×cap while the op leg does not.
-    # The batch must still take the mega-batch route (its fold gets the
-    # batch's text, every other fold gets the collected signatures).
+    # The batch must still take the kernel's distributed fallback.
     seed = _cdc_batches(spark)[0]
     base = "the quick brown fox jumps over the lazy dog and then runs far away"
     mixed = spark.createDataFrame(
@@ -435,30 +435,29 @@ def test_fused_cdc_apply_fallback_matches_fast(spark, tmp_path, monkeypatch):
         + [("D", i, None) for i in (1, 2, 3, 5, 6, 7, 9, 10)],
         "Op string, doc_id bigint, text string",
     )
-    folds = []
-    fold = D.fold_batch_clusters
+    fallbacks = []
+    distributed = D._cluster_cdc_distributed
 
-    def spy(spark_, batch_docs, *args, **kwargs):
-        folds.append(batch_docs is not None)
-        return fold(spark_, batch_docs, *args, **kwargs)
+    def spy(*args, **kwargs):
+        fallbacks.append(True)
+        return distributed(*args, **kwargs)
 
+    monkeypatch.setattr(D, "_cluster_cdc_distributed", spy)
     states = []
     for tag, cap in (("leg_fast", 100_000), ("leg_gated", 20)):
         monkeypatch.setattr(D, "_CLUSTER_LOCAL_MAX", 100_000)
         sig, lab = _mk_stores(spark, tmp_path, tag)
         D.apply_cdc_batch_clusters(spark, seed, sig, lab)
         monkeypatch.setattr(D, "_CLUSTER_LOCAL_MAX", cap)
-        monkeypatch.setattr(D, "fold_batch_clusters", spy)
-        folds.clear()
+        fallbacks.clear()
         D.apply_cdc_batch_clusters(spark, mixed, sig, lab)
-        monkeypatch.setattr(D, "fold_batch_clusters", fold)
         states.append((
-            folds[:],
+            fallbacks[:],
             {tuple(r) for r in lab.scan().select("doc_id", "label").collect()},
             {tuple(r) for r in sig.scan().collect()},
         ))
-    (fast_folds, fast_labels, fast_sigs), (gated_folds, gated_labels, gated_sigs) = states
-    assert fast_folds == [] and gated_folds == [True]
+    (fast_runs, fast_labels, fast_sigs), (gated_runs, gated_labels, gated_sigs) = states
+    assert fast_runs == [] and gated_runs == [True]
     assert gated_labels == fast_labels and len(fast_labels) == 44
     assert gated_sigs == fast_sigs
 

@@ -114,10 +114,6 @@ BROADCAST_HINT_ALLOWED = {
         "avg_bal", "total", "mx", "avg_qty",  # 1-row scalar aggregates
     },
     "plans/dedup.py": {
-        # cluster-fold bounded fast path (r15): endpoint-id set (collected
-        # under _CLUSTER_LOCAL_MAX, 100k rows) and the touched-label
-        # semi-join derived from it (<= |eps| rows) — driver-proven bounded
-        "eps", "tlbl",
         # touched-fingerprint prune set for the incremental SimHash
         # verdict tier: bounded by |batch fingerprints| x 5489 (the
         # hamming<=3 ball size in 32-bit fingerprint space, C(32,0..3)),
@@ -134,26 +130,13 @@ BROADCAST_HINT_ALLOWED = {
         # second-min ids grouped from the batch-signature slice:
         # <= |batch signatures| rows at any store scale
         "m2",
-        # touched component labels for the incremental cluster fold:
-        # <= one label per edge endpoint <= 2 x the batch's candidate
-        # pairs (O(|batch|) by the banding analysis) — corpus-size-free
-        "touched",
-        # affected component labels for the cluster-tier retraction:
-        # <= one label per RETRACTED id (distinct labels of the ids'
-        # own store rows) — bounded by the takedown batch, never the
-        # store (retract_batch_clusters)
-        "affected",
-        # r15 retraction fast path + fused CDC apply: `alb` is the same
-        # affected-label set (<= one label per retracted id); `sdf` is
-        # the survivor-id set and `dids` the retracted-key set, both
-        # probe-collected under _CLUSTER_LOCAL_MAX before re-broadcast
-        "alb", "sdf", "dids",
-        # fused mixed-batch edge probe (late r15): the batch-id ∪
-        # survivor-id set, a driver-built local relation of at most
-        # 2 x _CLUSTER_LOCAL_MAX ids (ups_ids from the op_rows probe,
-        # survivor_set from the aff_members probe, both cap-proven
-        # complete before this broadcast is ever constructed)
-        "probe_ids",
+        # cluster CDC kernel (_cluster_cdc): `alb` is the label set of the
+        # batch keys and of the batch edges' endpoints, ids probe-collected
+        # under 2 x _CLUSTER_LOCAL_MAX — one label per id; in the
+        # distributed fallback `affected` (one label per batch key) and
+        # `touched` (one label per batch-edge endpoint) are the same kind
+        # of set, bounded by the batch and its candidate pairs
+        "alb", "affected", "touched",
     },
     "plans/similarity.py": {
         "q",  # fixed 5-id query set (QUERY_FILTER bounds it at any SF)
