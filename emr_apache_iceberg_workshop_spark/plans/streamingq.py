@@ -34,7 +34,6 @@ designs (SCALE.md §Streaming).
 
 from __future__ import annotations
 
-import contextlib
 import itertools
 import os
 import tempfile
@@ -42,6 +41,7 @@ import tempfile
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import TS_FMT_DUCK, TS_FMT_SPARK, dsum, osum
+from ..session import scoped_confs
 from ..streaming.jobs import EVENTS_DDL
 from .registry import query
 from .tablemeta import DEMO_ROOT as _DEMO_ROOT
@@ -1010,7 +1010,6 @@ def q_stream_cdc_store(spark, sf_dir) -> DataFrame:
 from .dedup import INCR_CLUSTERS_ORACLE as _INCR_CLUSTERS_ORACLE  # noqa: E402
 
 
-@contextlib.contextmanager
 def _microbatch_confs(spark):
     """Micro-batch tuning scope for the bounded streaming queries: pin
     shuffle.partitions low (each fold moves O(batch) rows — 32-way
@@ -1024,15 +1023,10 @@ def _microbatch_confs(spark):
     (tests/test_round14_ops.py). Production mega-batch folds should keep
     AQE for its skew handling — this scope is the micro-batch path only.
     """
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+    return scoped_confs(
+        spark,
+        {"spark.sql.shuffle.partitions": "8", "spark.sql.adaptive.enabled": "false"},
+    )
 
 
 @query(

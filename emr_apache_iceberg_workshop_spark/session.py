@@ -17,6 +17,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -49,6 +50,30 @@ _RUNTIME_CONFS: dict[str, str] = {
     # a join on the bucket key is SMJ with no Exchange AND no Sort.
     "spark.sql.legacy.bucketedTableScan.outputOrdering": "true",
 }
+
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]):
+    """Set session `confs` for the body of a `with` block and restore
+    each on every exit path: a key that had a value gets it back, a key
+    that was unset is unset again. The confs belong to the SESSION, so a
+    query planned concurrently in another driver thread sees them too,
+    and two overlapping scopes on different threads could restore each
+    other's values. Every caller runs on the single driver thread
+    (foreachBatch drains run their batch function serially; the one-shot
+    operators are sequential); a multi-threaded caller would need a lock
+    or a cloned session."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def default_parallelism() -> int:

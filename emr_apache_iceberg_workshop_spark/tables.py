@@ -33,6 +33,16 @@ non-conflicting appends/overwrites by REBASING onto the fresh head
 written once); DML/merge/maintenance commits computed against a stale
 state refuse, exactly Iceberg's validation behavior.
 
+Every snapshot record is built by ONE helper, `_commit_snapshot` (next
+sid, parent, commit time, inherited active state, streaming replay-guard
+stamp, ref advance, CAS commit), and every row-level mutation is one of
+two kernels: the merge-on-read delta commit `_commit_mor_delta` (an
+optional data dir plus one equality or positional delete file — MOR
+MERGE, DELETE, UPDATE and `delete_keys`) or the partition-scoped rewrite
+`_rewrite_partitions` (touched partitions rewritten and masked out of
+older dirs — COW MERGE, DELETE, UPDATE, `maintain` and
+`overwrite_partitions`).
+
 Scale: the table state is a list of parquet directories; Spark scans them
 as a multi-path parquet read with `basePath`, so partition pruning, column
 pruning, and predicate pushdown all work normally. Incremental reads scan
@@ -64,6 +74,7 @@ from pyspark.sql import types as T
 
 from .operators.relational import merge_upsert
 from .partitioning import PartitionField, field_expr, parse_spec, prune_keep
+from .session import scoped_confs
 
 _META = "_meta.json"
 _LOCK = ".commit.lock"
@@ -118,29 +129,12 @@ def _probe_collect(df, cap: int) -> list:
     attempt almost never satisfies `cap + 1` and every retry is an extra
     scheduled job over the same shuffle output (measured r15: 5 → 3 jobs,
     ~0.1s per probe on an idle host, more under load).
-    `initialNumPartitions` is pinned high around the collect and restored
-    after, so sampling limits elsewhere (e.g. the k-means sample window)
-    keep their early-exit.
-
-    Single-threaded-driver assumption (ADVICE r15): the pin mutates the
-    SESSION conf, so a query planned concurrently in another driver
-    thread of this session would briefly lose CollectLimit early-exit,
-    and two concurrent probes could clobber each other's saved value.
-    Every current caller runs on the single driver thread (foreachBatch
-    drains execute their batch function serially; the one-shot operators
-    are sequential) — if a multi-threaded driver path is ever added,
-    guard this with a lock or move the conf to a cloned session."""
-    spark = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "1000000")
-    try:
+    `initialNumPartitions` is pinned high around the collect
+    (`session.scoped_confs`, which restores it on every exit path), so
+    sampling limits elsewhere (e.g. the k-means sample window) keep their
+    early-exit."""
+    with scoped_confs(df.sparkSession, {"spark.sql.limit.initialNumPartitions": "1000000"}):
         return df.limit(cap + 1).collect()
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def _is_local(df: DataFrame) -> bool:
@@ -208,10 +202,11 @@ def _dir_sid(rel: str) -> int:
 
 
 # positional-delete file layout: (data file path relative to the table
-# root, row index in that file) — what `_positions_where` writes
+# root, row index in that file) — `_POS_IDENTITY` of `_positioned_rows`
 _POS_DELETE_SCHEMA = T.StructType(
     [T.StructField("file_rel", T.StringType()), T.StructField("pos", T.LongType())]
 )
+_POS_IDENTITY = ("__rel AS file_rel", "__pos AS pos")  # selectExpr form
 
 
 def _data_sid_expr(rel):
@@ -338,6 +333,54 @@ class SnapshotTable:
             except OSError:
                 pass
 
+    @staticmethod
+    def _next_sid(meta: dict) -> int:
+        """The id the next snapshot committed on `meta` takes — what a
+        writer names its `data/s<id>` / `deletes/s<id>` dirs after before
+        `_commit_snapshot` claims it."""
+        snaps = meta["snapshots"]
+        return (snaps[-1]["snapshot_id"] + 1) if snaps else 1
+
+    def _ref_head(self, meta: dict, branch: str) -> dict | None:
+        """Head of `branch`; a branch that does not exist yet starts from
+        main's head (a write to it creates it)."""
+        try:
+            return self._head(meta, branch)
+        except ValueError:
+            return self._head(meta)
+
+    def _commit_snapshot(
+        self, meta: dict, operation: str, summary: dict, branch: str = "main", **fields
+    ) -> int:
+        """Append one snapshot record to `meta` and commit it — the one
+        place a record is built. Claims the next sid; `parent_id` is
+        `branch`'s head. Unless `fields` passes them, `active_dirs` is the
+        head's plus this commit's `dirs` and `active_deletes` the head's.
+        A commit that advances main folds its summary's streaming stamp
+        (callers merge in `summary_extra`) into the replay-guard property
+        in the same swap; branch commits never stamp (ADVICE r13: a stamp
+        for data that may never reach main would make a later replay skip
+        a lost batch — `fast_forward` and cherry-pick stamp on publish)."""
+        main, prev = self._head(meta), self._ref_head(meta, branch)
+        sid = self._next_sid(meta)
+        rec = {
+            "snapshot_id": sid,
+            "parent_id": prev["snapshot_id"] if prev else None,
+            "made_current_at": self._clock(),
+            "operation": operation,
+            "dirs": [],
+            **fields,
+        }
+        rec.setdefault("active_dirs", (prev["active_dirs"] if prev else []) + rec["dirs"])
+        rec.setdefault("active_deletes", list(prev.get("active_deletes", [])) if prev else [])
+        rec["summary"] = summary
+        meta["snapshots"].append(rec)
+        if branch == "main":
+            self._stamp_stream_guard(meta, summary, head_sid=sid)
+        self._advance(meta, branch, sid, main["snapshot_id"] if main else None)
+        self._commit(meta)
+        return sid
+
     def snapshots(self) -> list[Snapshot]:
         return [Snapshot(**s) for s in self._load()["snapshots"]]
 
@@ -374,12 +417,12 @@ class SnapshotTable:
         self, meta: dict, summary_extra: dict | None, head_sid: int
     ) -> None:
         """Fold `summary_extra`'s (streaming.query-scope,
-        streaming.batch-id) stamp into the guard property. Called by the
-        MAIN-advancing commit paths streaming sinks use, on the in-flight
-        `meta`, before `_commit` — never a separate metadata version.
-        Branch/WAP-staged commits never stamp (ADVICE r13: a stamp for
-        data that may never reach main would make a later replay skip a
-        lost batch).
+        streaming.batch-id) stamp into the guard property. Called by
+        `_commit_snapshot` for every MAIN-advancing commit (and by
+        `fast_forward` at publish time), on the in-flight `meta`, before
+        `_commit` — never a separate metadata version. Branch/WAP-staged
+        commits never stamp (ADVICE r13: a stamp for data that may never
+        reach main would make a later replay skip a lost batch).
 
         The FIRST guard stamp on a table also MIGRATES every legacy
         in-summary stamp (pre-property streaming history) into per-scope
@@ -899,66 +942,25 @@ class SnapshotTable:
         `spark.sql.sources.partitionOverwriteMode=dynamic`): replace
         EXACTLY the partitions present in the batch; every other
         partition's files stay byte-identical (time travel to the
-        pre-overwrite snapshot still sees the replaced rows). Partition
-        scoping reuses the COW machinery: inline exclusion tuples up to
-        `write.cow.scope-cap`, a parquet mask FILE above it — driver
-        memory and metadata size stay bounded at any partition
-        cardinality (the capped path never collects the touched set).
-        Unpartitioned tables degenerate to a full overwrite, Spark's own
-        semantics for dynamic mode without partitions. Stale bases refuse
-        with CommitConflict like every non-append commit."""
-        meta = self._load()
-        fields = self._part_fields(meta)
-        if not fields:
-            return self.write(
-                df, mode="overwrite", operation="dynamic-overwrite",
-                summary_extra=summary_extra,
-            )
-        schema = T.StructType.fromDDL(meta["schema"])
-        part_sel = [field_expr(f, schema).alias(f.name) for f in fields]
-        df_local = df.localCheckpoint(eager=True)  # written + partition-scanned
-        parts_df = df_local.select(*part_sel).distinct().localCheckpoint(eager=True)
-        cap = int(meta.get("properties", {}).get("write.cow.scope-cap", 10000))
-        head_rows = _probe_collect(parts_df, cap)
-        capped = len(head_rows) > cap
-        parts = (
-            []
-            if capped
-            else [{c: _part_str(v) for c, v in r.asDict().items()} for r in head_rows]
+        pre-overwrite snapshot still sees the replaced rows). This is the
+        partition-scoped rewrite (`_rewrite_partitions`) with the batch's
+        partitions as the touched set and the batch as the rows written:
+        mask-file scoped above `write.cow.scope-cap`, a no-op commit for
+        an empty batch. Unpartitioned tables degenerate to a full
+        overwrite, Spark's own semantics for dynamic mode without
+        partitions. Stale bases refuse with CommitConflict like every
+        non-append commit."""
+        if self._load()["partition_by"]:
+            df = df.localCheckpoint(eager=True)  # written + partition-scanned
+        return self._rewrite_partitions(
+            self.scan(),
+            lambda cols: df.select(*cols),
+            lambda _rows: df,
+            "dynamic-overwrite",
+            {"mode": "dynamic-partition-overwrite"},
+            summary_extra,
+            count_key="replaced_partitions",
         )
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        prev = self._head(meta)
-        rel, written_parts, files = self._write_data_dir(df_local, meta, sid)
-        mask_rel = self._write_mask_file(parts_df, sid) if capped else None
-        new_active = self._mask_active_dirs(prev, snaps, parts, mask_rel)
-        if files:  # an empty batch replaces nothing: no-op commit
-            new_active.append(rel)
-        n_scoped = parts_df.count() if capped else len(parts)
-        snap_rec = {
-            "snapshot_id": sid,
-            "parent_id": prev["snapshot_id"] if prev else None,
-            "made_current_at": self._clock(),
-            "operation": "dynamic-overwrite",
-            "dirs": [rel],
-            "active_dirs": new_active,
-            "partitions": written_parts,
-            "files": files,
-            "active_deletes": list(prev.get("active_deletes", [])) if prev else [],
-            "summary": dict(
-                {"mode": "dynamic-partition-overwrite",
-                 "replaced_partitions": n_scoped},
-                **(summary_extra or {}),
-            ),
-        }
-        if mask_rel:
-            snap_rec["mask_file"] = mask_rel
-            snap_rec["summary"]["scope"] = "mask-join"
-        snaps.append(snap_rec)
-        self._stamp_stream_guard(meta, summary_extra, head_sid=sid)
-        self._advance(meta, "main", sid, None)
-        self._commit(meta)
-        return sid
 
     _PA_SPARK_TYPES = {
         "int64": "bigint",
@@ -1115,8 +1117,7 @@ class SnapshotTable:
             meta = self._load()
         if mode == "overwrite_dynamic" and not part_names:
             mode = "overwrite"  # unpartitioned: dynamic degenerates to full
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
+        sid = self._next_sid(meta)
         published = False
         rel = parts = files = None
         for _attempt in range(8):
@@ -1145,7 +1146,7 @@ class SnapshotTable:
                                 "(mask-file scoped) or split the batch"
                             )
                 return self._commit_write(
-                    meta, sid, rel, parts, files, mode, operation, branch,
+                    meta, rel, parts, files, mode, operation, branch,
                     summary_extra,
                 )
             except CommitConflict:
@@ -1155,8 +1156,7 @@ class SnapshotTable:
                     _shutil.rmtree(out, ignore_errors=True)
                     raise
                 meta = self._load()
-                snaps = meta["snapshots"]
-                new_sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
+                new_sid = self._next_sid(meta)
                 if not published:
                     if new_sid != sid:
                         if mode != "append":
@@ -1193,7 +1193,6 @@ class SnapshotTable:
     def _commit_write(
         self,
         meta: dict,
-        sid: int,
         rel: str,
         parts: list,
         files: list,
@@ -1202,19 +1201,15 @@ class SnapshotTable:
         branch: str,
         summary_extra: dict | None,
     ) -> int:
-        snaps = meta["snapshots"]
-        main_head = self._head(meta)
-        prev_main = main_head["snapshot_id"] if main_head else None
-        try:
-            prev = self._head(meta, branch)
-        except ValueError:
-            prev = main_head  # auto-create the branch from main
+        """Commit the published data dir `rel` (named after
+        `_next_sid(meta)`) as an append, a full overwrite or a dynamic
+        partition overwrite on `branch`."""
+        summary = dict(summary_extra or {})
         if mode == "append":
-            active = (prev["active_dirs"] if prev else []) + [rel]
             # delete files keep applying to older dirs; appended rows carry
             # a higher sid than every existing delete file, so they are
             # never suppressed — plain-append semantics preserved
-            active_deletes = list(prev.get("active_deletes", [])) if prev else []
+            fields = {}
         elif mode == "overwrite_dynamic":
             # dynamic partition overwrite (Iceberg INSERT OVERWRITE with
             # partitionOverwriteMode=dynamic): replace EXACTLY the
@@ -1222,42 +1217,24 @@ class SnapshotTable:
             # partition-exclusion entries COW merges write; untouched
             # partitions' files stay byte-identical. Delete files carry
             # over — they apply by sid to surviving older dirs only.
-            active = self._mask_active_dirs(prev, snaps, parts, None)
+            active = self._mask_active_dirs(
+                self._ref_head(meta, branch), meta["snapshots"], parts, None
+            )
             if files:  # an empty batch replaces nothing: no-op commit
                 active.append(rel)
-            active_deletes = list(prev.get("active_deletes", [])) if prev else []
+            fields = {"active_dirs": active}
             operation = operation or "dynamic-overwrite"
-            summary_extra = dict(
+            summary = dict(
                 {"mode": "dynamic-partition-overwrite",
                  "replaced_partitions": len(parts)},
-                **(summary_extra or {}),
+                **summary,
             )
         else:
-            active, active_deletes = [rel], []
-        snaps.append(
-            {
-                "snapshot_id": sid,
-                "parent_id": prev["snapshot_id"] if prev else None,
-                "made_current_at": self._clock(),
-                "operation": operation or mode,
-                "dirs": [rel],
-                "active_dirs": active,
-                "partitions": parts,
-                "files": files,
-                "active_deletes": active_deletes,
-                "summary": dict(summary_extra or {}),
-            }
+            fields = {"active_dirs": [rel], "active_deletes": []}
+        return self._commit_snapshot(
+            meta, operation or mode, summary, branch=branch,
+            dirs=[rel], partitions=parts, files=files, **fields,
         )
-        # stamp the replay guard only for commits that advance MAIN: a
-        # scope-stamped batch staged to a WAP/branch ref must not mark the
-        # batch id as done — if the branch were never cherry-picked, a
-        # later replay would be skipped while its data never reached main
-        # (ADVICE r13, latent: no streaming sink writes to branches today)
-        if branch == "main":
-            self._stamp_stream_guard(meta, summary_extra, head_sid=sid)
-        self._advance(meta, branch, sid, prev_main)
-        self._commit(meta)
-        return sid
 
     # -- branch lifecycle --------------------------------------------------
     def create_branch(self, name: str, snapshot_id: int | None = None) -> int:
@@ -1299,10 +1276,11 @@ class SnapshotTable:
     ) -> None:
         """Publication-time replay-guard adoption (review r14): a
         scope-stamped batch staged to a branch stamps the guard only when
-        its data actually reaches main — at fast_forward / cherry-pick
-        time, from the published snapshots' summaries. Branch writes
-        themselves never stamp (ADVICE r13: an unpublished batch must
-        stay replayable); without THIS half, a published WAP batch would
+        its data actually reaches main — at fast_forward time, from the
+        published snapshots' summaries (a cherry-pick copies the stamp
+        into its own summary, which `_commit_snapshot` folds in). Branch
+        writes themselves never stamp (ADVICE r13: an unpublished batch
+        must stay replayable); without THIS half, a published WAP batch would
         replay as duplicates on any guard-property-era table (the
         property-only lookup never sees staged summaries). Routed through
         _stamp_stream_guard with the POST-publish main head so a first
@@ -1403,36 +1381,25 @@ class SnapshotTable:
                 f"({[d['sid'] for d in newer_deletes]}) that would "
                 f"retroactively apply to the incoming rows"
             )
-        sid = snaps[-1]["snapshot_id"] + 1
         # carry the staged commit's streaming stamp into the published
-        # summary (main-lineage visibility for the legacy walk) and adopt
-        # it into the guard property — the publish half of the
-        # branch-write stamp skip (see _adopt_stream_stamps)
+        # summary (main-lineage visibility for the legacy walk); the
+        # commit folds it into the guard property — the publish half of
+        # the branch-write stamp skip (see _adopt_stream_stamps)
         summary = {"cherry_picked_from": snapshot_id}
         for k in ("streaming.batch-id", "streaming.query-scope"):
             if k in src.get("summary", {}):
                 summary[k] = src["summary"][k]
-        snaps.append(
-            {
-                "snapshot_id": sid,
-                "parent_id": head["snapshot_id"],
-                "made_current_at": self._clock(),
-                "operation": "cherrypick",
-                # no dirs/files of its own: the incoming dirs stay
-                # manifest-owned by the source snapshot (like Iceberg,
-                # where cherry-pick reuses the staged manifests)
-                "dirs": [],
-                "active_dirs": list(head["active_dirs"]) + incoming,
-                "partitions": [],
-                "files": [],
-                "active_deletes": list(head.get("active_deletes", [])),
-                "summary": summary,
-            }
+        return self._commit_snapshot(
+            meta,
+            "cherrypick",
+            summary,
+            # no dirs/files of its own: the incoming dirs stay
+            # manifest-owned by the source snapshot (like Iceberg,
+            # where cherry-pick reuses the staged manifests)
+            active_dirs=list(head["active_dirs"]) + incoming,
+            partitions=[],
+            files=[],
         )
-        self._adopt_stream_stamps(meta, [src], head_sid=sid)
-        self._advance(meta, "main", sid, head["snapshot_id"])
-        self._commit(meta)
-        return sid
 
     def rollback_to_snapshot(self, snapshot_id: int) -> int:
         """Move `main` back to an ancestor snapshot (Iceberg
@@ -1494,21 +1461,7 @@ class SnapshotTable:
                 raise ValueError(f"cannot drop partition source column {name}")
             fields = [f for f in fields if f.name != name]
         new_ddl = T.StructType(fields).simpleString()[len("struct<") : -1]
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        prev = self._head(meta)
-        snaps.append(
-            {
-                "snapshot_id": sid,
-                "parent_id": prev["snapshot_id"] if prev else None,
-                "made_current_at": self._clock(),
-                "operation": "evolve-schema",
-                "dirs": [],
-                "active_dirs": prev["active_dirs"] if prev else [],
-                "active_deletes": list(prev.get("active_deletes", [])) if prev else [],
-                "summary": {"schema": new_ddl, "prev_schema": meta["schema"]},
-            }
-        )
+        summary = {"schema": new_ddl, "prev_schema": meta["schema"]}
         meta["schema"] = new_ddl
         # dropped columns take their statistics with them (a later
         # re-added column of the same name must not inherit stale stats)
@@ -1518,9 +1471,7 @@ class SnapshotTable:
             for key in dropped_stats:
                 props.pop(key)
             meta["properties"] = props
-        self._advance(meta, "main", sid, None)
-        self._commit(meta)
-        return sid
+        return self._commit_snapshot(meta, "evolve-schema", summary)
 
     def rename_column(self, old: str, new: str) -> int:
         """Iceberg `ALTER TABLE ... RENAME COLUMN` as a METADATA-ONLY
@@ -1556,24 +1507,11 @@ class SnapshotTable:
             for f in fields
         ]
         new_ddl = T.StructType(new_fields).simpleString()[len("struct<") : -1]
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        snaps.append(
-            {
-                "snapshot_id": sid,
-                "parent_id": head["snapshot_id"] if head else None,
-                "made_current_at": self._clock(),
-                "operation": "evolve-schema",
-                "dirs": [],
-                "active_dirs": head["active_dirs"] if head else [],
-                "active_deletes": list(head.get("active_deletes", [])) if head else [],
-                "summary": {
-                    "schema": new_ddl,
-                    "prev_schema": meta["schema"],
-                    "renamed": {"from": old, "to": new},
-                },
-            }
-        )
+        summary = {
+            "schema": new_ddl,
+            "prev_schema": meta["schema"],
+            "renamed": {"from": old, "to": new},
+        }
         meta["schema"] = new_ddl
         # column statistics follow the rename (Iceberg stats are keyed by
         # field id, which a rename preserves — the name-keyed property
@@ -1593,9 +1531,7 @@ class SnapshotTable:
                     new if c == old else c for c in cols
                 )
                 meta["properties"] = props
-        self._advance(meta, "main", sid, None)
-        self._commit(meta)
-        return sid
+        return self._commit_snapshot(meta, "evolve-schema", summary)
 
     # -- partition-spec evolution (Iceberg `ALTER TABLE ... ADD/DROP
     # PARTITION FIELD`) ----------------------------------------------------
@@ -1615,28 +1551,12 @@ class SnapshotTable:
         for f in parse_spec(partition_by):
             if f.source not in cols:
                 raise ValueError(f"unknown partition column {f.source}")
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        prev = self._head(meta)
-        snaps.append(
-            {
-                "snapshot_id": sid,
-                "parent_id": prev["snapshot_id"] if prev else None,
-                "made_current_at": self._clock(),
-                "operation": "evolve-partition",
-                "dirs": [],
-                "active_dirs": prev["active_dirs"] if prev else [],
-                "active_deletes": list(prev.get("active_deletes", [])) if prev else [],
-                "summary": {
-                    "partition_by": list(partition_by),
-                    "prev_partition_by": meta["partition_by"],
-                },
-            }
-        )
+        summary = {
+            "partition_by": list(partition_by),
+            "prev_partition_by": meta["partition_by"],
+        }
         meta["partition_by"] = list(partition_by)
-        self._advance(meta, "main", sid, None)
-        self._commit(meta)
-        return sid
+        return self._commit_snapshot(meta, "evolve-partition", summary)
 
     # -- reads -------------------------------------------------------------
     @staticmethod
@@ -2018,25 +1938,21 @@ class SnapshotTable:
         )
         return matched.select(*[f.name for f in schema.fields])
 
-    def _positions_where(self, pred) -> DataFrame:
-        """(file_rel, pos) row identities of current-state rows matching
-        `pred` — the content of a positional delete file."""
-        meta = self._load()
-        head = self._head(meta)
-        if head is None:
-            return self.spark.createDataFrame([], "file_rel string, pos long")
-        deletes = head.get("active_deletes", [])
+    def _positioned_rows(self) -> DataFrame:
+        """Current-state rows with their physical identity (`__rel`,
+        `__pos`); `selectExpr(*_POS_IDENTITY)` of the rows a positional delete
+        removes is the content of its delete file."""
+        head = self._head(self._load())
+        deletes = head.get("active_deletes", []) if head else []
         df = self._read_entries(
-            head["active_dirs"],
+            head["active_dirs"] if head else [],
             schema=self.schema(),
             with_sid=bool(deletes),
             with_pos=True,
         )
         if deletes:
             df = self._apply_deletes(df, deletes, keep_identity=True)
-        return df.filter(pred).select(
-            F.col("__rel").alias("file_rel"), F.col("__pos").alias("pos")
-        )
+        return df
 
     _AS_OF_SNAP = object()  # sentinel: default the rename bound to the snapshot
 
@@ -2707,221 +2623,156 @@ class SnapshotTable:
         follows the `write.merge.mode` table property
         (`bronze-silver.py:178-191`):
 
-        - `merge-on-read`: append the upserted rows + a key-delete file;
-          the scan applies the deletes. Merge cost is O(batch) — the 100 TB
-          CDC shape (Iceberg v2 equality deletes).
-        - `copy-on-write` (default) on a PARTITIONED table: rewrite only
-          the partitions the batch touches (source partitions ∪ partitions
-          of matched target keys), masking them out of older dirs — COW
-          write amplification bounded by touched partitions, not the table.
-        - `copy-on-write`, unpartitioned: full-state rewrite (the only
-          correct COW granularity without a partition spec).
+        - `merge-on-read`: one merge-on-read delta commit
+          (`_commit_mor_delta`): the upserted rows plus an equality-delete
+          file of every source key. No target scan, no rewrite: merge cost
+          is O(batch) — the 100 TB CDC shape (Iceberg v2 equality deletes).
+        - `copy-on-write` (default): the partition-scoped rewrite
+          (`_rewrite_partitions`) of the partitions the batch touches —
+          source partitions ∪ partitions of target rows matching a source
+          key (an update that MOVES a row rewrites both). Unpartitioned,
+          a full-state rewrite.
         """
         mode = self.properties().get("write.merge.mode", "copy-on-write")
         target = self.scan()
         src = source.select(*[c for c in target.columns if c in source.columns],
                             *([op_col] if op_col and op_col not in target.columns else []))
         if mode == "merge-on-read":
-            return self._merge_mor(
-                src, keys, op_col=op_col, delete_value=delete_value,
-                summary_extra=summary_extra,
+            # materialize the SOURCE once: the data write and the key write
+            # both read it; a lazy plan would re-run it per consumer (it may
+            # be a streaming batch, and for signature merges the source
+            # carries the batch's whole minhash text pass — r15 verdict
+            # task 7). Exception: a source built on the driver (`_is_local`:
+            # a deterministic plan whose leaves are all LocalRelations — the
+            # labels_df label/CDC frames, the cluster tier's Arrow signature
+            # batch, and unions of them) is already materialized BY VALUE;
+            # re-evaluation cannot differ and the eager checkpoint would be
+            # a pure extra Spark job per merge commit.
+            src = src if _is_local(src) else src.localCheckpoint(eager=True)
+            upserts = src if op_col is None else src.filter(
+                ~(F.coalesce(F.col(op_col), F.lit("")) == F.lit(delete_value))
+            )
+            # every source key (incl. deletes) suppresses older rows of that key
+            return self._commit_mor_delta(
+                "merge", dict({"mode": "merge-on-read"}, **(summary_extra or {})),
+                src.select(*keys).distinct(), keys, data=upserts.select(*target.columns),
             )
         if self._load()["partition_by"]:
-            return self._merge_cow_scoped(
-                target, src, keys, op_col=op_col, delete_value=delete_value,
-                summary_extra=summary_extra,
-            )
-        merged = merge_upsert(target, src, keys, op_col=op_col, delete_value=delete_value)
-        # no checkpoint: write() evaluates the plan exactly once, into a
-        # staged dir, before the metadata swap — the snapshot dirs it reads
-        # are immutable, and an overwrite refuses a stale base with
-        # CommitConflict, so nothing re-evaluates it after the swap
-        return self.write(
-            merged.select(*target.columns), mode="overwrite", operation="merge",
-            summary_extra=summary_extra,
+            src = src.localCheckpoint(eager=True)  # the scoped rewrite reads it 3x
+        return self._rewrite_partitions(
+            target,
+            # one key semi-join over the partition columns of the target scan
+            lambda cols: src.select(*cols).distinct().unionByName(
+                target.join(src.select(*keys).distinct(), list(keys), "left_semi")
+                .select(*cols).distinct()
+            ),
+            lambda rows: merge_upsert(rows, src, keys, op_col=op_col, delete_value=delete_value),
+            "merge", {"mode": "copy-on-write"}, summary_extra,
         )
 
-    def _merge_mor(
-        self,
-        src: DataFrame,
-        keys: list[str],
-        op_col: str | None,
-        delete_value: str,
-        summary_extra: dict | None = None,
+    def _commit_mor_delta(
+        self, operation: str, summary: dict, deletes: DataFrame,
+        keys: list[str] | None, data: DataFrame | None = None,
     ) -> int:
-        """Merge-on-read execution: ONE pass over the batch — write the
-        upserted rows as a new data dir and the batch's keys as an equality
-        -delete file. No target scan, no rewrite: cost scales with the
-        batch. Readers pay the delete anti-join until `compact()` folds
-        the deletes back into data (Iceberg `rewrite_data_files`)."""
+        """Merge-on-read delta commit, the one writer of MOR delete files:
+        `data` (if any) becomes a new data dir, then `deletes` ONE delete
+        file — an equality-delete frame of `keys`, or with `keys` None
+        (file_rel, pos) row identities. The file carries this commit's
+        sid, so it masks matching rows of OLDER snapshots only (Iceberg v2
+        sequence numbers) — never the rows appended with it. Cost is
+        O(delta); readers pay the anti-join until `compact()`."""
         meta = self._load()
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        data_cols = [f.name for f in T.StructType.fromDDL(meta["schema"]).fields]
-
-        # materialize the SOURCE once: the data write and the key write both
-        # read it; a lazy plan would re-run it per consumer (it may be a
-        # streaming batch, and for signature merges the source carries the
-        # batch's whole minhash text pass — r15 left the op-column key write
-        # re-deriving it from the unmaterialized source, one redundant
-        # source evaluation per merge commit, r15 verdict task 7).
-        # Exception: a source built on the driver (`_is_local`: a
-        # deterministic plan whose leaves are all LocalRelations — the
-        # labels_df label/CDC frames, the cluster tier's Arrow signature
-        # batch, and unions of them) is already materialized BY VALUE;
-        # re-evaluation cannot differ and the eager checkpoint would be a
-        # pure extra Spark job per merge commit.
-        if op_col is not None:
-            src_local = src if _is_local(src) else src.localCheckpoint(eager=True)
-            upserts_local = src_local.filter(
-                ~(F.coalesce(F.col(op_col), F.lit("")) == F.lit(delete_value))
-            ).select(*data_cols)
-        else:
-            upserts = src.select(*data_cols)
-            upserts_local = (
-                upserts if _is_local(upserts) else upserts.localCheckpoint(eager=True)
-            )
-        rel, parts, files = self._write_data_dir(upserts_local, meta, sid)
-        drel = f"deletes/s{sid}"
-        # every source key (incl. deletes) suppresses older rows of that key;
-        # with no op column there are no delete rows, so the key set is
-        # exactly the upserts' keys — either way the keys read the
-        # checkpointed relation, never the original source plan
-        key_src = src_local if op_col is not None else upserts_local
-        dstage = os.path.join(self.root, f"deletes/.stage-{uuid.uuid4().hex[:12]}")
-        key_src.select(*keys).distinct().write.mode("overwrite").parquet(dstage)
-        self._publish_dir(dstage, os.path.join(self.root, drel), cleanup_on_conflict=True)
-        dfiles = self._file_stats(drel)
+        sid = self._next_sid(meta)
         prev = self._head(meta)
-        active = (prev["active_dirs"] if prev else []) + [rel]
-        active_deletes = (list(prev.get("active_deletes", [])) if prev else []) + [
-            {"file": drel, "sid": sid, "keys": list(keys)}
-        ]
-        snaps.append(
-            {
-                "snapshot_id": sid,
-                "parent_id": prev["snapshot_id"] if prev else None,
-                "made_current_at": self._clock(),
-                "operation": "merge",
-                "dirs": [rel],
-                "active_dirs": active,
-                "partitions": parts,
-                "files": files,
-                "delete_file": drel,
-                "delete_file_stats": dfiles,
-                "active_deletes": active_deletes,
-                "summary": dict({"mode": "merge-on-read"}, **(summary_extra or {})),
-            }
+        fields = {"dirs": [], "partitions": [], "files": []}
+        if data is not None:
+            rel, parts, files = self._write_data_dir(data, meta, sid)
+            fields = {"dirs": [rel], "partitions": parts, "files": files}
+        drel = f"deletes/s{sid}"
+        dstage = os.path.join(self.root, f"deletes/.stage-{uuid.uuid4().hex[:12]}")
+        deletes.write.mode("overwrite").parquet(dstage)
+        self._publish_dir(dstage, os.path.join(self.root, drel), cleanup_on_conflict=True)
+        entry = {"file": drel, "sid": sid}
+        entry.update({"keys": list(keys)} if keys else {"style": "position"})
+        return self._commit_snapshot(
+            meta, operation, summary, delete_file=drel,
+            delete_file_stats=self._file_stats(drel),
+            active_deletes=(list(prev.get("active_deletes", [])) if prev else []) + [entry],
+            **fields,
         )
-        self._stamp_stream_guard(meta, summary_extra, head_sid=sid)
-        self._advance(meta, "main", sid, None)
-        self._commit(meta)
-        return sid
 
-    def _merge_cow_scoped(
+    def _rewrite_partitions(
         self,
         target: DataFrame,
-        src: DataFrame,
-        keys: list[str],
-        op_col: str | None,
-        delete_value: str,
+        touched,
+        rewrite,
+        operation: str,
+        summary: dict,
         summary_extra: dict | None = None,
+        count_key: str = "scoped_partitions",
     ) -> int:
-        """Partition-scoped copy-on-write: rewrite ONLY the partitions the
-        batch touches. Affected = source rows' partitions ∪ partitions of
-        target rows matching a source key (the second term catches updates
-        that MOVE a row across partitions — the moved-from partition must
-        be rewritten too). Finding them costs one key semi-join over a
-        2-column pruned target scan, then the merge joins only the affected
-        partitions' rows — write amplification O(touched partitions)."""
+        """Partition-scoped copy-on-write, the one rewrite behind COW
+        `merge` / `delete_where` / `update_where`, `maintain` and
+        `overwrite_partitions`. `touched(cols)` yields the partition
+        tuples replaced (`cols`: the partition expressions; repeats
+        allowed); `rewrite(rows)` maps their current rows to the rows
+        written instead. Older dirs get the tuples masked out
+        (`_mask_active_dirs`): untouched partitions' files stay
+        byte-identical. Planning is CAPPED: up to `write.cow.scope-cap`
+        tuples are collected and inlined as exclusion lists + an OR
+        predicate (Iceberg's driver-side planning cost class); above it,
+        e.g. a wide batch on a bucket(65536) spec, the set stays
+        distributed and selection and masking join a parquet mask file,
+        bounding driver memory and predicate size at any cardinality.
+        Nothing touched: a metadata-only no-op commit.
+
+        Unpartitioned tables rewrite the full state (the only correct COW
+        granularity without a spec) via `write(mode="overwrite")`. No
+        route checkpoints the plan: the staged write evaluates it once
+        before the metadata swap, the dirs it reads are immutable, and an
+        overwrite refuses a stale base with CommitConflict."""
         meta = self._load()
         fields = self._part_fields(meta)
+        if not fields:
+            return self.write(
+                rewrite(target).select(*target.columns), mode="overwrite",
+                operation=operation, summary_extra=summary_extra,
+            )
         schema = T.StructType.fromDDL(meta["schema"])
-        part_sel = [field_expr(f, schema).alias(f.name) for f in fields]
-        src_local = src.localCheckpoint(eager=True)  # read 3x below
-        src_keys = src_local.select(*keys).distinct()
-        src_parts = src_local.select(*part_sel).distinct()
-        tgt_parts = (
-            target.join(src_keys, list(keys), "left_semi").select(*part_sel).distinct()
-        )
-        # touched-partition planning is CAPPED: up to `write.cow.scope-cap`
-        # tuples are collected and inlined as exclusion lists + an OR
-        # predicate (the Iceberg driver-side-planning cost class). Above
-        # the cap — e.g. a wide batch on a bucket(65536) spec — the set
-        # stays distributed: row selection and masking switch to joins
-        # against a parquet mask file, bounding driver memory and
-        # predicate size at any cardinality.
+        parts_df = touched(
+            [field_expr(f, schema).alias(f.name) for f in fields]
+        ).distinct().localCheckpoint(eager=True)
         cap = int(meta.get("properties", {}).get("write.cow.scope-cap", 10000))
-        parts_df = (
-            src_parts.unionByName(tgt_parts).distinct().localCheckpoint(eager=True)
-        )
         head_rows = _probe_collect(parts_df, cap)
         capped = len(head_rows) > cap
-        parts = (
-            []
-            if capped
-            else [{c: _part_str(v) for c, v in r.asDict().items()} for r in head_rows]
+        parts = [] if capped else [
+            {c: _part_str(v) for c, v in r.asDict().items()} for r in head_rows
+        ]
+        summary = dict(
+            summary, **{count_key: parts_df.count() if capped else len(parts)},
+            **(summary_extra or {}),
         )
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        prev = self._head(meta)
-        if not parts and not capped:  # empty batch: metadata-only no-op merge commit
-            snaps.append(
-                {
-                    "snapshot_id": sid,
-                    "parent_id": prev["snapshot_id"] if prev else None,
-                    "made_current_at": self._clock(),
-                    "operation": "merge",
-                    "dirs": [],
-                    "active_dirs": prev["active_dirs"] if prev else [],
-                    "partitions": [],
-                    "active_deletes": list(prev.get("active_deletes", [])) if prev else [],
-                    "summary": dict(
-                        {"mode": "copy-on-write", "scoped_partitions": 0},
-                        **(summary_extra or {}),
-                    ),
-                }
-            )
-            self._stamp_stream_guard(meta, summary_extra, head_sid=sid)
-            self._advance(meta, "main", sid, None)
-            self._commit(meta)
-            return sid
+        if not parts and not capped:
+            return self._commit_snapshot(meta, operation, summary, partitions=[])
         if capped:
-            tgt_sub = self._mask_join(target, parts_df, fields, schema, "left_semi")
+            rows = self._mask_join(target, parts_df, fields, schema, "left_semi")
         else:
-            tgt_sub = target.filter(self._partition_match_expr(parts, fields, schema))
-        merged = merge_upsert(tgt_sub, src_local, keys, op_col=op_col, delete_value=delete_value)
-        merged = merged.select(*target.columns).localCheckpoint(eager=True)
-        rel, written_parts, files = self._write_data_dir(merged, meta, sid)
-        mask_rel = self._write_mask_file(parts_df, sid) if capped else None
-        new_active = self._mask_active_dirs(
-            prev, snaps, parts, mask_rel
+            rows = target.filter(self._partition_match_expr(parts, fields, schema))
+        sid = self._next_sid(meta)
+        rel, written, files = self._write_data_dir(
+            rewrite(rows).select(*target.columns), meta, sid
         )
-        new_active.append(rel)
-        n_scoped = parts_df.count() if capped else len(parts)
-        snap_rec = {
-            "snapshot_id": sid,
-            "parent_id": prev["snapshot_id"] if prev else None,
-            "made_current_at": self._clock(),
-            "operation": "merge",
-            "dirs": [rel],
-            "active_dirs": new_active,
-            "partitions": written_parts,
-            "files": files,
-            "active_deletes": list(prev.get("active_deletes", [])) if prev else [],
-            "summary": dict(
-                {"mode": "copy-on-write", "scoped_partitions": n_scoped},
-                **(summary_extra or {}),
-            ),
-        }
-        if mask_rel:
-            snap_rec["mask_file"] = mask_rel
-            snap_rec["summary"]["scope"] = "mask-join"
-        snaps.append(snap_rec)
-        self._stamp_stream_guard(meta, summary_extra, head_sid=sid)
-        self._advance(meta, "main", sid, None)
-        self._commit(meta)
-        return sid
+        masked = {}
+        if capped:
+            masked["mask_file"] = self._write_mask_file(parts_df, sid)
+            summary["scope"] = "mask-join"
+        active = self._mask_active_dirs(
+            self._head(meta), meta["snapshots"], parts, masked.get("mask_file")
+        )
+        return self._commit_snapshot(
+            meta, operation, summary, dirs=[rel], active_dirs=active + [rel],
+            partitions=written, files=files, **masked,
+        )
 
     def _write_mask_file(self, parts_df: DataFrame, sid: int) -> str:
         """Persist the touched-partition set as `masks/s{sid}` parquet
@@ -2968,73 +2819,28 @@ class SnapshotTable:
         """Row-level DELETE FROM ... WHERE. Rows where the predicate is
         TRUE are removed (FALSE/NULL rows survive — SQL semantics).
 
-        - `write.delete.mode=copy-on-write` (default): rewrite ONLY the
-          partitions containing matching rows (masks over older dirs) —
-          write amplification bounded by touched partitions.
-        - `write.delete.mode=merge-on-read`: requires `keys` (the columns
-          identifying a row, like the reference's merge key): writes an
-          equality-delete file of the matching rows' keys — O(matching)
-          write cost, applied at scan, folded by `compact()`. With
-          `write.delete.style=position` (Iceberg v2's POSITIONAL deletes
-          — what Spark's own MOR DELETE writes), no keys are needed: the
-          delete file records (file_rel, pos) row identities from the
-          parquet `_metadata` column instead.
+        - `write.delete.mode=copy-on-write` (default): the partition-
+          scoped rewrite (`_rewrite_partitions`) of the partitions holding
+          matching rows — write amplification bounded by touched
+          partitions.
+        - `write.delete.mode=merge-on-read`: one delta commit of a delete
+          file (`_mor_where`) — O(matching) write cost, applied at scan,
+          folded by `compact()`. Needs `keys` (the row-identifying
+          columns, like the reference's merge key) for an equality delete;
+          `write.delete.style=position` (Iceberg v2's POSITIONAL deletes —
+          what Spark's own MOR DELETE writes) records (file_rel, pos) row
+          identities from the parquet `_metadata` column instead.
         """
         mode = self.properties().get("write.delete.mode", "copy-on-write")
-        style = self.properties().get("write.delete.style", "equality")
         target = self.scan()
-        pred = F.expr(predicate)
         if mode == "merge-on-read":
-            if style == "position":
-                matched = self._positions_where(pred)
-            elif not keys:
-                raise ValueError(
-                    "merge-on-read delete needs `keys` naming the row-identifying "
-                    "columns for the equality-delete file "
-                    "(or set write.delete.style=position)"
-                )
-            meta = self._load()
-            snaps = meta["snapshots"]
-            sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-            drel = f"deletes/s{sid}"
-            dstage = os.path.join(self.root, f"deletes/.stage-{uuid.uuid4().hex[:12]}")
-            if style == "position":
-                matched.write.mode("overwrite").parquet(dstage)
-                entry = {"file": drel, "sid": sid, "style": "position"}
-            else:
-                target.filter(pred).select(*keys).distinct().write.mode(
-                    "overwrite"
-                ).parquet(dstage)
-                entry = {"file": drel, "sid": sid, "keys": list(keys)}
-            self._publish_dir(dstage, os.path.join(self.root, drel), cleanup_on_conflict=True)
-            prev = self._head(meta)
-            snaps.append(
-                {
-                    "snapshot_id": sid,
-                    "parent_id": prev["snapshot_id"] if prev else None,
-                    "made_current_at": self._clock(),
-                    "operation": "delete",
-                    "dirs": [],
-                    "active_dirs": prev["active_dirs"] if prev else [],
-                    "partitions": [],
-                    "files": [],
-                    "delete_file": drel,
-                    "delete_file_stats": self._file_stats(drel),
-                    "active_deletes": (list(prev.get("active_deletes", [])) if prev else [])
-                    + [entry],
-                    "summary": {
-                        "mode": "merge-on-read",
-                        "style": style,
-                        "predicate": predicate,
-                    },
-                }
-            )
-            self._advance(meta, "main", sid, None)
-            self._commit(meta)
-            return sid
-        survivors = lambda sub: sub.filter(~F.coalesce(pred, F.lit(False)))  # noqa: E731
-        return self._cow_rewrite_where(
-            target, pred, survivors, "delete", {"mode": mode, "predicate": predicate}
+            return self._mor_where(target, predicate, keys)
+        pred = F.expr(predicate)
+        return self._rewrite_partitions(
+            target,
+            lambda cols: target.filter(pred).select(*cols),
+            lambda rows: rows.filter(~F.coalesce(pred, F.lit(False))),
+            "delete", {"mode": mode, "predicate": predicate},
         )
 
     def delete_keys(
@@ -3047,12 +2853,13 @@ class SnapshotTable:
         from a DataFrame of key values — the Iceberg Op='D' CDC shape
         (reference `datagen/raw-datagen.py:16` emits that column). Unlike
         `delete_where`, no predicate scan of the table runs: the distinct
-        key frame IS the equality-delete file, so the commit cost is
-        O(|keys|) regardless of table size. Deletes are sequence-aware
-        exactly like `delete_where`'s merge-on-read mode — they mask only
-        rows committed BEFORE this snapshot, so a later re-append of the
-        same key is visible (retract-then-upsert). A keyed delete frame
-        is inherently merge-on-read; tables configured copy-on-write can
+        key frame IS the equality-delete file of the delta commit
+        (`_commit_mor_delta`), so the commit cost is O(|keys|) regardless
+        of table size. Deletes are sequence-aware exactly like
+        `delete_where`'s merge-on-read mode — they mask only rows
+        committed BEFORE this snapshot, so a later re-append of the same
+        key is visible (retract-then-upsert). A keyed delete frame is
+        inherently merge-on-read; tables configured copy-on-write can
         still take it (COW users wanting a rewrite use `delete_where`).
         Keys absent from the table are harmless no-ops, as in Iceberg."""
         if not keys:
@@ -3061,64 +2868,32 @@ class SnapshotTable:
         unknown = [k for k in keys if k not in schema]
         if unknown:
             raise ValueError(f"unknown key column(s) {unknown!r}")
-        frame = keys_df.select(
-            *[F.col(k).cast(schema[k]).alias(k) for k in keys]
-        ).distinct()
-        meta = self._load()
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        drel = f"deletes/s{sid}"
-        dstage = os.path.join(self.root, f"deletes/.stage-{uuid.uuid4().hex[:12]}")
-        frame.write.mode("overwrite").parquet(dstage)
-        entry = {"file": drel, "sid": sid, "keys": list(keys)}
-        self._publish_dir(
-            dstage, os.path.join(self.root, drel), cleanup_on_conflict=True
+        return self._commit_mor_delta(
+            "delete",
+            dict(
+                {"mode": "merge-on-read", "style": "equality",
+                 "predicate": f"keys:{','.join(keys)}"},
+                **(summary_extra or {}),
+            ),
+            keys_df.select(*[F.col(k).cast(schema[k]).alias(k) for k in keys]).distinct(),
+            keys,
         )
-        prev = self._head(meta)
-        snaps.append(
-            {
-                "snapshot_id": sid,
-                "parent_id": prev["snapshot_id"] if prev else None,
-                "made_current_at": self._clock(),
-                "operation": "delete",
-                "dirs": [],
-                "active_dirs": prev["active_dirs"] if prev else [],
-                "partitions": [],
-                "files": [],
-                "delete_file": drel,
-                "delete_file_stats": self._file_stats(drel),
-                "active_deletes": (
-                    list(prev.get("active_deletes", [])) if prev else []
-                )
-                + [entry],
-                "summary": dict(
-                    {
-                        "mode": "merge-on-read",
-                        "style": "equality",
-                        "predicate": f"keys:{','.join(keys)}",
-                    },
-                    **(summary_extra or {}),
-                ),
-            }
-        )
-        self._stamp_stream_guard(meta, summary_extra, head_sid=sid)
-        self._advance(meta, "main", sid, None)
-        self._commit(meta)
-        return sid
 
     def update_where(
         self, predicate: str, assignments: dict[str, str], keys: list[str] | None = None
     ) -> int:
         """Row-level UPDATE ... SET ... WHERE. `assignments` maps column
-        name → SQL expression evaluated on the matching row.
+        name → SQL expression; every expression reads the matching row's
+        pre-image (one projection, as in SQL).
 
-        - `write.update.mode=copy-on-write` (default): rewrite only the
-          partitions containing matching rows.
+        - `write.update.mode=copy-on-write` (default): the partition-
+          scoped rewrite (`_rewrite_partitions`) of the partitions holding
+          matching rows, with the assignments applied.
         - `write.update.mode=merge-on-read` (the reference's silver config,
-          `bronze-silver.py:184-189`): requires `keys`; executes as
-          equality-delete of the matching rows' keys + append of the
-          transformed rows — O(matching) cost, the same delete-file +
-          data-dir commit shape as a MOR MERGE, folded by `compact()`.
+          `bronze-silver.py:184-189`): a delete of the pre-images plus an
+          append of the post-images in one delta commit (`_mor_where`;
+          `keys` or `write.delete.style=position` as in `delete_where`) —
+          O(matching) cost, folded by `compact()`.
         """
         target = self.scan()
         schema = {f.name: f.dataType for f in self.schema().fields}
@@ -3127,155 +2902,49 @@ class SnapshotTable:
                 raise ValueError(f"unknown column {c!r}")
         pred = F.expr(predicate)
 
-        def apply(sub: DataFrame) -> DataFrame:
-            out = sub
-            for c, expr in assignments.items():
-                out = out.withColumn(
-                    c,
-                    F.when(F.coalesce(pred, F.lit(False)), F.expr(expr).cast(schema[c]))
-                    .otherwise(F.col(c)),
-                )
-            return out
+        def apply(rows: DataFrame) -> DataFrame:
+            hit = F.coalesce(pred, F.lit(False))
+            return rows.withColumns({
+                c: F.when(hit, F.expr(e).cast(schema[c])).otherwise(F.col(c))
+                for c, e in assignments.items()
+            })
 
-        mode = self.properties().get("write.update.mode", "copy-on-write")
+        if self.properties().get("write.update.mode", "copy-on-write") == "merge-on-read":
+            return self._mor_where(target, predicate, keys, apply)
+        return self._rewrite_partitions(
+            target,
+            lambda cols: target.filter(pred).select(*cols),
+            apply,
+            "update", {"mode": "copy-on-write", "predicate": predicate},
+        )
+
+    def _mor_where(self, target: DataFrame, predicate: str, keys, apply=None) -> int:
+        """Merge-on-read DELETE (`apply` None) or UPDATE as one delta
+        commit: a delete file of the matching rows' pre-images — THEIR
+        `keys`, or under `write.delete.style=position` their (file_rel,
+        pos) identities — plus, for an UPDATE, `apply` of those rows
+        appended. The UPDATE pins the pre-images once, so the delete file
+        and the post-images come from the same rows, and an assignment to
+        a key column deletes the old key, never a row already holding the
+        new one. (Appended files have new paths: no position collides.)"""
         style = self.properties().get("write.delete.style", "equality")
-        if mode == "merge-on-read":
-            if style != "position" and not keys:
-                raise ValueError(
-                    "merge-on-read update needs `keys` naming the row-identifying "
-                    "columns for the equality-delete file "
-                    "(or set write.delete.style=position)"
-                )
-            data_cols = [f.name for f in self.schema().fields]
-            matching = target.filter(F.coalesce(pred, F.lit(False)))
-            # transformed post-images; pred is TRUE on every row here
-            new_rows = apply(matching).select(*data_cols).localCheckpoint(eager=True)
-            if style == "position":
-                # pre-image row identities, captured BEFORE the append (the
-                # appended files have new paths, so they can never collide)
-                matched_pos = self._positions_where(
-                    F.coalesce(pred, F.lit(False))
-                ).localCheckpoint(eager=True)
-            meta = self._load()
-            snaps = meta["snapshots"]
-            sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-            rel, parts, files = self._write_data_dir(new_rows, meta, sid)
-            drel = f"deletes/s{sid}"
-            dstage = os.path.join(self.root, f"deletes/.stage-{uuid.uuid4().hex[:12]}")
-            if style == "position":
-                matched_pos.write.mode("overwrite").parquet(dstage)
-                entry = {"file": drel, "sid": sid, "style": "position"}
-            else:
-                new_rows.select(*keys).distinct().write.mode("overwrite").parquet(dstage)
-                entry = {"file": drel, "sid": sid, "keys": list(keys)}
-            self._publish_dir(dstage, os.path.join(self.root, drel), cleanup_on_conflict=True)
-            prev = self._head(meta)
-            snaps.append(
-                {
-                    "snapshot_id": sid,
-                    "parent_id": prev["snapshot_id"] if prev else None,
-                    "made_current_at": self._clock(),
-                    "operation": "merge",  # MOR upsert commit shape (delete+insert)
-                    "dirs": [rel],
-                    "active_dirs": (prev["active_dirs"] if prev else []) + [rel],
-                    "partitions": parts,
-                    "files": files,
-                    "delete_file": drel,
-                    "delete_file_stats": self._file_stats(drel),
-                    "active_deletes": (list(prev.get("active_deletes", [])) if prev else [])
-                    + [entry],
-                    "summary": {
-                        "mode": "merge-on-read",
-                        "style": style,
-                        "predicate": predicate,
-                    },
-                }
+        position = style == "position"
+        if not position and not keys:
+            raise ValueError(
+                f"merge-on-read {'delete' if apply is None else 'update'} needs "
+                "`keys` naming the row-identifying columns for the "
+                "equality-delete file (or set write.delete.style=position)"
             )
-            self._advance(meta, "main", sid, None)
-            self._commit(meta)
-            return sid
-        return self._cow_rewrite_where(
-            target, pred, apply, "update",
-            {"mode": "copy-on-write", "predicate": predicate},
+        rows = (self._positioned_rows() if position else target).filter(F.expr(predicate))
+        if apply is not None:
+            rows = rows.localCheckpoint(eager=True)
+        return self._commit_mor_delta(
+            "delete" if apply is None else "merge",  # an update: delete + insert
+            {"mode": "merge-on-read", "style": style, "predicate": predicate},
+            rows.selectExpr(*_POS_IDENTITY) if position else rows.select(*keys).distinct(),
+            None if position else keys,
+            None if apply is None else apply(rows).select(*target.columns),
         )
-
-    def _cow_rewrite_where(
-        self, target: DataFrame, pred, transform, operation: str, summary: dict
-    ) -> int:
-        """Partition-scoped copy-on-write rewrite for row-level DML: the
-        partitions containing predicate-matching rows are rewritten with
-        `transform` applied; untouched partitions' files stay in place
-        (masked per-partition like `_merge_cow_scoped`). Unpartitioned
-        tables rewrite the full state — the only correct COW granularity
-        without a partition spec."""
-        meta = self._load()
-        fields = self._part_fields(meta)
-        if not fields:
-            out = transform(target).select(*target.columns).localCheckpoint(eager=True)
-            return self.write(out, mode="overwrite", operation=operation)
-        schema = T.StructType.fromDDL(meta["schema"])
-        part_sel = [field_expr(f, schema).alias(f.name) for f in fields]
-        # capped touched-partition planning — see _merge_cow_scoped
-        cap = int(meta.get("properties", {}).get("write.cow.scope-cap", 10000))
-        parts_df = (
-            target.filter(pred).select(*part_sel).distinct().localCheckpoint(eager=True)
-        )
-        head_rows = _probe_collect(parts_df, cap)
-        capped = len(head_rows) > cap
-        parts = (
-            []
-            if capped
-            else [{c: _part_str(v) for c, v in r.asDict().items()} for r in head_rows]
-        )
-        snaps = meta["snapshots"]
-        sid = (snaps[-1]["snapshot_id"] + 1) if snaps else 1
-        prev = self._head(meta)
-        if not parts and not capped:  # nothing matches: metadata-only no-op commit
-            snaps.append(
-                {
-                    "snapshot_id": sid,
-                    "parent_id": prev["snapshot_id"] if prev else None,
-                    "made_current_at": self._clock(),
-                    "operation": operation,
-                    "dirs": [],
-                    "active_dirs": prev["active_dirs"] if prev else [],
-                    "partitions": [],
-                    "active_deletes": list(prev.get("active_deletes", [])) if prev else [],
-                    "summary": dict(summary, scoped_partitions=0),
-                }
-            )
-            self._advance(meta, "main", sid, None)
-            self._commit(meta)
-            return sid
-        if capped:
-            sub = self._mask_join(target, parts_df, fields, schema, "left_semi")
-        else:
-            sub = target.filter(self._partition_match_expr(parts, fields, schema))
-        out = transform(sub).select(*target.columns).localCheckpoint(eager=True)
-        rel, written_parts, files = self._write_data_dir(out, meta, sid)
-        mask_rel = self._write_mask_file(parts_df, sid) if capped else None
-        new_active = self._mask_active_dirs(prev, snaps, parts, mask_rel)
-        new_active.append(rel)
-        n_scoped = parts_df.count() if capped else len(parts)
-        snap_rec = {
-            "snapshot_id": sid,
-            "parent_id": prev["snapshot_id"] if prev else None,
-            "made_current_at": self._clock(),
-            "operation": operation,
-            "dirs": [rel],
-            "active_dirs": new_active,
-            "partitions": written_parts,
-            "files": files,
-            "active_deletes": list(prev.get("active_deletes", [])) if prev else [],
-            "summary": dict(summary, scoped_partitions=n_scoped),
-        }
-        if mask_rel:
-            snap_rec["mask_file"] = mask_rel
-            snap_rec["summary"]["scope"] = "mask-join"
-        snaps.append(snap_rec)
-        self._advance(meta, "main", sid, None)
-        self._commit(meta)
-        return sid
 
     # -- time travel + maintenance (north star: "time-travel and table
     # maintenance operations"; Iceberg equivalents noted per method) -------
@@ -3493,9 +3162,10 @@ class SnapshotTable:
         schema = self.schema()
         match = self._partition_match_expr(over, fields, schema)
         part_exprs = [field_expr(f, schema) for f in fields]
-        return self._cow_rewrite_where(
-            self.scan(),
-            match,
+        target = self.scan()
+        return self._rewrite_partitions(
+            target,
+            lambda cols: target.filter(match).select(*cols),
             # cluster the rewritten rows by partition value so each
             # overfull partition lands in ~1 write task → ~1 file
             lambda df: df.repartition(max(1, len(over)), *part_exprs),

@@ -3,10 +3,10 @@ the driver already holds.
 
 A merge source built on the driver (labels_df frames and unions of them)
 is read by value instead of checkpointed, unless its plan is
-nondeterministic; an unpartitioned copy-on-write merge hands its plan
-straight to the staged write; and a CDC micro-batch, mixed I/U/D, pure
-insert or pure delete, costs a flat number of jobs once the label store
-carries delete files. Job counts are read with
+nondeterministic; an unpartitioned copy-on-write merge, DELETE or
+UPDATE hands its plan straight to the staged write; and a CDC
+micro-batch, mixed I/U/D, pure insert or pure delete, costs a flat
+number of jobs once the label store carries delete files. Job counts are read with
 `dagScheduler().nextJobId()`, under the drains' micro-batch confs (AQE
 off: with AQE each shuffle stage is a job of its own).
 """
@@ -126,6 +126,53 @@ def test_cow_merge_writes_the_plan_without_a_checkpoint(spark, tmp_path):
 
     assert files(merged) == files(ckpt)
     assert sorted(map(tuple, merged.scan().collect())) == sorted(
+        map(tuple, ckpt.scan().collect())
+    )
+
+
+def _head_file_hashes(t) -> list:
+    out = os.path.join(t.root, t._head(t._load())["dirs"][0])
+    return sorted(
+        hashlib.sha256(open(os.path.join(d, f), "rb").read()).hexdigest()
+        for d, _, fs in os.walk(out)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+
+
+@pytest.mark.parametrize("op", ["delete", "update"])
+def test_cow_delete_update_write_the_plan_without_a_checkpoint(spark, tmp_path, op):
+    """An unpartitioned copy-on-write DELETE or UPDATE evaluates its plan
+    once, in write(): one job, the same files as checkpoint-then-write,
+    which takes one job more."""
+    ddl = "id bigint, category string, qty bigint"
+    rows = [(i, f"c{i % 3}", i) for i in range(30)]
+    tables = []
+    for tag in ("dml", "checkpoint"):
+        t = SnapshotTable.create(spark, str(tmp_path / tag), ddl)
+        t.write(spark.createDataFrame(rows, ddl).coalesce(1))
+        tables.append(t)
+    dml, ckpt = tables
+
+    j0 = _jobs(spark)
+    if op == "delete":
+        dml.delete_where("qty < 5")
+    else:
+        dml.update_where("id = 7", {"qty": "qty * 10"})
+    dml_jobs = _jobs(spark) - j0
+    assert dml_jobs == 1
+
+    target = ckpt.scan()
+    if op == "delete":
+        plan = target.filter(~F.coalesce(F.expr("qty < 5"), F.lit(False)))
+    else:
+        plan = target.withColumn("qty", F.when(F.expr("id = 7"), F.expr("qty * 10"))
+                                 .otherwise(F.col("qty")))
+    j0 = _jobs(spark)
+    ckpt.write(plan.localCheckpoint(eager=True), mode="overwrite", operation=op)
+    assert _jobs(spark) - j0 == dml_jobs + 1
+    assert _head_file_hashes(dml) == _head_file_hashes(ckpt)
+    assert sorted(map(tuple, dml.scan().collect())) == sorted(
         map(tuple, ckpt.scan().collect())
     )
 
