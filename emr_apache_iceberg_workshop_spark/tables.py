@@ -43,20 +43,22 @@ MERGE, DELETE, UPDATE and `delete_keys`) or the partition-scoped rewrite
 older dirs — COW MERGE, DELETE, UPDATE, `maintain` and
 `overwrite_partitions`).
 
-Scale: the table state is a list of parquet directories; Spark scans them
-as a multi-path parquet read with `basePath`, so partition pruning, column
-pruning, and predicate pushdown all work normally. Incremental reads scan
-only the snapshot directories in range — the same file-skipping effect as
-Iceberg's incremental scan. Every file the engine wrote is read with the
-schema the metadata records (data dirs: the table schema; equality
-deletes: their key fields; positional deletes: `file_rel, pos`; masks:
-the partition tuple), so building a scan launches no Spark job. A MOR
-scan tags each data row with its snapshot id parsed from the file path,
-and all delete files of a key set form one relation with their ids
-parsed the same way: every data dir anti-joins that one relation, AQE
-broadcasts it once, and the jobs a scan runs stay flat as history grows.
-Planning work still grows with the number of data dirs, one relation
-each (`tools/history_probe.py` measures both).
+Scale: the table state is a list of parquet directories. Every read goes
+through one reader, `_read_entries`: the state's dirs that share one read
+mapping (name mapping, partition layout, exclusions — normally all of
+them) are ONE multi-path parquet relation with `data/` as its partition
+base, so Spark plans and splits the state's files together, and
+partition pruning, column pruning and predicate pushdown all work
+normally. Incremental reads scan only the snapshot directories in range
+— the same file-skipping effect as Iceberg's incremental scan. Every file
+the engine wrote is read with the schema the metadata records (data dirs:
+the table schema; equality deletes: their key fields; positional
+deletes: `file_rel, pos`; masks: the partition tuple), so building a scan
+launches no Spark job. A MOR scan tags each data row with its snapshot
+id parsed from the file path, and all delete files of a key set form one
+relation with their ids parsed the same way: the data anti-joins that
+one relation, AQE broadcasts it once, and the jobs and scan tasks a scan
+runs stay flat as history grows (`tools/history_probe.py` measures both).
 """
 
 from __future__ import annotations
@@ -202,7 +204,7 @@ def _dir_sid(rel: str) -> int:
 
 
 # positional-delete file layout: (data file path relative to the table
-# root, row index in that file) — `_POS_IDENTITY` of `_positioned_rows`
+# root, row index in that file) — `_POS_IDENTITY` of a positioned scan
 _POS_DELETE_SCHEMA = T.StructType(
     [T.StructField("file_rel", T.StringType()), T.StructField("pos", T.LongType())]
 )
@@ -213,7 +215,7 @@ def _data_sid_expr(rel):
     """Column: the snapshot id of a data row's dir, parsed from its
     root-relative path `rel` (`data/s<id>/...`). A per-row expression,
     not a literal per dir: Catalyst cannot fold it into the delete side
-    of the MOR anti-join, so every dir's branch joins the SAME delete
+    of the MOR anti-join, so every data relation joins the SAME delete
     relation and AQE broadcasts it once (a literal sid made one filtered
     delete relation — and one broadcast job — per dir)."""
     return F.regexp_extract(rel, r"^data/s(\d+)/", 1).cast("long")
@@ -325,7 +327,7 @@ class SnapshotTable:
             meta["commit_seq"] = base + 1
             tmp = self._meta_path + f".tmp.{uuid.uuid4().hex}"
             with open(tmp, "w") as f:
-                json.dump(meta, f, indent=1)
+                json.dump(meta, f, separators=(",", ":"))  # compact: parsed by every load
             os.replace(tmp, self._meta_path)  # atomic snapshot swap
         finally:
             try:
@@ -950,16 +952,30 @@ class SnapshotTable:
         overwrite, Spark's own semantics for dynamic mode without
         partitions. Stale bases refuse with CommitConflict like every
         non-append commit."""
-        if self._load()["partition_by"]:
+        meta = self._load()
+        if meta["partition_by"]:
             df = df.localCheckpoint(eager=True)  # written + partition-scanned
         return self._rewrite_partitions(
-            self.scan(),
+            meta,
+            self._scan_head(meta),
             lambda cols: df.select(*cols),
             lambda _rows: df,
             "dynamic-overwrite",
             {"mode": "dynamic-partition-overwrite"},
             summary_extra,
             count_key="replaced_partitions",
+        )
+
+    def _overwrite(
+        self, meta: dict, df: DataFrame, operation: str, summary_extra: dict | None = None
+    ) -> int:
+        """Full overwrite of main committed against `meta`, the state
+        `df` was read from: if the table moved since, the commit refuses
+        with CommitConflict (`commit_staged`) instead of replacing rows
+        it never read."""
+        stage, part_names = self._stage_data_dir(df, meta)
+        return self.commit_staged(
+            stage, part_names, "overwrite", operation, summary_extra=summary_extra, meta=meta
         )
 
     _PA_SPARK_TYPES = {
@@ -1538,14 +1554,15 @@ class SnapshotTable:
     def evolve_partition_spec(self, partition_by: list[str]) -> int:
         """Change the partition layout for FUTURE writes as a
         METADATA-ONLY commit — no data rewrite, exactly like Iceberg spec
-        evolution. Old snapshot dirs keep their layout: every dir is read
-        with its own basePath, so partition columns resolve per-dir
-        regardless of spec, and partition-scoped COW masks remain
-        row-correct on old-layout dirs (the exclusion predicate compares
-        column VALUES — it simply isn't prune-accelerated there). Each
-        data dir's spec is whatever `partition_by` said when it was
-        written; `partitions_table` reports the mixed layouts as distinct
-        partition strings, like Iceberg's partitions table across specs."""
+        evolution. Old snapshot dirs keep their layout: the reader groups
+        dirs by the partition layout their manifest records, one relation
+        per layout, so partition columns resolve per dir regardless of
+        spec, and partition-scoped COW masks remain row-correct on
+        old-layout dirs (the exclusion predicate compares column VALUES —
+        it simply isn't prune-accelerated there). Each data dir's spec is
+        whatever `partition_by` said when it was written;
+        `partitions_table` reports the mixed layouts as distinct partition
+        strings, like Iceberg's partitions table across specs."""
         meta = self._load()
         cols = {f.name for f in T.StructType.fromDDL(meta["schema"]).fields}
         for f in parse_spec(partition_by):
@@ -1693,25 +1710,37 @@ class SnapshotTable:
 
     def _read_entries(
         self,
+        meta: dict,
         entries: list,
         schema: T.StructType | None = None,
         with_sid: bool = False,
         with_pos: bool = False,
         as_of: int | None = None,
+        files: dict[str, list[str]] | None = None,
     ) -> DataFrame:
-        """Union of per-dir reads. Dict entries carry partition-exclusion
-        masks (partitions rewritten by a later partition-scoped merge);
-        `with_sid` adds `__sid`, the snapshot id of the row's dir, so MOR
-        delete files can be applied with a sid-conditioned anti-join. It
-        is parsed per row from the file path (`_data_sid_expr`), never a
-        per-dir literal, so the anti-join's delete side stays one shared
-        relation. `with_pos` adds (__rel, __pos) — the row's physical
-        identity for positional deletes. Columns renamed AFTER a dir was
-        written are read under their historical name and aliased (Iceberg
-        reads by field id; this layer reads by the per-snapshot name
-        mapping — `as_of` bounds the mapping for time-travel reads)."""
-        meta = self._load()
-        schema = schema or self.schema()
+        """The one data reader: the rows of the active-dir `entries` of
+        `meta`, in `schema` (default: the table's). Dirs that share one
+        read mapping — each column's historical name (renames) or its
+        NULL read (`_births`), the partition directory layout they were
+        written with, and the same exclusion list and mask files — are
+        ONE parquet relation over all their dirs (`_read_files` with
+        `data/` as the partition base), so Spark plans a table state's
+        files together instead of one relation per dir; normally a table
+        has one such group. Partition columns resolve from the directory
+        names as before, so a filter on an identity-partition column
+        stays a partition filter. `with_sid` adds `__sid`, the snapshot
+        id of the row's dir (`_data_sid_expr`; a path expression, so the
+        MOR anti-join's delete side stays one shared relation), and
+        `with_pos` adds (__rel, __pos) — the row's physical identity for
+        positional deletes. Dict entries carry partition-exclusion masks
+        (partitions rewritten by a later partition-scoped merge). `as_of`
+        bounds the rename/birth mapping for time-travel reads (Iceberg
+        reads by field id; this layer by the per-snapshot name mapping).
+        `files` narrows each dir to planned files (dir rel -> root-
+        relative file paths; `scan_pruned`)."""
+        schema = schema or T.StructType.fromDDL(meta["schema"])
+        if files is not None:
+            entries = [e for e in entries if _entry_rel(e) in files]
         if not entries:
             df = self.spark.createDataFrame([], schema)
             if with_sid:
@@ -1724,49 +1753,57 @@ class SnapshotTable:
         all_fields = self._all_part_fields(meta)
         renames = self._renames(meta)
         births = self._births(meta, as_of)
-        mask_dfs: dict[str, DataFrame] = {}  # a mask file applies to many dirs
-        dfs = []
+        by_sid = {s["snapshot_id"]: s for s in meta["snapshots"]}
+        groups: dict[tuple, list] = {}
         for e in entries:
-            rel, excl = _entry_rel(e), _entry_excl(e)
-            p = os.path.join(self.root, rel)
+            rel = _entry_rel(e)
             dsid = _dir_sid(rel)
-            hist = [
-                (self._name_at(renames, dsid, f.name, as_of), f)
+            # per column: the name the dir's files carry it under, or None
+            # when the column was (re)created AFTER the dir was written —
+            # it reads NULL even if the file holds a same-named column from
+            # a previous drop/re-add life (Iceberg field-id semantics)
+            mapping = tuple(
+                None if births.get(f.name, 0) > dsid
+                else self._name_at(renames, dsid, f.name, as_of)
                 for f in schema.fields
-            ] if renames else [(f.name, f) for f in schema.fields]
-            # a column (re)created AFTER this dir was written did not
-            # exist as this logical column then: it reads NULL even if
-            # the file carries a same-named column from a previous
-            # drop/re-add life (Iceberg field-id semantics — see _births)
-            force_null = {
-                f.name for f in schema.fields if births.get(f.name, 0) > dsid
-            }
-            read_schema = T.StructType(
-                [
-                    T.StructField(hn, f.dataType, f.nullable)
-                    for hn, f in hist
-                    if f.name not in force_null
-                ]
             )
-            # basePath per snapshot dir so partition columns resolve
-            df = self.spark.read.option("basePath", p).schema(read_schema).parquet(p)
+            # the partition columns of the dir's layout, as its manifest
+            # recorded them from disk: one relation cannot mix layouts
+            dfiles = self._dir_manifest(meta, by_sid, rel).get("files") or [{}]
+            layout = tuple(dfiles[0].get("partition", {}))
+            key = (mapping, layout, json.dumps(_entry_excl(e)), tuple(_entry_masks(e)))
+            groups.setdefault(key, []).append(e)
+        mask_dfs: dict[str, DataFrame] = {}  # a mask file applies to many groups
+        rel_col = self._rel_path_expr()
+        out = None
+        for (mapping, *_), group in groups.items():
+            excl, masks = _entry_excl(group[0]), _entry_masks(group[0])
+            rels = [_entry_rel(e) for e in group]
+            read_schema = T.StructType([
+                T.StructField(hn, f.dataType, f.nullable)
+                for f, hn in zip(schema.fields, mapping)
+                if hn is not None
+            ])
             # alias historical names back to the requested schema, and drop
             # the derived directory column hidden-partition dirs append
             sel = [
-                F.lit(None).cast(f.dataType).alias(f.name)
-                if f.name in force_null
-                else F.col(hn).alias(f.name)
-                for hn, f in hist
-            ] + self._identity_cols(with_sid, with_pos)
-            df = df.select(*sel)
+                (F.lit(None).cast(f.dataType) if hn is None else F.col(hn)).alias(f.name)
+                for f, hn in zip(schema.fields, mapping)
+            ]
+            if with_sid:
+                sel.append(_data_sid_expr(rel_col).alias("__sid"))
+            if with_pos:
+                sel += [rel_col.alias("__rel"), F.col("_metadata.row_index").alias("__pos")]
+            paths = rels if files is None else [p for r in rels for p in files[r]]
+            df = self._read_files(paths, read_schema, cols=sel, base="data")
             if excl:
                 # exclusion re-derives partition values from data columns
                 # (identity: the column itself → partition pruning drops
                 # masked subtrees at planning time; transformed: the
                 # transform expression, row-filtered)
                 df = df.filter(~self._partition_match_expr(excl, all_fields, schema))
-            for mrel in _entry_masks(e):
-                # mask-FILE exclusion (capped COW): anti-join the dir's
+            for mrel in masks:
+                # mask-FILE exclusion (capped COW): anti-join the group's
                 # rows against the touched-partition parquet — no inline
                 # list, no giant predicate, any cardinality
                 if mrel not in mask_dfs:
@@ -1776,45 +1813,44 @@ class SnapshotTable:
                 df = self._mask_join(
                     df, mask_dfs[mrel], all_fields, schema, "left_anti"
                 )
-            dfs.append(df)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
+            out = df if out is None else out.unionByName(df)
         return out
 
-    def _identity_cols(self, with_sid: bool, with_pos: bool) -> list:
-        """The internal row-identity columns a data read carries: `__sid`
-        (see `_data_sid_expr`) and the positional (`__rel`, `__pos`)."""
-        rel = self._rel_path_expr()
-        cols = [_data_sid_expr(rel).alias("__sid")] if with_sid else []
-        if with_pos:
-            cols += [rel.alias("__rel"), F.col("_metadata.row_index").alias("__pos")]
-        return cols
-
-    def _read_dirs(self, rels: list[str], schema: T.StructType | None = None) -> DataFrame:
-        return self._read_entries(rels, schema=schema)
-
     def _read_files(
-        self, rels: list[str], schema: T.StructType, with_sid: bool = False
+        self, rels: list[str], schema: T.StructType, cols: list | None = None,
+        base: str | None = None,
     ) -> DataFrame:
-        """One relation over engine-written delete or mask dirs, read
-        with the schema metadata records for them — never an inferring
-        read (parquet schema inference is one Spark job per read).
-        `with_sid` adds `__file_sid`, the id in each file's `s<id>` dir.
-        Spark lists more paths than `parallelPartitionDiscovery.threshold`
-        with a Spark job, so a longer list is read as a union of scans of
-        at most that many dirs — still one relation to the plan above."""
+        """One relation over engine-written dirs or files, read with the
+        schema metadata records for them — never an inferring read
+        (parquet schema inference is one Spark job per read). `base` (a
+        root-relative dir, `data` for data reads) is the partition
+        discovery base: the `key=value` dirs below each `s<id>` dir
+        resolve as partition columns, and the `s<id>` segments
+        themselves — not `key=value` — are passed over
+        (`ignoreInvalidPartitionPaths`) instead of failing the read as
+        conflicting directory structures; callers keep one partition
+        layout per relation. `cols` projects each scan before the union:
+        the hidden `_metadata` column (file path, row index) resolves
+        only directly over a file relation. Spark lists more paths than
+        `parallelPartitionDiscovery.threshold` with a Spark job, so a
+        longer list is read as a union of scans of at most that many
+        paths — still one relation to the plan above."""
         n = int(
             self.spark.conf.get(
                 "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"
             )
         )
         paths = [os.path.join(self.root, r) for r in rels]
+        reader = self.spark.read.schema(schema)
+        if base is not None:
+            reader = reader.option("basePath", os.path.join(self.root, base)).option(
+                "ignoreInvalidPartitionPaths", "true"
+            )
         out = None
         for i in range(0, len(paths), n):
-            one = self.spark.read.schema(schema).parquet(*paths[i : i + n])
-            if with_sid:
-                one = one.withColumn("__file_sid", _file_sid_expr())
+            one = reader.parquet(*paths[i : i + n])
+            if cols:
+                one = one.select(*cols)
             out = one if out is None else out.unionByName(one)
         return out
 
@@ -1855,7 +1891,7 @@ class SnapshotTable:
         return T.StructType([T.StructField(f.name, f.dataType) for f in derived.fields])
 
     def _apply_deletes(
-        self, df: DataFrame, deletes: list, keep_identity: bool = False
+        self, meta: dict, df: DataFrame, deletes: list, keep_identity: bool = False
     ) -> DataFrame:
         """MOR read path: suppress any row whose key appears in a delete
         file COMMITTED AFTER the row's own snapshot (equality deletes with
@@ -1864,8 +1900,8 @@ class SnapshotTable:
         files are ONE relation read with the key schema metadata records
         (no inference job), `__del_sid` parsed from each file's path.
         The data side's `__sid` is a per-row path expression too, so the
-        sid condition stays in the join: every data dir's union branch
-        anti-joins the same delete relation and AQE broadcasts it once —
+        sid condition stays in the join: every data relation anti-joins
+        the same delete relation and AQE broadcasts it once —
         the scan's job count does not grow with the table's history. The
         delete side is the accumulated merge keys — small relative to
         data and compacted away by `compact()`."""
@@ -1886,7 +1922,6 @@ class SnapshotTable:
                 "left_anti",
             )
         deletes = [d for d in deletes if d.get("style") != "position"]
-        meta = self._load() if deletes else None
         # one relation per key set (and key typing — only a drop and
         # re-add of a key column could split one); each schema version
         # is parsed once
@@ -1899,10 +1934,10 @@ class SnapshotTable:
         for (keys, ddl), files in by_ddl.items():
             by_keys.setdefault((keys, self._key_schema(ddl, keys)), []).extend(files)
         for (keys, kschema), files in by_keys.items():
-            dels = self._read_files(files, kschema, with_sid=True).select(
+            dels = self._read_files(files, kschema, cols=[
                 *[F.col(k).alias(f"__del_{k}") for k in keys],
-                F.col("__file_sid").alias("__del_sid"),
-            )
+                _file_sid_expr().alias("__del_sid"),
+            ])
             cond = F.col("__del_sid") > F.col("__sid")
             for k in keys:
                 cond = cond & (F.col(k) == F.col(f"__del_{k}"))
@@ -1912,7 +1947,7 @@ class SnapshotTable:
         return df.drop("__sid", "__rel", "__pos")
 
     def _positional_preimages(
-        self, prev_snap: dict | None, schema: T.StructType, drel: str
+        self, meta: dict, prev_snap: dict | None, schema: T.StructType, drel: str
     ) -> DataFrame:
         """Full pre-image rows for a positional delete file: the prior
         snapshot's rows at the recorded (file_rel, pos) identities."""
@@ -1921,15 +1956,7 @@ class SnapshotTable:
         pairs = self._read_files([drel], _POS_DELETE_SCHEMA).select(
             F.col("file_rel").alias("__del_rel"), F.col("pos").alias("__del_pos")
         )
-        deletes = prev_snap.get("active_deletes", [])
-        df = self._read_entries(
-            prev_snap["active_dirs"],
-            schema=schema,
-            with_sid=bool(deletes),
-            with_pos=True,
-        )
-        if deletes:
-            df = self._apply_deletes(df, deletes, keep_identity=True)
+        df = self._scan_snapshot(meta, prev_snap, schema, as_of=None, positioned=True)
         matched = df.join(
             pairs,
             (F.col("__rel") == F.col("__del_rel"))
@@ -1938,41 +1965,54 @@ class SnapshotTable:
         )
         return matched.select(*[f.name for f in schema.fields])
 
-    def _positioned_rows(self) -> DataFrame:
-        """Current-state rows with their physical identity (`__rel`,
-        `__pos`); `selectExpr(*_POS_IDENTITY)` of the rows a positional delete
-        removes is the content of its delete file."""
-        head = self._head(self._load())
-        deletes = head.get("active_deletes", []) if head else []
-        df = self._read_entries(
-            head["active_dirs"] if head else [],
-            schema=self.schema(),
-            with_sid=bool(deletes),
-            with_pos=True,
-        )
-        if deletes:
-            df = self._apply_deletes(df, deletes, keep_identity=True)
-        return df
-
     _AS_OF_SNAP = object()  # sentinel: default the rename bound to the snapshot
 
     def _scan_snapshot(
-        self, snap: dict, schema: T.StructType, as_of=_AS_OF_SNAP
+        self, meta: dict, snap: dict, schema: T.StructType, as_of=_AS_OF_SNAP,
+        positioned: bool = False, files: dict[str, list[str]] | None = None,
     ) -> DataFrame:
+        """Rows of snapshot `snap` of `meta`: its active dirs through
+        `_read_entries`, minus its delete files. `positioned` keeps each
+        row's physical identity (`__rel`, `__pos`): `selectExpr(
+        *_POS_IDENTITY)` of the rows a positional delete removes is the
+        content of its delete file. `files`: see `_read_entries`."""
         if as_of is self._AS_OF_SNAP:
             as_of = snap["snapshot_id"]
         deletes = snap.get("active_deletes", [])
-        has_pos = any(d.get("style") == "position" for d in deletes)
         df = self._read_entries(
+            meta,
             snap["active_dirs"],
             schema=schema,
             with_sid=bool(deletes),
-            with_pos=has_pos,
+            with_pos=positioned or any(d.get("style") == "position" for d in deletes),
             as_of=as_of,
+            files=files,
         )
         if deletes:
-            df = self._apply_deletes(df, deletes)
+            df = self._apply_deletes(meta, df, deletes, keep_identity=positioned)
         return df
+
+    def _scan_head(
+        self, meta: dict, branch: str = "main", positioned: bool = False,
+        files: dict[str, list[str]] | None = None,
+    ) -> DataFrame:
+        """`scan()` of the state `meta` records. Mutations build their
+        target with it from the same `meta` they commit against, so an
+        append that lands in between fails their CAS instead of being
+        rewritten away. Iceberg's branch/tag schema rule: BRANCH reads use
+        the TABLE's current schema (branches are writable — writes
+        validate against the current schema, so reads must use it too or
+        a branch write immediately followed by a branch read would not
+        round-trip; found by the table-model fuzz, seed 8080, once
+        add/drop ops interleaved between the fork and a branch write).
+        TAGS and VERSION AS OF keep the snapshot's schema (`scan_at`).
+        as_of=None applies the full rename log, exactly like a main scan
+        — the per-dir historical-name mapping handles old dirs."""
+        head = self._head(meta, branch) or {"active_dirs": []}
+        return self._scan_snapshot(
+            meta, head, T.StructType.fromDDL(meta["schema"]), as_of=None,
+            positioned=positioned, files=files,
+        )
 
     # One table model, two interchangeable scan implementations: the
     # native DataFrame pipeline below, or the registered `eiws` Python
@@ -2014,19 +2054,7 @@ class SnapshotTable:
         (Iceberg `VERSION AS OF 'branch'` / branch_<name> read)."""
         if self._via_format():
             return self._format_scan(branch=branch)
-        head = self._head(self._load(), branch)
-        if head is None:
-            return self.spark.createDataFrame([], self.schema())
-        # Iceberg's branch/tag schema rule: BRANCH reads use the TABLE's
-        # current schema (branches are writable — writes validate against
-        # the current schema, so reads must use it too or a branch write
-        # immediately followed by a branch read would not round-trip;
-        # found by the table-model fuzz, seed 8080, once add/drop ops
-        # interleaved between the fork and a branch write). TAGS and
-        # VERSION AS OF keep the snapshot's schema (scan_at below).
-        # as_of=None applies the full rename log, exactly like a main
-        # scan — per-dir historical-name mapping handles old dirs.
-        return self._scan_snapshot(head, self.schema(), as_of=None)
+        return self._scan_head(self._load(), branch)
 
     def scan_incremental(self, start_snapshot_id: int | None, end_snapshot_id: int) -> DataFrame:
         """Rows appended in (start, end] — Iceberg incremental-read semantics
@@ -2070,7 +2098,7 @@ class SnapshotTable:
             raise ValueError(
                 f"incremental range ({lo}, {end_snapshot_id}] spans expired snapshots"
             )
-        return self._read_dirs(rels)
+        return self._read_entries(meta, rels)
 
     def changes(
         self,
@@ -2120,12 +2148,12 @@ class SnapshotTable:
                     ]
                 )
             elif full_preimages:
-                prior = self._scan_snapshot(prev_snap, schema)
+                prior = self._scan_snapshot(meta, prev_snap, schema)
                 pre = prior.join(
                     dels.select(*keys).distinct(), list(keys), "left_semi"
                 ).select(*cols)
             else:
-                prior_keys = self._scan_snapshot(prev_snap, schema).select(*keys)
+                prior_keys = self._scan_snapshot(meta, prev_snap, schema).select(*keys)
                 pre = dels.join(prior_keys, list(keys), "left_semi").select(
                     *[
                         F.col(c) if c in keys else F.lit(None).cast(f.dataType).alias(c)
@@ -2158,7 +2186,7 @@ class SnapshotTable:
                 prev_snap = s
                 continue  # metadata-only / physical-layout-only commits
             if op in ("append", "create"):
-                df = self._read_dirs(s["dirs"], schema=schema)
+                df = self._read_entries(meta, s["dirs"], schema=schema)
             elif op == "delete" and s.get("delete_file"):
                 # MOR row-level delete: pre-image delete rows only, no
                 # inserts. Equality deletes carry the key columns (others
@@ -2169,7 +2197,7 @@ class SnapshotTable:
                 )
                 if dentry.get("style") == "position":
                     pre = self._positional_preimages(
-                        prev_snap, schema, s["delete_file"]
+                        meta, prev_snap, schema, s["delete_file"]
                     )
                     frames.append(
                         pre.select(
@@ -2187,13 +2215,13 @@ class SnapshotTable:
                 prev_snap = s
                 continue
             elif op == "merge" and s.get("delete_file"):
-                df = self._read_dirs(s["dirs"], schema=schema)
+                df = self._read_entries(meta, s["dirs"], schema=schema)
                 dentry = next(
                     d for d in s["active_deletes"] if d["sid"] == sid
                 )
                 if dentry.get("style") == "position":
                     pre = self._positional_preimages(
-                        prev_snap, schema, s["delete_file"]
+                        meta, prev_snap, schema, s["delete_file"]
                     )
                     frames.append(
                         pre.select(
@@ -2469,14 +2497,13 @@ class SnapshotTable:
         )
         if not pos_dels:
             return self.spark.createDataFrame([], schema)
-        return self._read_files(
-            [d["file"] for d in pos_dels], _POS_DELETE_SCHEMA, with_sid=True
-        ).select(
+        sid = _file_sid_expr()
+        return self._read_files([d["file"] for d in pos_dels], _POS_DELETE_SCHEMA, cols=[
             F.col("file_rel").alias("file_path"),
             "pos",
-            F.concat(F.lit("deletes/s"), F.col("__file_sid")).alias("delete_file"),
-            F.col("__file_sid").alias("delete_snapshot_id"),
-        )
+            F.concat(F.lit("deletes/s"), sid).alias("delete_file"),
+            sid.alias("delete_snapshot_id"),
+        ])
 
     def entries_table(self) -> DataFrame:
         """Metadata table (`<table>.entries` analogue): one row per
@@ -2633,10 +2660,11 @@ class SnapshotTable:
           key (an update that MOVES a row rewrites both). Unpartitioned,
           a full-state rewrite.
         """
-        mode = self.properties().get("write.merge.mode", "copy-on-write")
-        target = self.scan()
-        src = source.select(*[c for c in target.columns if c in source.columns],
-                            *([op_col] if op_col and op_col not in target.columns else []))
+        meta = self._load()
+        mode = meta.get("properties", {}).get("write.merge.mode", "copy-on-write")
+        cols = [f.name for f in T.StructType.fromDDL(meta["schema"]).fields]
+        src = source.select(*[c for c in cols if c in source.columns],
+                            *([op_col] if op_col and op_col not in cols else []))
         if mode == "merge-on-read":
             # materialize the SOURCE once: the data write and the key write
             # both read it; a lazy plan would re-run it per consumer (it may
@@ -2655,11 +2683,13 @@ class SnapshotTable:
             # every source key (incl. deletes) suppresses older rows of that key
             return self._commit_mor_delta(
                 "merge", dict({"mode": "merge-on-read"}, **(summary_extra or {})),
-                src.select(*keys).distinct(), keys, data=upserts.select(*target.columns),
+                src.select(*keys).distinct(), keys, data=upserts.select(*cols),
             )
-        if self._load()["partition_by"]:
+        if meta["partition_by"]:
             src = src.localCheckpoint(eager=True)  # the scoped rewrite reads it 3x
+        target = self._scan_head(meta)
         return self._rewrite_partitions(
+            meta,
             target,
             # one key semi-join over the partition columns of the target scan
             lambda cols: src.select(*cols).distinct().unionByName(
@@ -2703,6 +2733,7 @@ class SnapshotTable:
 
     def _rewrite_partitions(
         self,
+        meta: dict,
         target: DataFrame,
         touched,
         rewrite,
@@ -2727,16 +2758,16 @@ class SnapshotTable:
         Nothing touched: a metadata-only no-op commit.
 
         Unpartitioned tables rewrite the full state (the only correct COW
-        granularity without a spec) via `write(mode="overwrite")`. No
+        granularity without a spec) as a full overwrite (`_overwrite`).
+        `target` must be read from `meta` (`_scan_head`), the state every
+        route commits against: an append that lands after the scan fails
+        the CAS with CommitConflict instead of being rewritten away. No
         route checkpoints the plan: the staged write evaluates it once
-        before the metadata swap, the dirs it reads are immutable, and an
-        overwrite refuses a stale base with CommitConflict."""
-        meta = self._load()
+        before the metadata swap and the dirs it reads are immutable."""
         fields = self._part_fields(meta)
         if not fields:
-            return self.write(
-                rewrite(target).select(*target.columns), mode="overwrite",
-                operation=operation, summary_extra=summary_extra,
+            return self._overwrite(
+                meta, rewrite(target).select(*target.columns), operation, summary_extra
             )
         schema = T.StructType.fromDDL(meta["schema"])
         parts_df = touched(
@@ -2831,12 +2862,14 @@ class SnapshotTable:
           what Spark's own MOR DELETE writes) records (file_rel, pos) row
           identities from the parquet `_metadata` column instead.
         """
-        mode = self.properties().get("write.delete.mode", "copy-on-write")
-        target = self.scan()
+        meta = self._load()
+        mode = meta.get("properties", {}).get("write.delete.mode", "copy-on-write")
         if mode == "merge-on-read":
-            return self._mor_where(target, predicate, keys)
+            return self._mor_where(meta, predicate, keys)
+        target = self._scan_head(meta)
         pred = F.expr(predicate)
         return self._rewrite_partitions(
+            meta,
             target,
             lambda cols: target.filter(pred).select(*cols),
             lambda rows: rows.filter(~F.coalesce(pred, F.lit(False))),
@@ -2895,8 +2928,8 @@ class SnapshotTable:
           `keys` or `write.delete.style=position` as in `delete_where`) —
           O(matching) cost, folded by `compact()`.
         """
-        target = self.scan()
-        schema = {f.name: f.dataType for f in self.schema().fields}
+        meta = self._load()
+        schema = {f.name: f.dataType for f in T.StructType.fromDDL(meta["schema"]).fields}
         for c in assignments:
             if c not in schema:
                 raise ValueError(f"unknown column {c!r}")
@@ -2909,16 +2942,19 @@ class SnapshotTable:
                 for c, e in assignments.items()
             })
 
-        if self.properties().get("write.update.mode", "copy-on-write") == "merge-on-read":
-            return self._mor_where(target, predicate, keys, apply)
+        props = meta.get("properties", {})
+        if props.get("write.update.mode", "copy-on-write") == "merge-on-read":
+            return self._mor_where(meta, predicate, keys, apply)
+        target = self._scan_head(meta)
         return self._rewrite_partitions(
+            meta,
             target,
             lambda cols: target.filter(pred).select(*cols),
             apply,
             "update", {"mode": "copy-on-write", "predicate": predicate},
         )
 
-    def _mor_where(self, target: DataFrame, predicate: str, keys, apply=None) -> int:
+    def _mor_where(self, meta: dict, predicate: str, keys, apply=None) -> int:
         """Merge-on-read DELETE (`apply` None) or UPDATE as one delta
         commit: a delete file of the matching rows' pre-images — THEIR
         `keys`, or under `write.delete.style=position` their (file_rel,
@@ -2927,7 +2963,7 @@ class SnapshotTable:
         and the post-images come from the same rows, and an assignment to
         a key column deletes the old key, never a row already holding the
         new one. (Appended files have new paths: no position collides.)"""
-        style = self.properties().get("write.delete.style", "equality")
+        style = meta.get("properties", {}).get("write.delete.style", "equality")
         position = style == "position"
         if not position and not keys:
             raise ValueError(
@@ -2935,7 +2971,7 @@ class SnapshotTable:
                 "`keys` naming the row-identifying columns for the "
                 "equality-delete file (or set write.delete.style=position)"
             )
-        rows = (self._positioned_rows() if position else target).filter(F.expr(predicate))
+        rows = self._scan_head(meta, positioned=position).filter(F.expr(predicate))
         if apply is not None:
             rows = rows.localCheckpoint(eager=True)
         return self._commit_mor_delta(
@@ -2943,7 +2979,9 @@ class SnapshotTable:
             {"mode": "merge-on-read", "style": style, "predicate": predicate},
             rows.selectExpr(*_POS_IDENTITY) if position else rows.select(*keys).distinct(),
             None if position else keys,
-            None if apply is None else apply(rows).select(*target.columns),
+            None if apply is None else apply(rows).select(
+                *[f.name for f in T.StructType.fromDDL(meta["schema"]).fields]
+            ),
         )
 
     # -- time travel + maintenance (north star: "time-travel and table
@@ -3001,8 +3039,8 @@ class SnapshotTable:
         schema, exclusion masks, and delete files as of that snapshot."""
         if self._via_format():
             return self._format_scan(**{"snapshot-id": ref})
+        meta = self._load()
         if isinstance(ref, str):
-            meta = self._load()
             tags = meta.get("tags", {})
             branches = meta.get("branches", {})
             if ref in tags:
@@ -3011,9 +3049,11 @@ class SnapshotTable:
                 ref = branches[ref]
             else:
                 raise ValueError(f"unknown ref {ref!r}")
-        for s in self._load()["snapshots"]:
+        for s in meta["snapshots"]:
             if s["snapshot_id"] == ref:
-                return self._scan_snapshot(s, self.schema_at(ref))
+                return self._scan_snapshot(
+                    meta, s, T.StructType.fromDDL(self._ddl_at(meta, ref))
+                )
         raise ValueError(f"unknown snapshot {ref}")
 
     def scan_as_of(self, ts) -> DataFrame:
@@ -3040,7 +3080,9 @@ class SnapshotTable:
         lineage = self._lineage(meta, head["snapshot_id"])  # newest first
         for s in lineage:
             if float(s["made_current_at"]) <= float(ts):
-                return self._scan_snapshot(s, self.schema_at(s["snapshot_id"]))
+                return self._scan_snapshot(
+                    meta, s, T.StructType.fromDDL(self._ddl_at(meta, s["snapshot_id"]))
+                )
         raise ValueError(
             f"no snapshot at or before {ts} (oldest retained: "
             f"{float(lineage[-1]['made_current_at'])})"
@@ -3068,9 +3110,9 @@ class SnapshotTable:
         range-repartition any sorted rewrite pays. Commits a `compact`
         snapshot; readers at old snapshots still see the old files until
         expiration."""
-        df = self.scan()
-        n = target_partitions or max(1, self.spark.sparkContext.defaultParallelism // 4)
         meta = self._load()
+        df = self._scan_head(meta)
+        n = target_partitions or max(1, self.spark.sparkContext.defaultParallelism // 4)
         fields = self._part_fields(meta)
         # Partitioned tables: every rewrite strategy must cluster rows by
         # the partition key FIRST (hidden transforms included, same
@@ -3129,7 +3171,7 @@ class SnapshotTable:
         else:
             squashed = df.coalesce(n)
         squashed = squashed.localCheckpoint(eager=True)
-        return self.write(squashed, mode="overwrite", operation="compact")
+        return self._overwrite(meta, squashed, "compact")
 
     def maintain(self, max_files_per_partition: int = 4) -> int | None:
         """Targeted small-file compaction (the auto-maintenance policy a
@@ -3148,7 +3190,7 @@ class SnapshotTable:
 
         meta = self._load()
         fields = self._part_fields(meta)
-        live = self._live_files()
+        live = self._live_files(meta)
         if not fields:
             if len(live) <= max_files_per_partition:
                 return None
@@ -3159,11 +3201,12 @@ class SnapshotTable:
         over = [dict(k) for k, c in counts.items() if c > max_files_per_partition]
         if not over:
             return None
-        schema = self.schema()
+        schema = T.StructType.fromDDL(meta["schema"])
         match = self._partition_match_expr(over, fields, schema)
         part_exprs = [field_expr(f, schema) for f in fields]
-        target = self.scan()
+        target = self._scan_head(meta)
         return self._rewrite_partitions(
+            meta,
             target,
             lambda cols: target.filter(match).select(*cols),
             # cluster the rewritten rows by partition value so each
@@ -3177,10 +3220,11 @@ class SnapshotTable:
         )
 
     # -- manifest-level file pruning (Iceberg scan planning) ---------------
-    def _live_files(self) -> list[tuple[str, dict]]:
+    def _live_files(self, meta: dict | None = None) -> list[tuple[str, dict]]:
         """(dir_rel, manifest entry) for every data file live in the
-        current snapshot — active dirs minus partition-exclusion masks."""
-        meta = self._load()
+        current snapshot of `meta` (default: a fresh load) — active dirs
+        minus partition-exclusion masks."""
+        meta = meta or self._load()
         snaps = meta["snapshots"]
         head = self._head(meta)
         if not snaps or head is None:  # empty main (branch-only WAP table)
@@ -3301,45 +3345,13 @@ class SnapshotTable:
         return self._scan_files(kept)
 
     def _scan_files(self, kept: list[tuple[str, dict]]) -> DataFrame:
-        """Assemble the current-state DataFrame from a planned file list
-        (shared by `scan_pruned` / `scan_pruned_in`)."""
-        schema = self.schema()
-        by_dir: dict[str, list[str]] = {}
+        """The current state read through `_read_entries` narrowed to a
+        planned file list (shared by `scan_pruned` / `scan_pruned_in`):
+        same name mapping, partition parse and delete files as `scan()`."""
+        files: dict[str, list[str]] = {}
         for rel, f in kept:
-            by_dir.setdefault(rel, []).append(os.path.join(self.root, f["path"]))
-        head = self._head(self._load())
-        deletes = head.get("active_deletes", []) if (kept and head) else []
-        has_pos = any(d.get("style") == "position" for d in deletes)
-        if not by_dir:
-            return self.spark.createDataFrame([], schema)
-        dfs = []
-        renames = self._renames(self._load())
-        for rel, paths in sorted(by_dir.items()):
-            dsid = _dir_sid(rel)
-            hist = [
-                (self._name_at(renames, dsid, f.name, None), f)
-                for f in schema.fields
-            ]
-            read_schema = T.StructType(
-                [T.StructField(hn, f.dataType, f.nullable) for hn, f in hist]
-            )
-            df = (
-                self.spark.read.option("basePath", os.path.join(self.root, rel))
-                .schema(read_schema)
-                .parquet(*paths)
-            )
-            # alias historical names to current; drops hidden-partition cols
-            df = df.select(
-                *[F.col(hn).alias(f.name) for hn, f in hist],
-                *self._identity_cols(bool(deletes), has_pos),
-            )
-            dfs.append(df)
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        if deletes:
-            out = self._apply_deletes(out, deletes)
-        return out
+            files.setdefault(rel, []).append(f["path"])
+        return self._scan_head(self._load(), files=files)
 
     def expire_snapshots(
         self, keep_last: int = 1, older_than: float | None = None

@@ -8,7 +8,8 @@ unpartitioned table (`tools/mutation_probe.py` holds the cases; the
 budgets are the counts measured before the kernels were shared, the
 unpartitioned COW DELETE/UPDATE one job lower since they write their
 plan without a checkpoint), UPDATE semantics that must agree across the
-write modes, and the scoped session-conf helper.
+write modes, that a partition-scoped rewrite commits against the state
+it scanned, and the scoped session-conf helper.
 """
 
 from __future__ import annotations
@@ -16,8 +17,8 @@ from __future__ import annotations
 import pytest
 
 from emr_apache_iceberg_workshop_spark.session import scoped_confs
-from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
-from tools.mutation_probe import CASES, base_table, make_table, run_case
+from emr_apache_iceberg_workshop_spark.tables import CommitConflict, SnapshotTable
+from tools.mutation_probe import CASES, DDL as PROBE_DDL, base_table, make_table, run_case
 
 # case -> (unpartitioned, partitioned) job budget
 _BUDGET = {
@@ -140,6 +141,43 @@ def test_empty_overwrite_is_a_metadata_only_commit(spark, tmp_path, base_tables)
     assert head["dirs"] == [] and head["active_dirs"] == before["active_dirs"]
     assert head["operation"] == "dynamic-overwrite"
     assert head["summary"]["replaced_partitions"] == 0
+
+
+# one appended row per partition: every rewrite touches at least one
+_RACING_ROWS = [(97, "c0", 97), (98, "c1", 98), (99, "c2", 99)]
+
+
+@pytest.mark.parametrize(
+    "case, partitioned",
+    [("cow_merge", False), ("cow_merge", True), ("overwrite_partitions", True)]
+    # the same kernel entry as the partitioned merge
+    + [pytest.param(c, True, marks=pytest.mark.slow)
+       for c in ("cow_delete", "cow_update", "maintain")],
+)
+def test_rewrite_keeps_an_append_that_lands_after_its_scan(
+    spark, tmp_path, base_tables, monkeypatch, case, partitioned
+):
+    """A second handle appends while a copy-on-write rewrite runs, after
+    the rewrite has built its target scan and before it commits. The
+    rewrite must commit against the state it scanned: it refuses with
+    CommitConflict (or commits), and the appended rows are never masked
+    or overwritten away."""
+    t = make_table(spark, str(tmp_path / "t"), case, partitioned, base_tables[partitioned])
+    other = SnapshotTable(spark, t.root)
+    rewrite = SnapshotTable._rewrite_partitions
+
+    def racing(self, *args, **kwargs):
+        other.write(spark.createDataFrame(_RACING_ROWS, PROBE_DDL))
+        return rewrite(self, *args, **kwargs)
+
+    monkeypatch.setattr(SnapshotTable, "_rewrite_partitions", racing)
+    try:
+        CASES[case][1](spark, t)
+    except CommitConflict:
+        pass
+    monkeypatch.undo()
+    state = set(map(tuple, SnapshotTable(spark, t.root).scan().collect()))
+    assert set(_RACING_ROWS) <= state
 
 
 def test_scoped_confs_restore_on_error(spark):
