@@ -376,7 +376,7 @@ def iceberg_schema(spark_schema) -> tuple[dict, dict[str, int]]:
 
 
 def _partition_value(raw: str | None, iceberg_type: str, transform: str = "identity"):
-    """Hive-dir partition string → typed Iceberg partition value.
+    """Raw (hive-unescaped) partition string → typed Iceberg partition value.
     Transformed fields store Iceberg's canonical representations: day as
     an Avro date (days since epoch), hour/month/year as int offsets from
     1970 (the directory strings are '2024-01-02-05' / '2024-01' / '2024')."""
@@ -565,40 +565,6 @@ def _manifest_list_schema(fv: int = 1) -> dict:
 _MANIFEST_LIST_SCHEMA = _manifest_list_schema(1)
 
 
-def _snapshot_files(
-    meta: dict, snap: dict, allow_deletes: bool = False, root: str | None = None
-) -> list[tuple[dict, int]] | None:
-    """File-level state of one committed snapshot (exclusion masks
-    resolved) as (file entry, owning-dir snapshot id) pairs — the dir id
-    is the file's SEQUENCE NUMBER in v2 emission, and the key the
-    emitter resolves the file's PARTITION SPEC from (files written under
-    an earlier spec go into that spec's own manifest). None when the
-    state is not representable: active MOR deletes under v1
-    (`allow_deletes` False)."""
-    if snap.get("active_deletes") and not allow_deletes:
-        return None
-    from .tables import _entry_excl_full
-
-    by_sid = {s["snapshot_id"]: s for s in meta["snapshots"]}
-    out: list[tuple[dict, int]] = []
-    for e in snap["active_dirs"]:
-        rel = e if isinstance(e, str) else e["dir"]
-        # inline + mask-file exclusion tuples (capped-COW states carry
-        # the touched-partition set as a parquet mask, not inline)
-        excl = _entry_excl_full(root, e) if root else (
-            [] if isinstance(e, str) else e.get("exclude", [])
-        )
-        dsid = int(rel.rsplit("/s", 1)[-1])
-        # owning snapshot entry, or the relocated stub expire saved for
-        # dirs that outlived their snapshot
-        ws = by_sid.get(dsid) or meta.get("dir_manifests", {}).get(rel, {})
-        for f in ws.get("files", []):
-            if f["partition"] in excl:
-                continue
-            out.append((f, dsid))
-    return out
-
-
 def _pos_delete_conforming(root: str, meta_dir: str, drel: str) -> tuple[str, int, int]:
     """Re-emit one positional delete dir in the Iceberg spec's column
     shape — `file_path` (absolute, field-id 2147483546), `pos`
@@ -661,6 +627,7 @@ def write_iceberg_metadata(
     old behavior of refusing active deletes."""
     meta = table._load()
     from .partitioning import parse_spec
+    from .tables import _dir_sid, _file_part
 
     head = table._head(meta)
     if head is None:
@@ -697,8 +664,9 @@ def write_iceberg_metadata(
     # carries delete files; mid-history MOR snapshots are then simply
     # absent from the emitted v1 history, as before — force
     # format_version=2 to time-travel through them externally
-    fv = format_version or (2 if head.get("active_deletes") else 1)
-    if fv == 1 and head.get("active_deletes"):
+    head_deletes = table._snapshot_deletes(meta, head)
+    fv = format_version or (2 if head_deletes else 1)
+    if fv == 1 and head_deletes:
         raise ValueError(
             "active merge-on-read deletes are not representable in "
             "Iceberg v1 metadata — emit format_version=2, or run compact() "
@@ -832,21 +800,24 @@ def write_iceberg_metadata(
             hi_out.append({"key": fid, "value": hb})
         return (lo_out or None), (hi_out or None)
 
-    by_sid = {s["snapshot_id"]: s for s in meta["snapshots"]}
     snapshots_doc = []
     snapshot_log = []
     prev_emitted: int | None = None
     prev_state: dict[str, tuple[int, int, int]] = {}  # prior snapshot's live files
     for snap in snaps:
         s_id = snap["snapshot_id"]
-        files = _snapshot_files(meta, snap, allow_deletes=(fv == 2), root=root)
-        if files is None:
+        deletes = table._snapshot_deletes(meta, snap)
+        if deletes and fv == 1:
             continue  # mid-history MOR state under v1: not representable
         s_ts = int(float(snap["made_current_at"]) * 1000)
         # one manifest per partition spec present in this snapshot's
         # state (Iceberg: a manifest holds files of a single spec)
         groups: dict[int, list[tuple[dict, int]]] = {}
-        for f, dsid in files:
+        for rel, f in table._snapshot_files(meta, snap):
+            # the owning dir's snapshot id: the file's sequence number in
+            # v2, and the commit whose partition spec the file was written
+            # under (its manifest)
+            dsid = _dir_sid(rel)
             groups.setdefault(spec_id_for(spec_at(dsid)), []).append((f, dsid))
         mrecs = []
         total_rows = 0
@@ -869,6 +840,7 @@ def write_iceberg_metadata(
                 s_state[f["path"]] = (f["rows"], f["bytes"], dsid)
                 min_seq = min(min_seq, dsid)
                 lbs, ubs = bounds_maps(f.get("bounds"))
+                part = _file_part(f)
                 nulls = f.get("nulls") or {}
                 nvc = [
                     {"key": col_meta[n][0], "value": int(c)}
@@ -890,7 +862,7 @@ def write_iceberg_metadata(
                     "file_format": "PARQUET",
                     "partition": {
                         p["name"]: _partition_value(
-                            f["partition"].get(p["name"]), p["type"],
+                            part.get(p["name"]), p["type"],
                             p.get("transform", "identity"),
                         )
                         for p in g_part_fields
@@ -969,13 +941,13 @@ def write_iceberg_metadata(
                 )
             mrecs.append(mrec)
         n_del_files = 0
-        if fv == 2 and snap.get("active_deletes"):
+        if deletes:
             # global deletes live under an UNPARTITIONED spec (reuses an
             # existing empty spec when the table has one in its history)
             delete_spec_id = spec_id_for(())
             dentries = []
             dseqs = []
-            for d in snap["active_deletes"]:
+            for d, stats in deletes:
                 d_sid = d["sid"]
                 dseqs.append(d_sid)
                 empty_part: dict = {}
@@ -986,10 +958,6 @@ def write_iceberg_metadata(
                     dfiles = [(p_path, p_rows, p_bytes, 1, None)]
                 else:
                     eq_ids = [ids[k] for k in d["keys"]]
-                    src = by_sid.get(d_sid) or meta.get(
-                        "dir_manifests", {}
-                    ).get(d["file"], {})
-                    stats = src.get("delete_file_stats") or []
                     dfiles = [
                         (os.path.join(root, st["path"]), st["rows"], st["bytes"], 2, eq_ids)
                         for st in stats

@@ -256,30 +256,30 @@ def q_dsv2_stream(spark, sf_dir) -> DataFrame:
     SELECT category, COUNT(*) AS n_rows, CAST(SUM(qty) AS BIGINT) AS total_qty
     FROM live GROUP BY category
     """,
-    tags=("dsv2", "catalog", "sql"),
+    tags=("dsv2", "catalog"),
 )
 def q_catalog_format_read(spark, sf_dir) -> DataFrame:
-    """READ-PATH UNIFICATION (one table model, one scan implementation):
-    a catalog-registered name read through restricted SQL — including
-    time travel — with `spark.eiws.scan.via-format=true`, so the
-    SqlCatalog name read routes through the SAME registered `eiws`
-    Python DataSource a `spark.read.format(...)` user gets
-    (tables.py:scan/_format_scan). The reference's reads are
-    catalog-name-based over its format reader (`bronze-silver.py:132`);
-    without unification a delete-resolution fix landing in one path
-    becomes a correctness fork between entry points."""
+    """A catalog-registered NAME read through the format, with time
+    travel: `spark.read.format("eiws")` with `warehouse` + `table` (the
+    name, resolved through the SqlCatalog's `_catalog.json`) +
+    `snapshot-id=2`. The reference's reads are catalog-name-based over
+    its format reader (`bronze-silver.py:132,146-149`)."""
+    from ..sources import dsv2
     from ..sqlext import SqlCatalog
-    from ..tables import SnapshotTable
 
     _demo_table(spark)
-    cat = SqlCatalog(spark)
-    cat.register("eiws_demo", DEMO_ROOT)
-    spark.conf.set(SnapshotTable.VIA_FORMAT_CONF, "true")
-    try:
-        return cat.sql(
-            "SELECT category, COUNT(*) AS n_rows, "
-            "CAST(SUM(qty) AS BIGINT) AS total_qty "
-            "FROM eiws_demo VERSION AS OF 2 GROUP BY category"
+    dsv2.register(spark)
+    wh = os.path.join(tempfile.gettempdir(), "eiws_q_catalog_wh")
+    SqlCatalog(spark, wh).register("eiws_demo", DEMO_ROOT)  # idempotent
+    return (
+        spark.read.format(dsv2.FORMAT_NAME)
+        .option("warehouse", wh)
+        .option("table", "eiws_demo")
+        .option("snapshot-id", "2")
+        .load()
+        .groupBy("category")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.sum("qty").cast("bigint").alias("total_qty"),
         )
-    finally:
-        spark.conf.unset(SnapshotTable.VIA_FORMAT_CONF)
+    )

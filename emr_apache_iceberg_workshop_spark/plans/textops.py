@@ -1323,16 +1323,12 @@ def _merge_replayed(store, batch_id, scope) -> bool:
     DOUBLE-COUNTS. Callers that can replay (streaming, retried jobs)
     pass (batch_id, scope); the stamp rides the merge commit atomically
     and a same-scope batch id at or below the high-water mark skips —
-    the same contract as the dedup stream batches."""
+    the same contract as the dedup stream batches. The high-water mark
+    is the exact-scope replay-guard property (O(1) in table history)."""
     if batch_id is None:
         return False
-    done = [
-        sn.summary.get("streaming.batch-id")
-        for sn in store.snapshots()
-        if sn.summary.get("streaming.batch-id") is not None
-        and sn.summary.get("streaming.query-scope") == scope
-    ]
-    return bool(done) and batch_id <= max(done)
+    done = store.max_stream_batch_id(scope, adopt_unscoped=False)
+    return done is not None and batch_id <= done
 
 
 def _merge_stamp(batch_id, scope) -> dict | None:

@@ -20,31 +20,25 @@ Options (all reads need `table`, or the `.load(path)` path):
                     incremental append-range scan (start, end]
                     (reference option names, `bronze-silver.py:146-149`)
 
-Read-path UNIFICATION: the library direction is covered too — setting
-`spark.eiws.scan.via-format=true` routes SnapshotTable.scan/scan_at/
-scan_as_of/scan_incremental (and therefore SqlCatalog SQL-over-name
-reads) through THIS reader, so both entry points share one scan
-implementation (tables.py:VIA_FORMAT_CONF).
+Planning is SHARED with the table layer: the live files of a snapshot
+(inline and mask-file exclusions), lineage, ref and timestamp
+resolution, the append range of an incremental read, renames and column
+births all come from `SnapshotTable`'s session-free planning methods, so
+a format rule has one definition. Execution is this module's own:
+executors read the raw parquet with pyarrow and apply, per file,
 
-Architecturally this is a SECOND, INDEPENDENT read path: planning walks
-`_meta.json` driver-side (the same O(manifest) cost class as the Spark
-scan), and executors read the raw parquet with pyarrow — no code shared
-with `SnapshotTable.scan()`'s DataFrame pipeline — applying the same
-read-time semantics:
-
-- partition-exclusion tuples + mask FILES prune at file granularity
-  (the manifest records each file's partition tuple);
+- partition exclusions keyed by another spec than the file's (spec
+  evolution), re-derived from the data columns per row;
 - equality deletes with sequence-number semantics (a delete applies to
   rows from dirs committed BEFORE it: `del_sid > dir_sid`);
 - positional deletes by (file_rel, row_index) identity;
-- column renames read each dir under its historical names
-  (`tables.py:_name_at` name-mapping semantics);
-- schema evolution via the `prev_schema` summaries (`schema_at`).
+- the historical column names of each dir (renames) and NULL for a
+  column (re)created after the dir was written.
 
-A result disagreement between this path and `SnapshotTable.scan()`
-means one of them misreads the format — the same writer/reader
-independence argument as the byte-level Avro decoder test
-(`tests/test_iceberg_external_decode.py`), applied to the table layer.
+The independent references for this reader are the table-model fuzz
+(`tests/test_table_model.py`, which compares it with a pure-Python
+model) and the DuckDB oracles of the `q_dsv2_*` queries, which read the
+raw parquet.
 
 Scale shape: one InputPartition per live data file — Spark schedules
 them like any file-based source; per-file work is a single pyarrow read
@@ -84,242 +78,43 @@ try:  # streaming Arrow writer (SPARK-48961 line); row-based fallback below
 except ImportError:  # pragma: no cover
     DataSourceStreamArrowWriter = None
 
+from ..tables import SnapshotTable, _ddl_split, _dir_sid, _file_part
+
 FORMAT_NAME = "eiws"
 
 
 # ---------------------------------------------------------------------------
-# Pure-metadata helpers (planner side). These mirror the table layer's
-# pure functions (tables.py:_head/_lineage/_dir_manifest/schema_at) so the
-# read path stays import-independent of any Spark-session machinery; the
-# entry/mask helpers ARE shared — they are module-level pure functions.
-def _entry_rel(e) -> str:
-    return e if isinstance(e, str) else e["dir"]
-
-
-def _entry_excl(e) -> list:
-    return [] if isinstance(e, str) else e.get("exclude", [])
-
-
-def _entry_masks(e) -> list:
-    return [] if isinstance(e, str) else e.get("exclude_masks", [])
-
-
-def _dir_sid(rel: str) -> int:
-    return int(rel.rsplit("/s", 1)[-1])
-
-
-def _part_str(v):
-    if v is None:
-        return None
-    if isinstance(v, bool):
-        return "true" if v else "false"
-    return str(v)
-
-
-def _unescape_path(v: str) -> str:
-    """Inverse of `_escape_path` (Spark ExternalCatalogUtils
-    unescapePathName): %XX sequences back to their characters."""
-    if "%" not in v:
-        return v
-    out, i, n = [], 0, len(v)
-    while i < n:
-        c = v[i]
-        if c == "%" and i + 3 <= n:
-            try:
-                out.append(chr(int(v[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(c)
-        i += 1
-    return "".join(out)
-
-
-def _file_part(f: dict) -> dict:
-    """A manifest entry's partition tuple as RAW (hive-unescaped) string
-    values — the same canonical form as the native scan's exclusion
-    tuples (`_part_str` of dataframe values) and `_parse_part_value`'s
-    input. Manifest entries store the dir-name segment verbatim, which
-    is hive-ESCAPED for special characters (tables.py:_file_stats)."""
-    return {
-        k: (None if v is None else _unescape_path(_part_str(v)))
-        for k, v in f["partition"].items()
-    }
-
-
-def _head(meta: dict, branch: str = "main") -> dict | None:
-    snaps = meta["snapshots"]
-    refs = meta.get("branches", {})
-    if branch not in refs:
-        if branch == "main":
-            return snaps[-1] if snaps else None
-        raise ValueError(f"unknown branch {branch!r}")
-    sid = refs[branch]
-    if sid is None:
-        if branch == "main":
-            return None
-        raise ValueError(f"branch {branch!r} points at no snapshot")
-    for s in snaps:
-        if s["snapshot_id"] == sid:
-            return s
-    raise ValueError(f"branch {branch!r} points at expired snapshot {sid}")
-
-
-def _parent_id(s: dict) -> int | None:
-    sid = s["snapshot_id"]
-    return s.get("parent_id", sid - 1 if sid > 1 else None)
-
-
-def _lineage(meta: dict, head_sid: int) -> list[dict]:
-    by_id = {s["snapshot_id"]: s for s in meta["snapshots"]}
-    chain, cur = [], head_sid
-    while cur is not None and cur in by_id:
-        s = by_id[cur]
-        chain.append(s)
-        cur = _parent_id(s)
-    return chain
-
-
-def _dir_manifest(meta: dict, by_sid: dict, rel: str) -> dict:
-    s = by_sid.get(_dir_sid(rel))
-    if s is not None:
-        return s
-    return meta.get("dir_manifests", {}).get(rel, {})
-
-
-def _renames(meta: dict) -> list[tuple[int, str, str]]:
-    out = []
-    for s in meta.get("snapshots", []):
-        r = s.get("summary", {}).get("renamed")
-        if r:
-            out.append((s["snapshot_id"], r["from"], r["to"]))
-    return out
-
-
-def _ddl_names(ddl: str) -> list[str]:
-    """Field names from either DDL form ("a bigint, b string" or
-    "a:bigint,b:string"), top-level commas only. Depth tracks both
-    (...) and <...> so decimal(10,2) AND map<string,int> /
-    struct<a:int,b:string> commas survive; the name is the prefix before
-    the first top-level ':' or space (a struct field's INNER colons sit
-    behind '<' and never split)."""
-    names, depth, cur = [], 0, []
-    for ch in ddl + ",":
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            f = "".join(cur).strip()
-            if f:
-                head = f.split("<", 1)[0].split("(", 1)[0]
-                name = head.split(":")[0].split(" ")[0] if head else f
-                names.append(name.strip("`"))
-            cur = []
-        else:
-            cur.append(ch)
-    return names
-
-
-def _births(meta: dict, as_of: int | None = None) -> dict[str, int]:
-    """Column name -> (re)creation snapshot id — tables.py:_births
-    semantics (Iceberg field-id rule: a dropped-then-re-added name is a
-    NEW column; files from its previous life read NULL)."""
-    evolves = [
-        s
-        for s in meta.get("snapshots", [])
-        if s.get("operation") == "evolve-schema"
-        and (as_of is None or s["snapshot_id"] <= as_of)
-    ]
-    first = evolves[0]["summary"]["prev_schema"] if evolves else meta["schema"]
-    births = {n: 0 for n in _ddl_names(first)}
-    for s in evolves:
-        summ = s.get("summary", {})
-        r = summ.get("renamed")
-        if r:
-            births[r["to"]] = births.pop(r["from"], 0)
-            continue
-        prev = set(_ddl_names(summ["prev_schema"]))
-        cur = set(_ddl_names(summ["schema"]))
-        for n in cur - prev:
-            births[n] = s["snapshot_id"]
-        for n in prev - cur:
-            births.pop(n, None)
-    return births
-
-
-def _name_at(renames: list, dir_sid: int, name: str, as_of: int | None) -> str:
-    for rsid, old, new in reversed(renames):
-        if rsid <= dir_sid or (as_of is not None and rsid > as_of):
-            continue
-        if name == new:
-            name = old
-    return name
+# Planner side. Every rule of the table format (which files a snapshot
+# reads, exclusions, lineage, ref resolution, renames and column births)
+# comes from the table layer, whose planning methods need no SparkSession:
+# this module adds only the option surface and the pyarrow executor
+# (`SnapshotTable(None, root)` is a session-free handle on the table).
 
 
 def _schema_ddl_at(meta: dict, snapshot_id: int | None) -> str:
-    """Schema DDL current as of `snapshot_id` (None = head) —
-    tables.py:schema_at semantics from the prev_schema summaries.
-    Normalized to space-form DDL: metadata stores either "a bigint, b
-    string" or the simpleString form "a:bigint,b:string", and this runs
-    in the sessionless data-source worker where fromDDL is unavailable.
-    Splitting tracks (...) AND <...> depth so decimal(10,2) and
-    map<string,int> / struct<a:int> commas survive, and the name/type
-    split only honors a ':' BEFORE any '<' or '(' (struct-inner colons
-    never split)."""
-    ddl = meta["schema"]
-    if snapshot_id is not None:
-        for s in meta["snapshots"]:
-            if s["snapshot_id"] > snapshot_id and s["operation"] == "evolve-schema":
-                ddl = s["summary"]["prev_schema"]
-                break
-    fields, depth, cur = [], 0, []
-    for ch in ddl:
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            fields.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        fields.append("".join(cur))
+    """Schema DDL current as of `snapshot_id` (None = head;
+    `SnapshotTable._ddl_at`), normalized to space-form DDL: metadata
+    stores either "a bigint, b string" or the simpleString form
+    "a:bigint,b:string", and this runs in the sessionless data-source
+    worker where fromDDL is unavailable. The name/type split honors only
+    a ':' BEFORE any '<' or '(' (struct-inner colons never split)."""
+    ddl = meta["schema"] if snapshot_id is None else SnapshotTable._ddl_at(meta, snapshot_id)
     out = []
-    for f in fields:
-        f = f.strip()
+    for f in _ddl_split(ddl):
         if ":" in f.split("<", 1)[0].split("(", 1)[0]:
             name, typ = f.split(":", 1)
-            out.append(f"{name.strip()} {typ.strip()}")
-        else:
-            out.append(f)
+            f = f"{name.strip()} {typ.strip()}"
+        out.append(f)
     return ", ".join(out)
 
 
 def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
-    """Space-form DDL -> [(name, simpleString)], splitting on top-level
-    commas only (decimal(10, 2) commas survive) and stripping the space
+    """Space-form DDL -> [(name, simpleString)], stripping the space
     inside parameterized types so the strings compare equal to
-    DataType.simpleString(). <...> depth is tracked like (...) so
-    map/struct/array element commas survive."""
-    fields, depth, cur = [], 0, []
-    for ch in ddl:
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        if ch == "," and depth == 0:
-            fields.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        fields.append("".join(cur))
+    DataType.simpleString()."""
     out = []
-    for f in fields:
-        name, typ = f.strip().split(" ", 1)
+    for f in _ddl_split(ddl):
+        name, typ = f.split(" ", 1)
         out.append((name, typ.strip().replace(" ", "").lower()))
     return out
 
@@ -345,7 +140,7 @@ def _table_root(options) -> str:
     if not raw:
         return ""
     path = os.path.abspath(raw)
-    if not os.path.exists(os.path.join(path, "_meta.json")):
+    if not SnapshotTable.exists(path):
         wh = options.get("warehouse")
         if wh:
             try:
@@ -356,16 +151,6 @@ def _table_root(options) -> str:
             if root:
                 return os.path.abspath(root)
     return path
-
-
-def _load_mask_tuples(root: str, rels: list) -> list[dict]:
-    import pyarrow.parquet as pq
-
-    out = []
-    for rel in rels:
-        for row in pq.read_table(os.path.join(root, rel)).to_pylist():
-            out.append({k: _part_str(v) for k, v in row.items()})
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -416,124 +201,44 @@ def _parse_part_value(raw: str | None, simple: str):
     return raw  # string
 
 
-def _append_rels(meta: dict, lo: int, hi: int) -> list[str]:
-    """(lo, hi] append dirs — tables.py:scan_incremental semantics,
-    including the raise on non-append commits and expired ranges. Shared
-    by the batch incremental read and the streaming reader's batches."""
-    chain = _lineage(meta, hi)
-    if not chain or chain[0]["snapshot_id"] != hi:
-        raise ValueError(f"unknown snapshot {hi}")
-    rels: list[str] = []
-    reached_lo = lo == 0 and _parent_id(chain[-1]) is None
-    for s in chain:
-        if s["snapshot_id"] <= lo:
-            reached_lo = True
-            break
-        if not s["dirs"] and s["operation"] in ("evolve-schema", "evolve-partition"):
-            continue
-        if s["operation"] not in ("append", "create"):
-            raise ValueError(
-                f"incremental read over non-append snapshot "
-                f"{s['snapshot_id']} ({s['operation']})"
-            )
-        rels += s["dirs"]
-    if not reached_lo and not (lo == 0 and _parent_id(chain[-1]) is None):
-        raise ValueError(f"incremental range ({lo}, {hi}] spans expired snapshots")
-    return rels
-
-
-def _resolve_snapshot(meta: dict, options) -> tuple[dict | None, int | None]:
+def _resolve_snapshot(t, meta: dict, options) -> tuple[dict | None, int | None]:
     """(snapshot entry, as_of sid) for the option surface: `snapshot-id`
-    (numeric id, tag, or branch name — Iceberg VERSION AS OF accepts all
-    three, tables.py:scan_at), `as-of-timestamp` (FOR TIMESTAMP AS OF,
-    main-lineage walk, tables.py:scan_as_of), else the `branch` head.
-    `as_of` is the resolved snapshot's id for snapshot-id / tag /
-    VERSION-AS-OF-branch-name / timestamp reads (snapshot-schema
-    semantics), and None for the plain `branch` option — Iceberg's
-    branch/tag schema rule: BRANCH reads use the TABLE's current schema
-    (branches are writable; writes validate against the current schema,
-    so reads must match or write→read would not round-trip), while tags
-    and VERSION AS OF keep the snapshot's schema. Shared by the reader's
-    planner and DataSource.schema() so the declared schema and the
-    planned read can never disagree about which snapshot they describe."""
-    ref = options.get("snapshot-id")
-    if ref is not None:
-        tags, branches = meta.get("tags", {}), meta.get("branches", {})
-        if not str(ref).lstrip("-").isdigit():
-            if ref in tags:
-                ref = tags[ref]
-            elif ref in branches:
-                ref = branches[ref]
-            else:
-                raise ValueError(f"unknown ref {ref!r}")
-        sid = int(ref)
-        for s in meta["snapshots"]:
-            if s["snapshot_id"] == sid:
-                return s, sid
-        raise ValueError(f"unknown snapshot {sid}")
-    ts = options.get("as-of-timestamp")
-    if ts is not None:
-        import datetime as dt
-
-        try:
-            ts_f = float(ts)
-        except ValueError:
-            ts_f = (
-                dt.datetime.fromisoformat(ts)
-                .replace(tzinfo=dt.timezone.utc)
-                .timestamp()
-            )
-        head = _head(meta)
-        if head is None:
-            raise ValueError("empty table: no snapshot at or before that time")
-        for s in _lineage(meta, head["snapshot_id"]):
-            if float(s["made_current_at"]) <= ts_f:
-                return s, s["snapshot_id"]
-        raise ValueError(f"no snapshot at or before {ts}")
-    head = _head(meta, options.get("branch", "main"))
-    return head, None  # branch head: table-current schema + full rename log
+    (id, tag or branch name, `SnapshotTable.scan_at`), `as-of-timestamp`
+    (`scan_as_of`), else the `branch` head. `as_of` is the resolved
+    snapshot's id for snapshot-id and timestamp reads (they keep the
+    snapshot's schema) and None for the plain `branch` option: Iceberg's
+    branch/tag schema rule — BRANCH reads use the TABLE's current schema,
+    since branches are writable and writes validate against it. Shared by
+    the reader's planner and DataSource.schema() so the declared schema
+    and the planned read describe the same snapshot."""
+    ref, ts = options.get("snapshot-id"), options.get("as-of-timestamp")
+    if ref is not None or ts is not None:
+        s = t._resolve_ref(meta, ref) if ref is not None else t._snapshot_as_of(meta, ts)
+        return s, s["snapshot_id"]
+    return t._head(meta, options.get("branch", "main")), None
 
 
-def _all_spec_strs(meta: dict) -> dict[str, str]:
-    """Field name -> spec string for every partition spec this table has
-    ever had (mirror of SnapshotTable._all_part_fields): exclusion tuples
-    written under an old spec must still resolve after evolution."""
-    from ..partitioning import parse_field
-
-    specs: list[str] = list(meta.get("partition_by") or [])
-    for s in meta.get("snapshots", []):
-        if s.get("operation") == "evolve-partition":
-            summ = s.get("summary", {})
-            specs += (summ.get("partition_by") or []) + (
-                summ.get("prev_partition_by") or []
-            )
-    out: dict[str, str] = {}
-    for spec in dict.fromkeys(specs):
-        out.setdefault(parse_field(spec).name, spec)
-    return out
-
-
-def _transform_str(spec: str | None, v, src_simple: str | None):
-    """Executor-side partition transform into the canonical dir-string
-    domain (`_part_str` / `_dir_value` form): identity str with Spark's
-    bool rendering; bucket via the Iceberg-parity murmur3 hash; hidden
-    date/time transforms via _py_transform. None stays None."""
+def _transform_str(pf, v, src_simple: str | None):
+    """Partition field `pf`'s value for source value `v` in the canonical
+    dir-string domain (`_part_str` form): identity str with Spark's bool
+    rendering; bucket via the Iceberg-parity murmur3 hash; hidden
+    date/time transforms via _py_transform. None stays None; a None `pf`
+    (a field name no spec knows) is identity on the column itself."""
     if v is None:
         return None
-    if spec is None:  # unknown field name: identity on the column itself
-        return "true" if isinstance(v, bool) else str(v)
-    from ..partitioning import _py_transform, iceberg_bucket, parse_field
-
-    f = parse_field(spec)
-    if f.transform == "bucket":
-        return str(iceberg_bucket(v, f.param, _spark_type(src_simple or "string")))
     if isinstance(v, bool):
         return "true" if v else "false"
-    return str(_py_transform(f, v))
+    if pf is None:
+        return str(v)
+    from ..partitioning import _py_transform, iceberg_bucket
+
+    if pf.transform == "bucket":
+        return str(iceberg_bucket(v, pf.param, _spark_type(src_simple or "string")))
+    return str(_py_transform(pf, v))
 
 
 def _plan_entries(
-    root: str,
+    t: SnapshotTable,
     meta: dict,
     entries: list,
     deletes: list,
@@ -541,42 +246,34 @@ def _plan_entries(
     fields: list,
     file_keep=None,
 ) -> list:
-    """FileSlices for the given active-dir entries: per-file partition
-    exclusion, delete-file assignment by sequence number, rename mapping.
+    """FileSlices for the live files of the given active-dir entries
+    (`SnapshotTable._entry_files`), with delete files assigned by
+    sequence number and the rename/birth column mapping.
     `file_keep(manifest_entry)` filters files (pushed-filter pruning);
     None keeps everything. Shared by the batch reader and the streaming
     reader (whose append-only batches pass deletes=[])."""
     by_sid = {s["snapshot_id"]: s for s in meta["snapshots"]}
-    renames = _renames(meta)
-    births = _births(meta, as_of)
-    spec_strs = _all_spec_strs(meta)
-    from ..partitioning import parse_field
-
-    src_of = {n: parse_field(s).source for n, s in spec_strs.items()}
+    renames = t._renames(meta)
+    births = t._births(meta, as_of)
+    spec_of = {pf.name: pf for pf in t._all_part_fields(meta)}
     simple_of = dict(fields)
     out: list[FileSlice] = []
     for e in entries:
-        rel, excl = _entry_rel(e), _entry_excl(e)
-        excl = excl + _load_mask_tuples(root, _entry_masks(e))
+        rel, excl, files = t._entry_files(meta, by_sid, e)
         dsid = _dir_sid(rel)
-        ws = _dir_manifest(meta, by_sid, rel)
         # deletes committed after this dir apply to its rows
         eq, pos = [], []
         for d in deletes:
             if d["sid"] <= dsid:
                 continue
             if d.get("style") == "position":
-                pos.append(os.path.join(root, d["file"]))
+                pos.append(os.path.join(t.root, d["file"]))
             else:
                 eq.append(
-                    {"dir": os.path.join(root, d["file"]), "keys": list(d["keys"])}
+                    {"dir": os.path.join(t.root, d["file"]), "keys": list(d["keys"])}
                 )
-        for f in ws.get("files", []):
-            if not f["path"].startswith(rel + "/") and f["path"] != rel:
-                continue
+        for f in files:
             part = _file_part(f)
-            if part in excl:
-                continue  # rewritten by a later partition-scoped commit
             # exclusion tuples keyed by ANOTHER spec (partition-spec
             # evolution happened between this dir's write and the
             # rewrite) can't be matched against the dir name — re-derive
@@ -585,18 +282,13 @@ def _plan_entries(
             row_excl = []
             for tup in excl:
                 if set(tup) == set(part):
-                    continue  # handled by the file-level check above
-                row_excl.append(
-                    [
-                        (
-                            src_of.get(name, name),
-                            spec_strs.get(name),
-                            simple_of.get(src_of.get(name, name)),
-                            val,
-                        )
-                        for name, val in tup.items()
-                    ]
-                )
+                    continue  # same spec: `_entry_files` dropped the file
+                conds = []
+                for name, val in tup.items():
+                    pf = spec_of.get(name)
+                    src = pf.source if pf else name
+                    conds.append((src, pf, simple_of.get(src), val))
+                row_excl.append(conds)
             if file_keep is not None and not file_keep(f):
                 continue  # pushed-filter file pruning
             cols = []
@@ -609,22 +301,20 @@ def _plan_entries(
                     # present-check null-fills it
                     cols.append((name, "", simple))
                     continue
-                hist = _name_at(renames, dsid, name, as_of)
+                hist = t._name_at(renames, dsid, name, as_of)
                 # identity-partitioned dirs strip the source column from
                 # the data files — inject it from the dir name. The
                 # partition dict is keyed by the name AT WRITE TIME, so a
                 # column renamed after the dir was written must be looked
                 # up under its historical name too.
-                if name in f["partition"] or hist in f["partition"]:
+                if name in part or hist in part:
                     cols.append((name, None, simple))  # injected constant
-                    part_values[name] = part.get(
-                        name if name in f["partition"] else hist
-                    )
+                    part_values[name] = part.get(name if name in part else hist)
                 else:
                     cols.append((name, hist, simple))
             out.append(
                 FileSlice(
-                    path=os.path.join(root, f["path"]),
+                    path=os.path.join(t.root, f["path"]),
                     rel=f["path"],
                     columns=cols,
                     part_values=part_values,
@@ -684,10 +374,10 @@ def _read_slice(partition):
         drop = [False] * n
         for conds in partition.row_excl:
             m = [True] * n
-            for src, spec, simple, val in conds:
+            for src, pf, simple, val in conds:
                 vals = _src_vals(src)
                 for i in range(n):
-                    if m[i] and _transform_str(spec, vals[i], simple) != val:
+                    if m[i] and _transform_str(pf, vals[i], simple) != val:
                         m[i] = False
             for i in range(n):
                 if m[i]:
@@ -752,15 +442,16 @@ class FileSlice(InputPartition):
     # keyed by a spec OTHER than this dir's layout can't be checked
     # against the dir name — they are re-derived from data columns per
     # row, exactly like the native scan's _partition_match_expr. Each
-    # entry is a conjunction [(src_col, spec_str|None, src_simple, val)];
-    # a row matching ANY entry was rewritten by a later commit → dropped.
+    # entry is a conjunction [(src_col, PartitionField|None, src_simple,
+    # val)]; a row matching ANY entry was rewritten by a later commit →
+    # dropped.
     row_excl: list = field(default_factory=list)
 
 
 class SnapshotTableReader(DataSourceReader):
     def __init__(self, options, schema_fields: list[tuple[str, str]]):
         self.root = _table_root(options)
-        if not self.root or not os.path.exists(os.path.join(self.root, "_meta.json")):
+        if not self.root or not SnapshotTable.exists(self.root):
             raise ValueError(
                 "eiws reader needs .option('table', <root>) or .load(<root>) "
                 f"pointing at a snapshot table (got {self.root!r}; "
@@ -841,28 +532,17 @@ class SnapshotTableReader(DataSourceReader):
         return True
 
     def partitions(self):
-        with open(os.path.join(self.root, "_meta.json")) as fh:
-            meta = json.load(fh)
-
-        incremental = self.options.get("end-snapshot-id") is not None
-        if incremental:
+        t = SnapshotTable(None, self.root)
+        meta = t._load()
+        if self.options.get("end-snapshot-id") is not None:
             lo = int(self.options.get("start-snapshot-id") or 0)
-            entries: list = list(
-                _append_rels(meta, lo, int(self.options["end-snapshot-id"]))
-            )
-            deletes: list = []
-            as_of = None
+            entries = t._append_dirs(meta, lo, int(self.options["end-snapshot-id"]))
+            deletes, as_of = [], None
         else:
-            snap, as_of = _resolve_snapshot(meta, self.options)
-            if snap is None:
-                # empty table: one sentinel slice that reads no rows (the
-                # API requires >= 1 partition)
-                return [FileSlice(path="", rel="", columns=[])]
-            entries = snap["active_dirs"]
-            deletes = snap.get("active_deletes", [])
-
+            snap, as_of = _resolve_snapshot(t, meta, self.options)
+            entries, deletes = t._snapshot_state(snap)
         out = _plan_entries(
-            self.root, meta, entries, deletes, as_of, self.fields,
+            t, meta, entries, deletes, as_of, self.fields,
             file_keep=lambda f: self._file_may_match(f, _file_part(f)),
         )
         # zero live/matching files: the batch API still needs >= 1
@@ -937,24 +617,21 @@ class _StageWriter:
         import uuid
 
         self.root = _table_root(options)
-        if not self.root or not os.path.exists(os.path.join(self.root, "_meta.json")):
+        if not self.root or not SnapshotTable.exists(self.root):
             raise ValueError(
                 "eiws writer needs .option('table', <root>) or .save(<root>) "
                 f"pointing at an existing snapshot table (got {self.root!r}); "
                 "create tables with SnapshotTable.create or the SQL facade"
             )
-        with open(os.path.join(self.root, "_meta.json")) as fh:
-            meta = json.load(fh)
+        meta = SnapshotTable(None, self.root)._load()
         table_cols = _ddl_fields(_schema_ddl_at(meta, None))
         if sorted(schema_fields) != sorted(table_cols):
             raise ValueError(
                 f"eiws writer: dataframe schema {schema_fields} does not match "
                 f"table schema {table_cols}"
             )
-        from ..partitioning import parse_spec
-
         self.columns = table_cols  # table order
-        self.part_fields = parse_spec(meta.get("partition_by") or [])
+        self.part_fields = SnapshotTable._part_fields(meta)
         self.part_names = [f.name for f in self.part_fields]
         # Spark's partitionBy strips the partition COLUMN from data files:
         # identity fields strip the source column itself (the reader
@@ -978,17 +655,6 @@ class _StageWriter:
         self.stage_rel = f"data/.stage-{uuid.uuid4().hex[:12]}"
 
     # -- executor side -----------------------------------------------------
-    def _dir_value(self, f, v) -> str | None:
-        from ..partitioning import _py_transform, iceberg_bucket
-
-        if v is None:
-            return None
-        if f.transform == "bucket":
-            return str(iceberg_bucket(v, f.param, _spark_type(self.src_types[f.source])))
-        if isinstance(v, bool):
-            v = "true" if v else "false"  # Spark dir form, not str(True)
-        return str(_py_transform(f, v))
-
     def _write_batches(self, iterator) -> _WriteMsg:
         import uuid
 
@@ -1022,7 +688,7 @@ class _StageWriter:
             if self.part_fields:
                 cols = [
                     [
-                        self._dir_value(f, v)
+                        _transform_str(f, v, self.src_types[f.source])
                         for v in tbl.column(f.source).to_pylist()
                     ]
                     for f in self.part_fields
@@ -1062,12 +728,9 @@ class _StageWriter:
 
     # -- driver side -------------------------------------------------------
     def _commit_stage(self, mode: str | None = None, summary_extra: dict | None = None) -> int:
-        from ..tables import SnapshotTable
-
         stage = os.path.join(self.root, self.stage_rel)
         os.makedirs(stage, exist_ok=True)  # zero-row write: empty snapshot
-        t = SnapshotTable(None, self.root)  # commit path is Spark-free
-        return t.commit_staged(
+        return SnapshotTable(None, self.root).commit_staged(  # commit path is Spark-free
             stage,
             self.part_names,
             mode=mode or self.mode,
@@ -1178,8 +841,6 @@ class SnapshotTableStreamWriter(_StageWriter, _STREAM_WRITER_BASE):
         resumed scoped query's batches."""
         if self._adopt_opt:
             return True
-        from ..tables import SnapshotTable
-
         props = SnapshotTable(None, self.root).properties()
         return str(
             props.get("streaming.adopt-unscoped-guard", "")
@@ -1189,8 +850,6 @@ class SnapshotTableStreamWriter(_StageWriter, _STREAM_WRITER_BASE):
         return self._write_batches(iterator)
 
     def commit(self, messages, batchId):
-        from ..tables import SnapshotTable
-
         t = SnapshotTable(None, self.root)
         # guard matches THIS scope only — never unscoped snapshots (which
         # belong to other writers: append_stream_batch without a scope)
@@ -1259,7 +918,7 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
 
     def __init__(self, options, schema_fields: list[tuple[str, str]]):
         self.root = _table_root(options)
-        if not self.root or not os.path.exists(os.path.join(self.root, "_meta.json")):
+        if not self.root or not SnapshotTable.exists(self.root):
             raise ValueError(
                 "eiws stream reader needs .option('table', <root>) or "
                 f".load(<root>) pointing at a snapshot table (got {self.root!r})"
@@ -1268,15 +927,12 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
         self.branch = options.get("branch", "main")
         self.start = int(options.get("start-snapshot-id") or 0)
 
-    def _meta(self) -> dict:
-        with open(os.path.join(self.root, "_meta.json")) as fh:
-            return json.load(fh)
-
     def initialOffset(self) -> dict:
         return {"snapshot_id": self.start}
 
     def latestOffset(self) -> dict:
-        head = _head(self._meta(), self.branch)
+        t = SnapshotTable(None, self.root)
+        head = t._head(t._load(), self.branch)
         sid = head["snapshot_id"] if head else 0
         return {"snapshot_id": max(sid, self.start)}
 
@@ -1284,9 +940,9 @@ class SnapshotTableStreamReader(DataSourceStreamReader):
         lo, hi = int(start["snapshot_id"]), int(end["snapshot_id"])
         if hi <= lo:
             return []
-        meta = self._meta()
-        rels = _append_rels(meta, lo, hi)
-        return _plan_entries(self.root, meta, rels, [], None, self.fields)
+        t = SnapshotTable(None, self.root)
+        meta = t._load()
+        return _plan_entries(t, meta, t._append_dirs(meta, lo, hi), [], None, self.fields)
 
     def read(self, partition: FileSlice):
         return _read_slice(partition)
@@ -1304,13 +960,13 @@ class SnapshotTableDataSource(DataSource):
 
     def schema(self):
         root = _table_root(self.options)
-        if not root or not os.path.exists(os.path.join(root, "_meta.json")):
+        if not root or not SnapshotTable.exists(root):
             raise ValueError(
                 "eiws reader needs .option('table', <root>) or .load(<root>) "
                 f"pointing at a snapshot table (got {root!r})"
             )
-        with open(os.path.join(root, "_meta.json")) as fh:
-            meta = json.load(fh)
+        t = SnapshotTable(None, root)
+        meta = t._load()
         if self.options.get("end-snapshot-id") is not None:
             # incremental append-range read: current schema, like the
             # native scan_incremental (old files null-fill added columns)
@@ -1319,7 +975,7 @@ class SnapshotTableDataSource(DataSource):
         # the resolved snapshot (tables.py:scan_at / schema_at); the
         # plain `branch` option resolves as_of=None — branch reads use
         # the TABLE's current schema (see _resolve_snapshot)
-        _snap, as_of = _resolve_snapshot(meta, self.options)
+        _snap, as_of = _resolve_snapshot(t, meta, self.options)
         return _schema_ddl_at(meta, as_of)
 
     def reader(self, schema) -> SnapshotTableReader:

@@ -180,7 +180,7 @@ def _entry_masks(e) -> list:
 
 def _load_mask_tuples(root: str, rels: list) -> list[dict]:
     """Mask-file partition tuples in canonical string form. Driver-side
-    — used only by metadata-table / emission paths, where O(masked
+    — used only by file planning (`_entry_files`), where O(masked
     partitions) is the same cost class as Iceberg's manifest planning."""
     import pyarrow.parquet as pq
 
@@ -189,13 +189,6 @@ def _load_mask_tuples(root: str, rels: list) -> list[dict]:
         for row in pq.read_table(os.path.join(root, rel)).to_pylist():
             out.append({k: _part_str(v) for k, v in row.items()})
     return out
-
-
-def _entry_excl_full(root: str, e) -> list:
-    """Inline + mask-file exclusion tuples of an active_dirs entry."""
-    masks = _entry_masks(e)
-    excl = _entry_excl(e)
-    return excl + _load_mask_tuples(root, masks) if masks else excl
 
 
 def _dir_sid(rel: str) -> int:
@@ -240,6 +233,80 @@ def _part_str(v):
     if isinstance(v, bool):
         return "true" if v else "false"
     return str(v)
+
+
+def _unescape_path(v: str) -> str:
+    """Spark's `unescapePathName`: %XX sequences of a partition
+    directory name back to their characters."""
+    if "%" not in v:
+        return v
+    out, i, n = [], 0, len(v)
+    while i < n:
+        c = v[i]
+        if c == "%" and i + 3 <= n:
+            try:
+                out.append(chr(int(v[i + 1 : i + 3], 16)))
+                i += 3
+                continue
+            except ValueError:
+                pass
+        out.append(c)
+        i += 1
+    return "".join(out)
+
+
+def _raw_part(part: dict) -> dict:
+    """A partition tuple as recorded from a directory name (the manifest
+    `partition` of a file, a snapshot's `partitions`) in the RAW form of
+    exclusion tuples (`_part_str` of data values). Directory names are
+    hive-ESCAPED ('a/b' is `cat=a%2Fb`), so the two forms compare equal
+    only after this."""
+    return {k: None if v is None else _unescape_path(_part_str(v)) for k, v in part.items()}
+
+
+def _part_repr(part: dict) -> str:
+    """A manifest partition tuple in directory form (`a=1/b=x`), as the
+    metadata tables print it."""
+    return "/".join(
+        f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}" for c, v in part.items()
+    )
+
+
+def _file_part(f: dict) -> dict:
+    """The raw partition tuple of manifest entry `f`."""
+    return _raw_part(f["partition"])
+
+
+def _ddl_split(ddl: str) -> list[str]:
+    """The top-level field definitions of a schema DDL string in either
+    stored form ("a bigint, b string" or "a:bigint,b:string"). Depth
+    tracks (...) and <...>, so decimal(10,2), map<string,int> and
+    struct<a:int,b:string> commas do not split. Pure Python: the format
+    reader plans in a data-source worker without a JVM."""
+    fields, depth, cur = [], 0, []
+    for ch in ddl + ",":
+        if ch in "(<":
+            depth += 1
+        elif ch in ")>":
+            depth -= 1
+        if ch == "," and depth == 0:
+            f = "".join(cur).strip()
+            if f:
+                fields.append(f)
+            cur = []
+        else:
+            cur.append(ch)
+    return fields
+
+
+def _ddl_names(ddl: str) -> list[str]:
+    """Field names of a schema DDL string: the prefix before the first
+    ':' or space (a struct field's inner colons sit behind '<')."""
+    names = []
+    for f in _ddl_split(ddl):
+        head = f.split("<", 1)[0].split("(", 1)[0]
+        names.append((head.split(":")[0].split(" ")[0] if head else f).strip("`"))
+    return names
 
 
 class SnapshotTable:
@@ -583,6 +650,52 @@ class SnapshotTable:
         if s is not None:
             return s
         return meta.get("dir_manifests", {}).get(rel, {})
+
+    def _entry_files(self, meta: dict, by_sid: dict, e) -> tuple[str, list, list[dict]]:
+        """(dir rel, exclusion tuples, live manifest entries) of one
+        active-dir entry `e`: the files of its dir minus those whose
+        partition a later partition-scoped rewrite masked, inline or
+        through a mask file. A manifest records the hive-escaped
+        directory segment and an exclusion tuple the raw value, so the
+        file side is unescaped before the comparison (`_file_part`)."""
+        rel, excl, masks = _entry_rel(e), _entry_excl(e), _entry_masks(e)
+        if masks:
+            excl = excl + _load_mask_tuples(self.root, masks)
+        files = [
+            f for f in self._dir_manifest(meta, by_sid, rel).get("files", [])
+            if f["path"].startswith(rel + "/") and _file_part(f) not in excl
+        ]
+        return rel, excl, files
+
+    @staticmethod
+    def _snapshot_state(snap: dict | None) -> tuple[list, list]:
+        """(active-dir entries, active delete entries) of snapshot entry
+        `snap` (None: an empty main) — the table state a read plans from."""
+        if snap is None:
+            return [], []
+        return snap["active_dirs"], snap.get("active_deletes", [])
+
+    def _snapshot_files(self, meta: dict, snap: dict | None) -> list[tuple[str, dict]]:
+        """(dir rel, manifest entry) for every data file live in snapshot
+        `snap` of `meta` (None: an empty main) — the one rule for "which
+        files does this state read", shared by the metadata tables, file
+        pruning and the Iceberg emitter; the `eiws` format reader plans
+        per entry through the same `_entry_files`."""
+        by_sid = {s["snapshot_id"]: s for s in meta["snapshots"]}
+        out = []
+        for e in self._snapshot_state(snap)[0]:
+            rel, _excl, files = self._entry_files(meta, by_sid, e)
+            out += [(rel, f) for f in files]
+        return out
+
+    def _snapshot_deletes(self, meta: dict, snap: dict | None) -> list[tuple[dict, list]]:
+        """(active delete entry, its delete-file manifest entries) for
+        every delete file live in snapshot `snap` of `meta`."""
+        by_sid = {s["snapshot_id"]: s for s in meta["snapshots"]}
+        return [
+            (d, self._dir_manifest(meta, by_sid, d["file"]).get("delete_file_stats", []))
+            for d in self._snapshot_state(snap)[1]
+        ]
 
     @staticmethod
     def _parent_id(s: dict) -> int | None:
@@ -1668,9 +1781,6 @@ class SnapshotTable:
         name-mapped layer gets the same semantics by walking the
         evolve-schema log: adds set the birth, renames carry it, drops
         delete it (so a re-add gets the re-add's snapshot id)."""
-        def names_of(ddl: str) -> list[str]:
-            return [f.name for f in T.StructType.fromDDL(ddl).fields]
-
         evolves = [
             s
             for s in meta.get("snapshots", [])
@@ -1680,7 +1790,7 @@ class SnapshotTable:
         first_schema = (
             evolves[0]["summary"]["prev_schema"] if evolves else meta["schema"]
         )
-        births = {n: 0 for n in names_of(first_schema)}
+        births = {n: 0 for n in _ddl_names(first_schema)}
         for s in evolves:
             sid = s["snapshot_id"]
             summ = s.get("summary", {})
@@ -1688,8 +1798,8 @@ class SnapshotTable:
             if r:
                 births[r["to"]] = births.pop(r["from"], 0)
                 continue
-            prev = set(names_of(summ["prev_schema"]))
-            cur = set(names_of(summ["schema"]))
+            prev = set(_ddl_names(summ["prev_schema"]))
+            cur = set(_ddl_names(summ["schema"]))
             for n in cur - prev:
                 births[n] = sid
             for n in prev - cur:
@@ -1968,7 +2078,7 @@ class SnapshotTable:
     _AS_OF_SNAP = object()  # sentinel: default the rename bound to the snapshot
 
     def _scan_snapshot(
-        self, meta: dict, snap: dict, schema: T.StructType, as_of=_AS_OF_SNAP,
+        self, meta: dict, snap: dict | None, schema: T.StructType, as_of=_AS_OF_SNAP,
         positioned: bool = False, files: dict[str, list[str]] | None = None,
     ) -> DataFrame:
         """Rows of snapshot `snap` of `meta`: its active dirs through
@@ -1978,10 +2088,10 @@ class SnapshotTable:
         content of its delete file. `files`: see `_read_entries`."""
         if as_of is self._AS_OF_SNAP:
             as_of = snap["snapshot_id"]
-        deletes = snap.get("active_deletes", [])
+        entries, deletes = self._snapshot_state(snap)
         df = self._read_entries(
             meta,
-            snap["active_dirs"],
+            entries,
             schema=schema,
             with_sid=bool(deletes),
             with_pos=positioned or any(d.get("style") == "position" for d in deletes),
@@ -2008,74 +2118,38 @@ class SnapshotTable:
         TAGS and VERSION AS OF keep the snapshot's schema (`scan_at`).
         as_of=None applies the full rename log, exactly like a main scan
         — the per-dir historical-name mapping handles old dirs."""
-        head = self._head(meta, branch) or {"active_dirs": []}
         return self._scan_snapshot(
-            meta, head, T.StructType.fromDDL(meta["schema"]), as_of=None,
+            meta, self._head(meta, branch), T.StructType.fromDDL(meta["schema"]), as_of=None,
             positioned=positioned, files=files,
         )
-
-    # One table model, two interchangeable scan implementations: the
-    # native DataFrame pipeline below, or the registered `eiws` Python
-    # DataSource (sources/dsv2.py — pyarrow executors, same read
-    # semantics, independently fuzz/oracle-verified). Setting the session
-    # conf `spark.eiws.scan.via-format=true` routes every library read
-    # entry point (scan / scan_at / scan_as_of / scan_incremental, and
-    # therefore every SqlCatalog name read) through the format reader, so
-    # SQL-over-name and `spark.read.format("eiws")` share ONE scan path —
-    # the reference's reads are catalog-name-based over the same format
-    # reader (`bronze-silver.py:132,146-149`). Limitations of the format
-    # path (complex column types, the __sid/__rel internals the DML
-    # machinery needs) stay on the native pipeline, which DML uses
-    # directly via _read_entries.
-    VIA_FORMAT_CONF = "spark.eiws.scan.via-format"
-
-    def _via_format(self) -> bool:
-        if self.spark is None:
-            return False
-        try:
-            v = self.spark.conf.get(self.VIA_FORMAT_CONF, "false")
-        except Exception:
-            return False
-        return str(v).lower() == "true"
-
-    def _format_scan(self, **options) -> DataFrame:
-        from .sources import dsv2
-
-        dsv2.register(self.spark)
-        r = self.spark.read.format(dsv2.FORMAT_NAME).option("table", self.root)
-        for k, v in options.items():
-            if v is not None:
-                r = r.option(k, str(v))
-        return r.load()
 
     def scan(self, branch: str = "main") -> DataFrame:
         """Full current-state scan (S5): active dirs minus exclusion masks,
         minus MOR delete keys. `branch` reads a staged ref's state
         (Iceberg `VERSION AS OF 'branch'` / branch_<name> read)."""
-        if self._via_format():
-            return self._format_scan(branch=branch)
         return self._scan_head(self._load(), branch)
 
     def scan_incremental(self, start_snapshot_id: int | None, end_snapshot_id: int) -> DataFrame:
         """Rows appended in (start, end] — Iceberg incremental-read semantics
         (`bronze-silver.py:146-149`): appends only; raises on overwrite in
         range, as Iceberg does."""
-        if self._via_format():
-            return self._format_scan(
-                **{
-                    "start-snapshot-id": start_snapshot_id or 0,
-                    "end-snapshot-id": end_snapshot_id,
-                }
-            )
-        lo = start_snapshot_id or 0
         meta = self._load()
-        # walk the PARENT CHAIN from the end snapshot, not the raw list:
-        # with branches, ids interleave across lineages and an id-range
-        # filter would leak sibling-branch commits into the read
-        chain = self._lineage(meta, end_snapshot_id)
-        if not chain or chain[0]["snapshot_id"] != end_snapshot_id:
-            raise ValueError(f"unknown snapshot {end_snapshot_id}")
+        return self._read_entries(
+            meta, self._append_dirs(meta, start_snapshot_id or 0, end_snapshot_id)
+        )
+
+    def _append_dirs(self, meta: dict, lo: int, hi: int) -> list[str]:
+        """The data dirs appended in (lo, hi]: the parent chain of `hi`
+        (with branches, ids interleave across lineages and an id-range
+        filter would leak sibling-branch commits into the read). Raises on
+        a non-append commit in range and on a range that crosses expired
+        snapshots (Iceberg errors on reads over expired snapshots)."""
+        chain = self._lineage(meta, hi)
+        if not chain or chain[0]["snapshot_id"] != hi:
+            raise ValueError(f"unknown snapshot {hi}")
         rels: list[str] = []
+        # a chain that ends before reaching `lo` (or, for lo=0, before the
+        # root) crossed an expired ancestor
         reached_lo = lo == 0 and self._parent_id(chain[-1]) is None
         for s in chain:
             if s["snapshot_id"] <= lo:
@@ -2089,16 +2163,9 @@ class SnapshotTable:
                     f"{s['snapshot_id']} ({s['operation']})"
                 )
             rels += s["dirs"]
-        # a chain that ends before reaching `lo` (or, for lo=0, before the
-        # root) crossed an expired ancestor — raise instead of silently
-        # skipping rows (Iceberg errors on reads over expired snapshots)
-        if not reached_lo and not (
-            lo == 0 and self._parent_id(chain[-1]) is None
-        ):
-            raise ValueError(
-                f"incremental range ({lo}, {end_snapshot_id}] spans expired snapshots"
-            )
-        return self._read_entries(meta, rels)
+        if not reached_lo:
+            raise ValueError(f"incremental range ({lo}, {hi}] spans expired snapshots")
+        return rels
 
     def changes(
         self,
@@ -2343,13 +2410,9 @@ class SnapshotTable:
                 ckey = json.dumps(e, sort_keys=True) if isinstance(e, dict) else str(e)
                 ent = entry_cache.get(ckey)
                 if ent is None:
-                    rel, excl = _entry_rel(e), _entry_excl_full(self.root, e)
-                    excl_set = {json.dumps(x, sort_keys=True) for x in excl}
-                    ws = self._dir_manifest(meta, by_sid, rel)
+                    _rel, _excl, files = self._entry_files(meta, by_sid, e)
                     ent = entry_cache[ckey] = {
-                        f["path"]: (f["rows"], f["bytes"])
-                        for f in ws.get("files", [])
-                        if json.dumps(f["partition"], sort_keys=True) not in excl_set
+                        f["path"]: (f["rows"], f["bytes"]) for f in files
                     }
                 live.update(ent)
             live_by_sid[s["snapshot_id"]] = live
@@ -2396,41 +2459,24 @@ class SnapshotTable:
         equality-delete files (content=2). Row counts/bytes come from the
         manifest recorded at write time, not a re-scan."""
         meta = self._load()
-        snaps = meta["snapshots"]
-        schema = (
+        # a None main head (the only commits so far landed on a BRANCH —
+        # WAP staging before the first main publish): main's metadata
+        # view is empty, not an error
+        head = self._head(meta)
+        rows = [
+            (0, f["path"], _part_repr(f["partition"]), f["rows"], f["bytes"], _dir_sid(rel))
+            for rel, f in self._snapshot_files(meta, head)
+        ]
+        rows += [
+            (2, f["path"], "", f["rows"], f["bytes"], d["sid"])
+            for d, stats in self._snapshot_deletes(meta, head)
+            for f in stats
+        ]
+        return self.spark.createDataFrame(
+            rows,
             "content int, file_path string, partition string, record_count long,"
-            " file_bytes long, snapshot_id long"
+            " file_bytes long, snapshot_id long",
         )
-        last = self._head(meta)
-        # `snaps` non-empty with a None main head happens when the only
-        # commits so far landed on a BRANCH (WAP staging before the first
-        # main publish) — main's metadata view is empty, not an error
-        if not snaps or last is None:
-            return self.spark.createDataFrame([], schema)
-        by_sid = {s["snapshot_id"]: s for s in snaps}
-
-        def part_repr(part: dict) -> str:
-            return "/".join(
-                f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-                for c, v in part.items()
-            )
-
-        rows = []
-        for e in last["active_dirs"]:
-            rel, excl = _entry_rel(e), _entry_excl_full(self.root, e)
-            ws = self._dir_manifest(meta, by_sid, rel)
-            for f in ws.get("files", []):
-                if f["partition"] in excl:
-                    continue  # masked by a later partition-scoped rewrite
-                rows.append(
-                    (0, f["path"], part_repr(f["partition"]), f["rows"], f["bytes"],
-                     ws["snapshot_id"])
-                )
-        for d in last.get("active_deletes", []):
-            ws = self._dir_manifest(meta, by_sid, d["file"])
-            for f in ws.get("delete_file_stats", []):
-                rows.append((2, f["path"], "", f["rows"], f["bytes"], d["sid"]))
-        return self.spark.createDataFrame(rows, schema)
 
     def partitions_table(self) -> DataFrame:
         """Metadata table (`<table>.partitions` analogue): per live
@@ -2442,11 +2488,7 @@ class SnapshotTable:
 
         agg: dict[str, list[int]] = defaultdict(lambda: [0, 0, 0])
         for _rel, f in self._live_files():
-            part = "/".join(
-                f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-                for c, v in f["partition"].items()
-            )
-            a = agg[part]
+            a = agg[_part_repr(f["partition"])]
             a[0] += 1
             a[1] += f["rows"]
             a[2] += f["bytes"]
@@ -2462,12 +2504,9 @@ class SnapshotTable:
         rows = []
         for s in self._load()["snapshots"]:
             for f in s.get("files", []):
-                part = "/".join(
-                    f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-                    for c, v in f["partition"].items()
-                )
                 rows.append(
-                    (s["snapshot_id"], 0, f["path"], part, f["rows"], f["bytes"])
+                    (s["snapshot_id"], 0, f["path"], _part_repr(f["partition"]),
+                     f["rows"], f["bytes"])
                 )
             for f in s.get("delete_file_stats", []):
                 rows.append((s["snapshot_id"], 2, f["path"], "", f["rows"], f["bytes"]))
@@ -2518,53 +2557,36 @@ class SnapshotTable:
         that ADDED the file, or the head commit for DELETED entries) to
         answer "which commit did this to the file" with zero data I/O."""
         meta = self._load()
-        snaps = meta["snapshots"]
         schema = (
             "status int, snapshot_id long, content int, file_path string,"
             " partition string, record_count long, file_bytes long"
         )
         head = self._head(meta)
-        if not snaps or head is None:  # empty main (e.g. branch-only WAP table)
+        if head is None:  # empty main (e.g. branch-only WAP table)
             return self.spark.createDataFrame([], schema)
-        by_sid = {s["snapshot_id"]: s for s in snaps}
         head_sid = head["snapshot_id"]
+        by_sid = {s["snapshot_id"]: s for s in meta["snapshots"]}
 
-        def live(snap: dict) -> dict:
-            out = {}
-            for e in snap["active_dirs"]:
-                rel, excl = _entry_rel(e), _entry_excl_full(self.root, e)
-                ws = self._dir_manifest(meta, by_sid, rel)
-                for f in ws.get("files", []):
-                    if f["partition"] in excl:
-                        continue
-                    out[f["path"]] = (_dir_sid(rel), f)
-            return out
-
-        def part_repr(part: dict) -> str:
-            return "/".join(
-                f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-                for c, v in part.items()
-            )
+        def live(snap: dict | None) -> dict:
+            return {f["path"]: (_dir_sid(rel), f) for rel, f in self._snapshot_files(meta, snap)}
 
         cur = live(head)
-        parent_sid = self._parent_id(head)
         # parent may be expired: no tombstones derivable, current-only view
-        prev = live(by_sid[parent_sid]) if parent_sid in by_sid else {}
+        prev = live(by_sid.get(self._parent_id(head)))
         rows = []
         for path, (sid, f) in cur.items():
             rows.append(
                 (1 if sid == head_sid else 0, sid, 0, path,
-                 part_repr(f["partition"]), f["rows"], f["bytes"])
+                 _part_repr(f["partition"]), f["rows"], f["bytes"])
             )
         for path, (_sid, f) in prev.items():
             if path not in cur:
                 rows.append(
-                    (2, head_sid, 0, path, part_repr(f["partition"]),
+                    (2, head_sid, 0, path, _part_repr(f["partition"]),
                      f["rows"], f["bytes"])
                 )
-        for d in head.get("active_deletes", []):
-            ws = self._dir_manifest(meta, by_sid, d["file"])
-            for f in ws.get("delete_file_stats", []):
+        for d, stats in self._snapshot_deletes(meta, head):
+            for f in stats:
                 rows.append(
                     (1 if d["sid"] == head_sid else 0, d["sid"], 2,
                      f["path"], "", f["rows"], f["bytes"])
@@ -2831,7 +2853,9 @@ class SnapshotTable:
             if mask_rel is None:
                 new_excl = list(excl) + [p for p in parts if p not in excl]
                 known = dir_parts.get(erel)
-                if not masks and known is not None and all(p in new_excl for p in known):
+                if not masks and known is not None and all(
+                    _raw_part(p) in new_excl for p in known
+                ):
                     continue  # every partition in this dir is masked → drop it
                 entry = {"dir": erel, "exclude": new_excl}
                 if masks:
@@ -3037,23 +3061,29 @@ class SnapshotTable:
         """Time-travel read: table state AS OF a snapshot id, tag, or
         branch name (Iceberg `VERSION AS OF` accepts all three), with the
         schema, exclusion masks, and delete files as of that snapshot."""
-        if self._via_format():
-            return self._format_scan(**{"snapshot-id": ref})
         meta = self._load()
+        snap = self._resolve_ref(meta, ref)
+        return self._scan_snapshot(
+            meta, snap, T.StructType.fromDDL(self._ddl_at(meta, snap["snapshot_id"]))
+        )
+
+    @staticmethod
+    def _resolve_ref(meta: dict, ref: int | str) -> dict:
+        """The snapshot entry a VERSION AS OF `ref` names: a tag, a branch
+        name, or a snapshot id (an int or its decimal string)."""
         if isinstance(ref, str):
-            tags = meta.get("tags", {})
-            branches = meta.get("branches", {})
+            tags, branches = meta.get("tags", {}), meta.get("branches", {})
             if ref in tags:
                 ref = tags[ref]
             elif ref in branches:
                 ref = branches[ref]
+            elif ref.lstrip("-").isdigit():
+                ref = int(ref)
             else:
                 raise ValueError(f"unknown ref {ref!r}")
         for s in meta["snapshots"]:
             if s["snapshot_id"] == ref:
-                return self._scan_snapshot(
-                    meta, s, T.StructType.fromDDL(self._ddl_at(meta, ref))
-                )
+                return s
         raise ValueError(f"unknown snapshot {ref}")
 
     def scan_as_of(self, ts) -> DataFrame:
@@ -3065,24 +3095,31 @@ class SnapshotTable:
         lineage are not candidates (this table keeps no metadata-log of
         ref re-points, a documented difference from Iceberg's
         snapshot-log)."""
+        meta = self._load()
+        snap = self._snapshot_as_of(meta, ts)
+        return self._scan_snapshot(
+            meta, snap, T.StructType.fromDDL(self._ddl_at(meta, snap["snapshot_id"]))
+        )
+
+    def _snapshot_as_of(self, meta: dict, ts) -> dict:
+        """The snapshot entry `scan_as_of(ts)` reads; `ts` may also be a
+        decimal string of epoch seconds (the format reader's option)."""
         import datetime as _dt
 
         if isinstance(ts, str):
-            ts = _dt.datetime.fromisoformat(ts).replace(tzinfo=_dt.timezone.utc).timestamp()
-        elif isinstance(ts, _dt.datetime):
+            try:
+                ts = float(ts)
+            except ValueError:
+                ts = _dt.datetime.fromisoformat(ts).replace(tzinfo=_dt.timezone.utc)
+        if isinstance(ts, _dt.datetime):
             ts = ts.replace(tzinfo=ts.tzinfo or _dt.timezone.utc).timestamp()
-        if self._via_format():
-            return self._format_scan(**{"as-of-timestamp": ts})
-        meta = self._load()
         head = self._head(meta)
         if head is None:
             raise ValueError("empty table: no snapshot at or before that time")
         lineage = self._lineage(meta, head["snapshot_id"])  # newest first
         for s in lineage:
             if float(s["made_current_at"]) <= float(ts):
-                return self._scan_snapshot(
-                    meta, s, T.StructType.fromDDL(self._ddl_at(meta, s["snapshot_id"]))
-                )
+                return s
         raise ValueError(
             f"no snapshot at or before {ts} (oldest retained: "
             f"{float(lineage[-1]['made_current_at'])})"
@@ -3195,9 +3232,7 @@ class SnapshotTable:
             if len(live) <= max_files_per_partition:
                 return None
             return self.compact()
-        counts = Counter(
-            tuple(sorted(f["partition"].items())) for _rel, f in live
-        )
+        counts = Counter(tuple(sorted(_file_part(f).items())) for _rel, f in live)
         over = [dict(k) for k, c in counts.items() if c > max_files_per_partition]
         if not over:
             return None
@@ -3223,22 +3258,9 @@ class SnapshotTable:
     def _live_files(self, meta: dict | None = None) -> list[tuple[str, dict]]:
         """(dir_rel, manifest entry) for every data file live in the
         current snapshot of `meta` (default: a fresh load) — active dirs
-        minus partition-exclusion masks."""
+        minus partition-exclusion masks (`_snapshot_files`)."""
         meta = meta or self._load()
-        snaps = meta["snapshots"]
-        head = self._head(meta)
-        if not snaps or head is None:  # empty main (branch-only WAP table)
-            return []
-        by_sid = {s["snapshot_id"]: s for s in snaps}
-        out = []
-        for e in head["active_dirs"]:
-            rel, excl = _entry_rel(e), _entry_excl_full(self.root, e)
-            ws = self._dir_manifest(meta, by_sid, rel)
-            for f in ws.get("files", []):
-                if f["partition"] in excl:
-                    continue
-                out.append((rel, f))
-        return out
+        return self._snapshot_files(meta, self._head(meta))
 
     def plan_files(self, col: str, lo, hi) -> tuple[list[tuple[str, dict]], int]:
         """Manifest-only scan planning: the live files whose [min, max]
@@ -3254,34 +3276,7 @@ class SnapshotTable:
         prunes on `ts` filters without `ts_day` appearing in the query.
         `bucket(N, col)` prunes equality predicates (lo == hi) to 1/N of
         the files; monotone transforms prune ranges."""
-        fields = [f for f in self._part_fields(self._load()) if f.source == col]
-        bucket_of = {f.name: self._bucket_of(f) for f in fields if f.transform == "bucket"}
-        renames = self._renames(self._load())
-        live = self._live_files()
-        kept = []
-        for rel, f in live:
-            hist_col = self._name_at(renames, _dir_sid(rel), col, None)
-            b = f.get("bounds", {}).get(hist_col)
-            if b is not None and (hi < b[0] or lo > b[1]):
-                continue
-            part = f.get("partition", {})
-            if any(
-                pf.name in part
-                and not prune_keep(pf, part[pf.name], lo, hi, bucket_of=bucket_of.get(pf.name))
-                for pf in fields
-            ):
-                continue
-            kept.append((rel, f))
-        return kept, len(live)
-
-    def _bucket_of(self, pf: PartitionField):
-        """`value -> bucket number` for one bucket partition field — the
-        same Iceberg bucket hash (murmur3 seed 0 over the serialized
-        value) the writer used; pure driver-side arithmetic, no job."""
-        from .partitioning import iceberg_bucket
-
-        dtype = dict((sf.name, sf.dataType) for sf in self.schema().fields)[pf.source]
-        return lambda value: iceberg_bucket(value, pf.param, dtype)
+        return self._plan(self._load(), col, [(lo, hi)])
 
     def plan_files_in(self, col: str, values) -> tuple[list[tuple[str, dict]], int]:
         """Manifest-only planning for an IN (set-membership) predicate —
@@ -3295,45 +3290,57 @@ class SnapshotTable:
         O(files x |values|) — callers pass bounded sets (e.g. a batch's
         cluster ids, <= K, the same driver-state bound as the centroid
         list itself)."""
-        vals = [v for v in values if v is not None]
-        total = len(self._live_files())
-        if not vals:
-            return [], total
-        lo, hi = min(vals), max(vals)
-        meta = self._load()
+        return self._plan(self._load(), col, [(v, v) for v in values if v is not None])
+
+    def _plan(self, meta: dict, col: str, ranges: list) -> tuple[list[tuple[str, dict]], int]:
+        """The planner behind `plan_files` / `plan_files_in`: the live
+        files of `meta`'s head that may hold a row with `col` in ANY of
+        the [lo, hi] `ranges` (none: no file), and the live-file count.
+        Column bounds prune against the ranges' hull; partition values
+        (raw form, `_file_part`) against each range in transform space,
+        with `bucket` fields hashed by the writer's Iceberg bucket
+        function."""
+        live = self._live_files(meta)
+        if not ranges:
+            return [], len(live)
+        lo, hi = min(r[0] for r in ranges), max(r[1] for r in ranges)
         fields = [f for f in self._part_fields(meta) if f.source == col]
-        bucket_of = {
-            f.name: self._bucket_of(f) for f in fields if f.transform == "bucket"
-        }
+        bucket_of = {}
+        if any(f.transform == "bucket" for f in fields):
+            from .partitioning import iceberg_bucket
+
+            dtype = T.StructType.fromDDL(meta["schema"])[col].dataType
+            bucket_of = {
+                f.name: (lambda v, n=f.param: iceberg_bucket(v, n, dtype))
+                for f in fields if f.transform == "bucket"
+            }
         renames = self._renames(meta)
         kept = []
-        for rel, f in self._live_files():
-            hist_col = self._name_at(renames, _dir_sid(rel), col, None)
-            b = f.get("bounds", {}).get(hist_col)
+        for rel, f in live:
+            b = f.get("bounds", {}).get(self._name_at(renames, _dir_sid(rel), col, None))
             if b is not None and (hi < b[0] or lo > b[1]):
                 continue
-            part = f.get("partition", {})
+            part = _file_part(f)
             if any(
                 pf.name in part
                 and not any(
-                    prune_keep(
-                        pf, part[pf.name], v, v, bucket_of=bucket_of.get(pf.name)
-                    )
-                    for v in vals
+                    prune_keep(pf, part[pf.name], a, z, bucket_of=bucket_of.get(pf.name))
+                    for a, z in ranges
                 )
                 for pf in fields
             ):
                 continue
             kept.append((rel, f))
-        return kept, total
+        return kept, len(live)
 
     def scan_pruned_in(self, col: str, values) -> DataFrame:
         """Current-state scan reading only the files `plan_files_in`
         keeps for `col IN (values)`. Same contract as `scan_pruned`:
         rows are unfiltered (callers apply their predicate on top),
         correctness identical to `scan()`, MOR deletes still apply."""
-        kept, _total = self.plan_files_in(col, values)
-        return self._scan_files(kept)
+        meta = self._load()
+        kept, _total = self._plan(meta, col, [(v, v) for v in values if v is not None])
+        return self._scan_files(meta, kept)
 
     def scan_pruned(self, col: str, lo, hi) -> DataFrame:
         """Current-state scan reading ONLY the files `plan_files` keeps.
@@ -3341,17 +3348,17 @@ class SnapshotTable:
         apply their predicate on top; correctness is identical to
         `scan().filter(...)` because pruning only drops files that cannot
         contain matching rows. MOR delete files still apply."""
-        kept, _total = self.plan_files(col, lo, hi)
-        return self._scan_files(kept)
+        meta = self._load()
+        return self._scan_files(meta, self._plan(meta, col, [(lo, hi)])[0])
 
-    def _scan_files(self, kept: list[tuple[str, dict]]) -> DataFrame:
-        """The current state read through `_read_entries` narrowed to a
+    def _scan_files(self, meta: dict, kept: list[tuple[str, dict]]) -> DataFrame:
+        """The state of `meta` read through `_read_entries` narrowed to a
         planned file list (shared by `scan_pruned` / `scan_pruned_in`):
         same name mapping, partition parse and delete files as `scan()`."""
         files: dict[str, list[str]] = {}
         for rel, f in kept:
             files.setdefault(rel, []).append(f["path"])
-        return self._scan_head(self._load(), files=files)
+        return self._scan_head(meta, files=files)
 
     def expire_snapshots(
         self, keep_last: int = 1, older_than: float | None = None

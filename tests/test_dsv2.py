@@ -1,9 +1,11 @@
 """`spark.read.format("eiws")` (Python Data Source) vs the native
-SnapshotTable scan paths: the DSv2 reader is an INDEPENDENT pyarrow
-implementation of the table format's read semantics, so agreement on
-every fixture shape is a cross-implementation check of the format itself
-(the argument of tests/test_iceberg_external_decode.py, applied to the
-table layer instead of the Iceberg metadata)."""
+SnapshotTable scan paths. Both plan from the table layer (one definition
+of which files a snapshot reads), but execute independently: Spark's
+parquet relations and anti-joins on one side, pyarrow reads with
+per-file delete, rename and cross-spec exclusion handling on the other.
+Agreement on every fixture shape checks the two executors against each
+other; the table-model fuzz and the DuckDB oracles are the independent
+references for both."""
 
 from __future__ import annotations
 
@@ -292,64 +294,29 @@ def test_warehouse_name_resolution(dsv2_spark, tmp_path):
 
 
 def test_via_format_conf_unifies_read_paths(dsv2_spark):
-    """With spark.eiws.scan.via-format=true every library read entry
-    point (scan / scan_at / scan_as_of / scan_incremental) routes
-    through the registered Python data source and returns identical
-    results — read-path unification, plan-verified."""
-    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
-
+    """Every library read entry point (scan / scan_at / scan_as_of /
+    scan_incremental) and its eiws-format counterpart plan from the same
+    table-layer scan relation and return identical results; the format
+    side is plan-verified to run through the Python data source."""
     root = _fx("tablemeta_demo")
     t = _native(dsv2_spark, root)
-    native = {
-        "scan": _rows(t.scan()),
-        "at2": _rows(t.scan_at(2)),
-        "tag": _rows(t.scan_at("audit")),
-        "asof": _rows(t.scan_as_of(1700000070)),
-        "incr": _rows(t.scan_incremental(1, 2)),
-    }
-    dsv2_spark.conf.set(SnapshotTable.VIA_FORMAT_CONF, "true")
-    try:
-        routed = t.scan()
-        plan = routed._jdf.queryExecution().executedPlan().toString()
-        assert "BatchScan eiws" in plan
-        assert _rows(routed) == native["scan"]
-        assert _rows(t.scan_at(2)) == native["at2"]
-        assert _rows(t.scan_at("audit")) == native["tag"]
-        assert _rows(t.scan_as_of(1700000070)) == native["asof"]
-        assert _rows(t.scan_incremental(1, 2)) == native["incr"]
-    finally:
-        dsv2_spark.conf.unset(SnapshotTable.VIA_FORMAT_CONF)
 
+    def fmt(**opts):
+        r = dsv2_spark.read.format("eiws").option("table", root)
+        for k, v in opts.items():
+            r = r.option(k.replace("_", "-"), v)
+        return r.load()
 
-Q_META_VIA_FORMAT = [
-    # registered q_meta_* queries whose plans read through scan/scan_at/
-    # scan_as_of/scan_incremental — the entry points the via-format flag
-    # reroutes; each must produce identical rows through both paths
-    "q_meta_time_travel",
-    "q_meta_incremental",
-    "q_meta_refs",
-    "q_meta_dml",
-    "q_meta_dyn_overwrite",
-    "q_meta_as_of",
-]
-
-
-@pytest.mark.parametrize("name", Q_META_VIA_FORMAT)
-def test_q_meta_queries_via_format_path(dsv2_spark, name):
-    """The existing q_meta_* queries run green — with identical results —
-    when the library scan entry points are routed through the eiws
-    format reader (read-path unification, VERDICT r08 task 3)."""
-    from emr_apache_iceberg_workshop_spark.plans.registry import registry
-    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
-
-    fn = registry()[name].fn
-    native = _rows(fn(dsv2_spark, "/root/testdata/sf0.001"))
-    dsv2_spark.conf.set(SnapshotTable.VIA_FORMAT_CONF, "true")
-    try:
-        routed = _rows(fn(dsv2_spark, "/root/testdata/sf0.001"))
-    finally:
-        dsv2_spark.conf.unset(SnapshotTable.VIA_FORMAT_CONF)
-    assert routed == native
+    routed = fmt()
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "BatchScan eiws" in plan
+    assert _rows(routed) == _rows(t.scan())
+    assert _rows(fmt(snapshot_id="2")) == _rows(t.scan_at(2))
+    assert _rows(fmt(snapshot_id="audit")) == _rows(t.scan_at("audit"))
+    assert _rows(fmt(as_of_timestamp="1700000070")) == _rows(t.scan_as_of(1700000070))
+    assert _rows(fmt(start_snapshot_id="1", end_snapshot_id="2")) == _rows(
+        t.scan_incremental(1, 2)
+    )
 
 
 def test_cross_spec_exclusion_rows(spark, tmp_path):

@@ -26,7 +26,7 @@ from pyspark.sql import types as T
 
 # -- 1. DDL parsers vs complex types ----------------------------------------
 def test_ddl_names_complex_types():
-    from emr_apache_iceberg_workshop_spark.sources.dsv2 import _ddl_names
+    from emr_apache_iceberg_workshop_spark.tables import _ddl_names
 
     assert _ddl_names("a bigint, b string") == ["a", "b"]
     assert _ddl_names("a:bigint,b:string") == ["a", "b"]
@@ -63,10 +63,10 @@ def test_ddl_fields_complex_types():
 
 def test_births_complex_schema():
     """_births keyed by correct names even with a map column present."""
-    from emr_apache_iceberg_workshop_spark.sources.dsv2 import _births
+    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
 
     meta = {"schema": "id bigint, m map<string,int>", "snapshots": []}
-    assert _births(meta) == {"id": 0, "m": 0}
+    assert SnapshotTable._births(meta) == {"id": 0, "m": 0}
 
 
 # -- 2/3. write.sort-order follows renames; missing column warns -------------

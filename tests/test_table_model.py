@@ -352,26 +352,6 @@ def _run_model(spark, tmp_path, seed: int, steps: int = 18):
     # keep_last; at least the head must still replay
     assert checked >= 1  # the walk actually exercised history
 
-    # READ-PATH UNIFICATION parity: with spark.eiws.scan.via-format set,
-    # the library entry points (scan / scan_at — and therefore every
-    # SqlCatalog name read) route through the registered `eiws` Python
-    # DataSource; the fuzz's final state and a historical state must be
-    # identical through both implementations, and the routed plan must
-    # genuinely be the Python data source (not silently the native scan)
-    spark.conf.set(SnapshotTable.VIA_FORMAT_CONF, "true")
-    try:
-        routed = t.scan()
-        assert "BatchScan eiws" in routed._jdf.queryExecution().executedPlan().toString(), (
-            "via-format flag did not route through the Python data source"
-        )
-        assert _scan_rows(routed) == _multiset(main), f"seed={seed} format scan"
-        for sid in sorted(set(states) & lineage)[-2:]:
-            assert _scan_rows(t.scan_at(sid)) == _multiset(states[sid]), (
-                f"seed={seed} format time travel to {sid}"
-            )
-    finally:
-        spark.conf.unset(SnapshotTable.VIA_FORMAT_CONF)
-
     # expiration keeps the current state intact
     t.expire_snapshots(keep_last=2)
     assert _scan_rows(t.scan()) == _multiset(main)
