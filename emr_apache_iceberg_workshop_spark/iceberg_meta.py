@@ -689,7 +689,7 @@ def write_iceberg_metadata(
     # published vectors in tests).
     _TF_JSON = {"days": "day", "hours": "hour", "months": "month", "years": "year"}
     # Partition-spec evolution: each data dir was written under the spec
-    # current AT ITS COMMIT, reconstructed from the evolve-partition log.
+    # current AT ITS COMMIT (`SnapshotTable._spec_at`).
     # Every distinct spec gets its own spec-id and manifests; partition
     # field ids are allocated from ONE shared registry so a field reused
     # across specs keeps its id (the Iceberg assignment rule).
@@ -721,30 +721,6 @@ def write_iceberg_metadata(
             )
         return sf_, pf_
 
-    evolves = sorted(
-        (s["snapshot_id"], s["summary"]["partition_by"])
-        for s in meta["snapshots"]
-        if s.get("operation") == "evolve-partition"
-    )
-    initial_spec = (
-        next(
-            s["summary"]["prev_partition_by"]
-            for s in meta["snapshots"]
-            if s.get("operation") == "evolve-partition"
-        )
-        if evolves
-        else meta["partition_by"]
-    )
-
-    def spec_at(dsid: int) -> tuple:
-        cur = initial_spec
-        for esid, pby in evolves:
-            if esid <= dsid:
-                cur = pby
-            else:
-                break
-        return tuple(cur)
-
     spec_ids: dict[tuple, int] = {}
     specs_built: dict[int, tuple[list, list]] = {}
 
@@ -757,6 +733,12 @@ def write_iceberg_metadata(
 
     cur_spec_id = spec_id_for(tuple(meta["partition_by"]))  # always 0
     spec_fields, part_fields = specs_built[cur_spec_id]
+    spec_of_dir: dict[int, int] = {}  # data dir sid -> spec id
+
+    def dir_spec_id(dsid: int) -> int:
+        if dsid not in spec_of_dir:
+            spec_of_dir[dsid] = spec_id_for(tuple(table._spec_at(meta, dsid)))
+        return spec_of_dir[dsid]
 
     meta_dir = os.path.join(root, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
@@ -818,7 +800,7 @@ def write_iceberg_metadata(
             # v2, and the commit whose partition spec the file was written
             # under (its manifest)
             dsid = _dir_sid(rel)
-            groups.setdefault(spec_id_for(spec_at(dsid)), []).append((f, dsid))
+            groups.setdefault(dir_spec_id(dsid), []).append((f, dsid))
         mrecs = []
         total_rows = 0
         n_entries = 0

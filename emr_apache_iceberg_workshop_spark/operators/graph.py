@@ -175,7 +175,8 @@ def union_find_labels(pairs) -> dict:
 
 
 def local_frame(spark, columns: dict, schema) -> DataFrame:
-    """{column name: values} → a DataFrame over ONE Arrow batch.
+    """{column name: values} → a one-partition DataFrame over ONE Arrow
+    batch.
 
     Arrow-batched driver→JVM transfer instead of row-at-a-time Py4J
     pickling — at the 100k-edge cap the pickled path measured ~1.5s per
@@ -183,13 +184,17 @@ def local_frame(spark, columns: dict, schema) -> DataFrame:
     pandas frame: PySpark sends an EMPTY pandas frame down the pickled
     path, whose plan is a LogicalRDD, while an Arrow table of any size
     becomes a LocalRelation (which `tables._is_local` reads by value
-    instead of checkpointing)."""
+    instead of checkpointing). Spark slices a LocalRelation into one task
+    per core (`leafNodeDefaultParallelism`), so a write of a few dozen
+    driver-held rows ran as many tasks and files as the session has
+    cores; callers hold at most `plans.dedup._CLUSTER_LOCAL_MAX` rows, so
+    the frame is coalesced to one partition."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     arrow = to_arrow_schema(schema)
     table = pa.table([pa.array(columns[f.name], f.type) for f in arrow], schema=arrow)
-    return spark.createDataFrame(table, schema)
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 _LABELS_SCHEMA = T.StructType(

@@ -100,8 +100,7 @@ def run_raw_bronze(
         sid = table.write(df, mode="append", operation="create")
 
     # appended rows from the new snapshot's manifest (parquet footers)
-    snap = next(s for s in table.snapshots() if s.snapshot_id == sid)
-    rows = sum(f["rows"] for f in snap.files)
+    rows = sum(f["rows"] for f in table.snapshot(sid).files)
     # commit watermark only after the write landed
     ckpt.commit_processed_time(max_mtime)
     return {"files": len(files), "rows": rows, "snapshot_id": sid, "skipped": False}

@@ -784,6 +784,17 @@ if _STREAM_WRITER_BASE is None:  # pragma: no cover
     from pyspark.sql.datasource import DataSourceStreamWriter as _STREAM_WRITER_BASE
 
 
+def _max_batch_id(snaps, scoped) -> int | None:
+    """Highest streaming batch id stamped in the summaries of `snaps`
+    that `scoped(summary)` accepts (None: no such stamp)."""
+    ids = [
+        int(s.summary["streaming.batch-id"])
+        for s in snaps
+        if s.summary.get("streaming.batch-id") is not None and scoped(s.summary)
+    ]
+    return max(ids, default=None)
+
+
 class SnapshotTableStreamWriter(_StageWriter, _STREAM_WRITER_BASE):
     """Exactly-once streaming append sink: each microbatch commits one
     append snapshot with (query scope, batch id) stamped into the summary
@@ -852,14 +863,18 @@ class SnapshotTableStreamWriter(_StageWriter, _STREAM_WRITER_BASE):
     def commit(self, messages, batchId):
         t = SnapshotTable(None, self.root)
         # guard matches THIS scope only — never unscoped snapshots (which
-        # belong to other writers: append_stream_batch without a scope)
-        done = [
-            s.summary.get("streaming.batch-id")
-            for s in t.snapshots()
-            if s.summary.get("streaming.batch-id") is not None
-            and s.summary.get("streaming.query-scope") == self.scope
-        ]
-        if not done and batchId > 0 and self.adopt_legacy:
+        # belong to other writers: append_stream_batch without a scope).
+        # A main commit folds its stamp into the scope's guard property,
+        # read in O(1) of table history; a branch commit stamps only its
+        # summary (a staged batch must not mark main's guard), so a branch
+        # writer walks the summaries.
+        if self.branch == "main":
+            done = t.max_stream_batch_id(self.scope, adopt_unscoped=False)
+        else:
+            done = _max_batch_id(
+                t.snapshots(), lambda su: su.get("streaming.query-scope") == self.scope
+            )
+        if done is None and batchId > 0 and self.adopt_legacy:
             # one-time upgrade path, EXPLICIT OPT-IN ONLY: snapshots
             # committed by the pre-scope code carry batch ids with NO
             # query-scope. A query resumed from an EXISTING checkpoint
@@ -877,19 +892,10 @@ class SnapshotTableStreamWriter(_StageWriter, _STREAM_WRITER_BASE):
             # pre-scope table, and unset it once this query has committed
             # its first scoped batch. Without the opt-in, unscoped ids
             # are always foreign and never consulted.
-            any_scoped = any(
-                s.summary.get("streaming.batch-id") is not None
-                and "streaming.query-scope" in s.summary
-                for s in t.snapshots()
-            )
-            if not any_scoped:
-                done = [
-                    s.summary.get("streaming.batch-id")
-                    for s in t.snapshots()
-                    if s.summary.get("streaming.batch-id") is not None
-                    and "streaming.query-scope" not in s.summary
-                ]
-        if done and batchId <= max(done):
+            snaps = t.snapshots()
+            if _max_batch_id(snaps, lambda su: "streaming.query-scope" in su) is None:
+                done = _max_batch_id(snaps, lambda su: "streaming.query-scope" not in su)
+        if done is not None and batchId <= done:
             self._abort_stage()  # at-least-once replay of a committed batch
             return
         # publish exactly the files this batch's tasks reported

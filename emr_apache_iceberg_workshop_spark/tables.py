@@ -453,6 +453,11 @@ class SnapshotTable:
     def snapshots(self) -> list[Snapshot]:
         return [Snapshot(**s) for s in self._load()["snapshots"]]
 
+    def snapshot(self, snapshot_id: int) -> Snapshot:
+        """One snapshot by id from one metadata load; `snapshots()`
+        builds every entry of the history."""
+        return Snapshot(**self._resolve_ref(self._load(), snapshot_id))
+
     def latest_snapshot_id(self) -> int | None:
         head = self._head(self._load())
         return head["snapshot_id"] if head else None
@@ -2697,15 +2702,21 @@ class SnapshotTable:
             # labels_df label/CDC frames, the cluster tier's Arrow signature
             # batch, and unions of them) is already materialized BY VALUE;
             # re-evaluation cannot differ and the eager checkpoint would be
-            # a pure extra Spark job per merge commit.
-            src = src if _is_local(src) else src.localCheckpoint(eager=True)
+            # a pure extra Spark job per merge commit. It is coalesced to
+            # one partition instead (a union of local frames has one per
+            # leg), so the data write and the key write each run one task
+            # and write one file.
+            src = src.coalesce(1) if _is_local(src) else src.localCheckpoint(eager=True)
             upserts = src if op_col is None else src.filter(
                 ~(F.coalesce(F.col(op_col), F.lit("")) == F.lit(delete_value))
             )
-            # every source key (incl. deletes) suppresses older rows of that key
+            # every source key (incl. deletes) suppresses older rows of that
+            # key; the source holds one row per key, so its key column IS
+            # the key set: no distinct, no shuffle. One task writes it, so
+            # a checkpoint of many partitions still commits one file.
             return self._commit_mor_delta(
                 "merge", dict({"mode": "merge-on-read"}, **(summary_extra or {})),
-                src.select(*keys).distinct(), keys, data=upserts.select(*cols),
+                src.select(*keys).coalesce(1), keys, data=upserts.select(*cols),
             )
         if meta["partition_by"]:
             src = src.localCheckpoint(eager=True)  # the scoped rewrite reads it 3x

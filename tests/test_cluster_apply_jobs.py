@@ -33,6 +33,24 @@ def _jobs(spark) -> int:
     return spark._jsc.sc().dagScheduler().nextJobId()
 
 
+def _stage_tasks(spark, j0: int, j1: int) -> list:
+    """Per job in [j0, j1): the task counts of the stages that ran, read
+    from the status store once its listener caught up."""
+    sc = spark._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(60_000)
+    store = sc.statusStore()
+    out = []
+    for job_id in range(j0, j1):
+        stages = [store.lastStageAttempt(int(x)) for x in
+                  str(store.job(job_id).stageIds().mkString(",")).split(",") if x]
+        out.append([st.numTasks() for st in stages if st.numCompleteTasks() > 0])
+    return out
+
+
+def _head(t):
+    return t.snapshot(t.latest_snapshot_id())
+
+
 def _labels(t) -> list:
     return sorted((r.doc_id, r.label) for r in t.scan().collect())
 
@@ -43,9 +61,17 @@ def _label_table(spark, root) -> SnapshotTable:
     return t
 
 
+def test_local_frame_is_one_partition(spark):
+    """Spark slices a LocalRelation into one task per core; a driver-held
+    frame (`local_frame`, under `labels_df`) is one partition whatever
+    its size."""
+    assert labels_df(spark, {i: i for i in range(100)}).rdd.getNumPartitions() == 1
+
+
 def test_mor_merge_of_local_union_runs_two_jobs(spark, tmp_path):
     """A Union of two labels_df frames is already materialized: the MOR
-    merge runs the data write and the delete write, nothing else."""
+    merge runs the data write and the delete write, nothing else, each
+    one task writing one file."""
     t = _label_table(spark, str(tmp_path / "labels"))
     cdc = (
         labels_df(spark, {1: 0, 2: 0, 11: 0})
@@ -60,11 +86,47 @@ def test_mor_merge_of_local_union_runs_two_jobs(spark, tmp_path):
     with _microbatch_confs(spark):
         j0 = _jobs(spark)
         t.merge(cdc, keys=["doc_id"], op_col="Op")
-        assert _jobs(spark) - j0 == 2
+        assert _stage_tasks(spark, j0, _jobs(spark)) == [[1], [1]]
+    head = _head(t)
+    assert len(head.files) == len(head.delete_file_stats) == 1
+    assert head.delete_file_stats[0]["rows"] == 4
     want = {i: i for i in range(10)}
     want.update({1: 0, 2: 0, 11: 0})
     del want[3]
     assert _labels(t) == sorted(want.items())
+
+
+def test_mor_merge_writes_checkpointed_keys_without_a_shuffle(spark, tmp_path):
+    """A source that is not driver-held is checkpointed once, and its key
+    column is the equality-delete file as is: one map-only stage writes
+    one file of one row per source key, and the changelog of the commit
+    is unchanged."""
+    t = _label_table(spark, str(tmp_path / "labels"))
+    prev = t.latest_snapshot_id()
+    # a file scan, as a micro-batch reads; a `range` source would carry
+    # its distinct keys through the checkpoint and hide a distinct
+    path = str(tmp_path / "src")
+    spark.range(5, 15).selectExpr("id AS doc_id", "id * 100 AS label").write.parquet(path)
+    src = spark.read.schema(LABELS_DDL).parquet(path)
+    assert not _is_local(src)
+    with _microbatch_confs(spark):
+        j0 = _jobs(spark)
+        sid = t.merge(src, keys=["doc_id"])
+        per_job = _stage_tasks(spark, j0, _jobs(spark))
+    assert len(per_job) == 3 and all(len(stages) == 1 for stages in per_job), per_job
+    head = _head(t)
+    keys = spark.read.parquet(os.path.join(t.root, head.delete_file)).collect()
+    assert sorted(r.doc_id for r in keys) == list(range(5, 15))
+    assert [f["rows"] for f in head.delete_file_stats] == [10]
+    got = sorted(
+        (r._change_type, r.doc_id, r.label)
+        for r in t.changes(prev, sid).collect()
+    )
+    assert got == sorted(
+        [("delete", i, None) for i in range(5, 10)]
+        + [("insert", i, i * 100) for i in range(5, 15)]
+    )
+    assert _labels(t) == [(i, i) for i in range(5)] + [(i, i * 100) for i in range(5, 15)]
 
 
 def test_mor_merge_checkpoints_a_nondeterministic_local_plan(spark, tmp_path):

@@ -248,10 +248,13 @@ def test_stream_tail_exactly_once(wspark, tmp_path):
     ]
 
 
+@pytest.mark.slow
 def test_stream_replayed_batch_is_dropped(wspark, tmp_path):
     """A re-delivered (scope, batch-id) pair commits nothing — the
     at-least-once -> exactly-once guard, exercised by deleting the sink's
-    checkpoint so Spark replays batch 0 from scratch."""
+    checkpoint so Spark replays batch 0 from scratch. The default run
+    checks the same guard on the sink's commit
+    (`test_table_format.py::test_stream_sink_replay_guard_is_property_only`)."""
     from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
 
     schema = T.StructType([T.StructField("id", T.LongType())])

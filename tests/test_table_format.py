@@ -117,11 +117,51 @@ def test_merge_replay_guard_is_property_only(spark, tmp_path, monkeypatch):
     assert _merge_replayed(t, 7, None) and not _merge_replayed(t, 8, None)
 
 
+def test_stream_sink_replay_guard_is_property_only(spark, tmp_path, monkeypatch):
+    """The `eiws` stream sink answers its scoped replay guard from the
+    guard property: a replayed batch is still aborted, and no commit
+    walks the snapshot log."""
+    from emr_apache_iceberg_workshop_spark.sources.dsv2 import SnapshotTableStreamWriter
+    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
+
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), "id bigint")
+
+    def commit(batch_id, scope="qA", branch="main"):
+        # the sink is re-created per commit, as in every Python worker
+        SnapshotTableStreamWriter(
+            {"table": t.root, "query-scope": scope, "branch": branch}, [("id", "bigint")], False
+        ).commit([], batchId=batch_id)
+
+    commit(0)
+
+    def _boom(self):
+        raise AssertionError("stream sink walked the snapshot log")
+
+    monkeypatch.setattr(SnapshotTable, "snapshots", _boom)
+    commit(1)
+    commit(1)  # at-least-once replay: aborted
+    commit(0)
+    commit(2)
+    commit(0, "qB")  # another scope is another query: its batch 0 applies
+    monkeypatch.undo()
+    stamps = [(s.summary["streaming.query-scope"], s.summary["streaming.batch-id"])
+              for s in t.snapshots()]
+    assert stamps == [("qA", 0), ("qA", 1), ("qA", 2), ("qB", 0)]
+    # a branch commit does not stamp main's guard: its replay is still aborted
+    t.create_branch("audit")
+    commit(0, "qC", "audit")
+    commit(0, "qC", "audit")
+    assert [s.summary["streaming.query-scope"] for s in t.snapshots()][4:] == ["qC"]
+
+
 # format rules the table layer owns (tables.py); plans/tablemeta.py keeps
 # its own reading of `_meta.json` because its oracles must be independent
 _OWNER = "tables.py"
-_RULES = {"_lineage", "_births", "_name_at", "_dir_manifest", "_head"}
-_STATE_KEYS = {"active_dirs", "active_deletes", "dir_manifests"}
+_RULES = {"_lineage", "_births", "_name_at", "_dir_manifest", "_head", "_ddl_at", "_spec_at"}
+# table-state keys, and the partition-spec log `_spec_at` reads
+_STATE_KEYS = {
+    "active_dirs", "active_deletes", "dir_manifests", "evolve-partition", "prev_partition_by",
+}
 
 
 def test_format_rules_have_one_definition():
