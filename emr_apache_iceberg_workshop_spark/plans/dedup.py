@@ -1887,15 +1887,9 @@ def apply_cdc_batch(
     re-retract is a masked no-op, the re-append restores the missing
     signatures. Returns True when this call committed (False = replay
     skip or empty batch)."""
-    if batch_id is not None:
-        done = store.max_stream_batch_id(scope, adopt_unscoped=False)
-        if done is not None and batch_id <= done:
-            return False
-    stamp = None
-    if batch_id is not None:
-        stamp = {"streaming.batch-id": int(batch_id)}
-        if scope is not None:
-            stamp["streaming.query-scope"] = scope
+    stamp = store.stream_stamp(scope, batch_id)
+    if stamp is None:
+        return False
     dels = cdc_df.filter(F.col("Op").isin("D", "U")).select("doc_id")
     ups = cdc_df.filter(F.col("Op").isin("I", "U")).select("doc_id", "text")
     has_ups = bool(ups.limit(1).count())

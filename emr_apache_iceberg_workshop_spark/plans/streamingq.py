@@ -722,25 +722,15 @@ def incremental_dedup_stream_batch(
     sig = minhash_signature_df(
         batch_df.select("doc_id", "text")
     ).localCheckpoint(eager=True)
-    # EXACT scope match only — never adopt a FOREIGN writer's unscoped
-    # batch ids as this query's history (the dsv2 legacy-adoption hazard:
-    # a scoped query resuming against a store populated by unscoped
-    # writers would classify its own first batches as replays and
-    # silently drop their signature appends). This function is new in
-    # r11, so there is no legacy-unscoped migration to honor. O(1)
-    # property lookup, stamped atomically with the signature-append
-    # commit — per-batch guard cost does not grow with store history.
-    done = store.max_stream_batch_id(scope, adopt_unscoped=False)
-    replayed = done is not None and batch_id <= done
-    summary = {"streaming.batch-id": int(batch_id)}
-    if scope is not None:
-        summary["streaming.query-scope"] = scope
+    # a replay still recomputes and rewrites its verdicts; it only skips
+    # the signature append
+    stamp = store.stream_stamp(scope, batch_id)
     res = dedup_batch_incremental(
         spark, None, store,
-        append=not replayed, batch_sig=sig, summary_extra=summary,
+        append=stamp is not None, batch_sig=sig, summary_extra=stamp,
     )
     res.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
-    return not replayed
+    return stamp is not None
 
 
 def stream_incremental_dedup(
@@ -845,10 +835,8 @@ def cdc_sig_stream_batch(
 
     if batch_df.isEmpty():
         return False
-    # O(1) scoped guard-property lookup (stamped atomically with the
-    # merge commit) — no per-batch snapshot-log walk
-    done = store.max_stream_batch_id(scope, adopt_unscoped=False)
-    if done is not None and batch_id <= done:
+    stamp = store.stream_stamp(scope, batch_id)
+    if stamp is None:
         return False
     sig = minhash_signature_df(
         batch_df.filter("Op IN ('I', 'U')").select("doc_id", "text")
@@ -859,12 +847,9 @@ def cdc_sig_stream_batch(
         *[f"CAST(NULL AS STRING) AS band{b}" for b in range(N_BANDS)],
         "'D' AS Op",
     )
-    summary = {"streaming.batch-id": int(batch_id)}
-    if scope is not None:
-        summary["streaming.query-scope"] = scope
     store.merge(
         sig.unionByName(dels), keys=["doc_id"], op_col="Op",
-        summary_extra=summary,
+        summary_extra=stamp,
     )
     return True
 

@@ -1316,30 +1316,6 @@ def build_token_freq_store(spark, docs: DataFrame, root: str):
     return t
 
 
-def _merge_replayed(store, batch_id, scope) -> bool:
-    """Replay guard for MERGE-maintained stores: unlike the signature
-    APPENDS (keyed-idempotent by construction — re-appending an existing
-    id is anti-joined away), a summed-count MERGE folded twice
-    DOUBLE-COUNTS. Callers that can replay (streaming, retried jobs)
-    pass (batch_id, scope); the stamp rides the merge commit atomically
-    and a same-scope batch id at or below the high-water mark skips —
-    the same contract as the dedup stream batches. The high-water mark
-    is the exact-scope replay-guard property (O(1) in table history)."""
-    if batch_id is None:
-        return False
-    done = store.max_stream_batch_id(scope, adopt_unscoped=False)
-    return done is not None and batch_id <= done
-
-
-def _merge_stamp(batch_id, scope) -> dict | None:
-    if batch_id is None:
-        return None
-    out = {"streaming.batch-id": int(batch_id)}
-    if scope is not None:
-        out["streaming.query-scope"] = scope
-    return out
-
-
 def update_token_freq(
     spark, batch_docs: DataFrame, store, batch_id: int | None = None,
     scope: str | None = None,
@@ -1351,7 +1327,8 @@ def update_token_freq(
     Pass (batch_id, scope) from a replayable caller to make the fold
     exactly-once (returns None on a replay skip) — a summed MERGE run
     twice double-counts, unlike the keyed-idempotent signature appends."""
-    if _merge_replayed(store, batch_id, scope):
+    stamp = store.stream_stamp(scope, batch_id)
+    if stamp is None:
         return None
     delta = (
         batch_docs.selectExpr(f"explode({TOKS_S}) AS token")
@@ -1362,7 +1339,7 @@ def update_token_freq(
     src = delta.join(cur, "token", "left").selectExpr(
         "token", "dfreq + coalesce(freq, CAST(0 AS BIGINT)) AS freq"
     )
-    return store.merge(src, keys=["token"], summary_extra=_merge_stamp(batch_id, scope))
+    return store.merge(src, keys=["token"], summary_extra=stamp)
 
 
 _tf_store_cache: dict[str, str] = {}
@@ -1529,10 +1506,9 @@ def update_doc_freq(
     src = delta.join(cur, "token", "left").selectExpr(
         "token", "ddf + coalesce(df, CAST(0 AS BIGINT)) AS df"
     )
-    if not _merge_replayed(df_store, batch_id, scope):
-        df_store.merge(
-            src, keys=["token"], summary_extra=_merge_stamp(batch_id, scope)
-        )
+    stamp = df_store.stream_stamp(scope, batch_id)
+    if stamp is not None:
+        df_store.merge(src, keys=["token"], summary_extra=stamp)
     batch_tot = toks.selectExpr("CAST(size(toks) AS BIGINT) AS dl").selectExpr(
         "CAST(0 AS INT) AS k",
         "CAST(COUNT(*) AS BIGINT) AS bn",
@@ -1544,10 +1520,9 @@ def update_doc_freq(
         "bn + coalesce(n_docs, CAST(0 AS BIGINT)) AS n_docs",
         "bt + coalesce(total_tokens, CAST(0 AS BIGINT)) AS total_tokens",
     )
-    if not _merge_replayed(stats_store, batch_id, scope):
-        stats_store.merge(
-            ssrc, keys=["k"], summary_extra=_merge_stamp(batch_id, scope)
-        )
+    stamp = stats_store.stream_stamp(scope, batch_id)
+    if stamp is not None:
+        stats_store.merge(ssrc, keys=["k"], summary_extra=stamp)
 
 
 _bm25_store_cache: dict[str, str] = {}

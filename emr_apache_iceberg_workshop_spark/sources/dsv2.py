@@ -784,23 +784,12 @@ if _STREAM_WRITER_BASE is None:  # pragma: no cover
     from pyspark.sql.datasource import DataSourceStreamWriter as _STREAM_WRITER_BASE
 
 
-def _max_batch_id(snaps, scoped) -> int | None:
-    """Highest streaming batch id stamped in the summaries of `snaps`
-    that `scoped(summary)` accepts (None: no such stamp)."""
-    ids = [
-        int(s.summary["streaming.batch-id"])
-        for s in snaps
-        if s.summary.get("streaming.batch-id") is not None and scoped(s.summary)
-    ]
-    return max(ids, default=None)
-
-
 class SnapshotTableStreamWriter(_StageWriter, _STREAM_WRITER_BASE):
     """Exactly-once streaming append sink: each microbatch commits one
     append snapshot with (query scope, batch id) stamped into the summary
-    — the same replay guard as streaming/jobs.py:append_stream_batch, so
-    an at-least-once replay of a committed batch is dropped instead of
-    duplicated.
+    by the table's one replay guard (`SnapshotTable.stream_stamp`, exact
+    scope), so an at-least-once replay of a committed batch is dropped
+    instead of duplicated.
 
     Unlike the batch writer, the streaming writer object is RE-CREATED in
     every python worker (executor tasks and the driver-side commit each
@@ -838,73 +827,18 @@ class SnapshotTableStreamWriter(_StageWriter, _STREAM_WRITER_BASE):
         # a guard set the same scope).
         self.scope = options.get("query-scope") or f"ckpt-{h}"
         self.stage_rel = f"data/.stage-stream-{h}"
-        self._adopt_opt = str(
-            options.get("adopt-unscoped-guard", "")
-        ).lower() in ("true", "1")
-
-    @property
-    def adopt_legacy(self) -> bool:
-        """Legacy-unscoped-guard adoption is an explicit migration step:
-        writer option `adopt-unscoped-guard=true` or table property
-        `streaming.adopt-unscoped-guard=true`. Inferring it from 'no
-        scoped snapshot exists yet' would let unscoped batch ids written
-        by OTHER writers (append_stream_batch without a scope) swallow a
-        resumed scoped query's batches."""
-        if self._adopt_opt:
-            return True
-        props = SnapshotTable(None, self.root).properties()
-        return str(
-            props.get("streaming.adopt-unscoped-guard", "")
-        ).lower() in ("true", "1")
 
     def write(self, iterator):
         return self._write_batches(iterator)
 
     def commit(self, messages, batchId):
-        t = SnapshotTable(None, self.root)
-        # guard matches THIS scope only — never unscoped snapshots (which
-        # belong to other writers: append_stream_batch without a scope).
-        # A main commit folds its stamp into the scope's guard property,
-        # read in O(1) of table history; a branch commit stamps only its
-        # summary (a staged batch must not mark main's guard), so a branch
-        # writer walks the summaries.
-        if self.branch == "main":
-            done = t.max_stream_batch_id(self.scope, adopt_unscoped=False)
-        else:
-            done = _max_batch_id(
-                t.snapshots(), lambda su: su.get("streaming.query-scope") == self.scope
-            )
-        if done is None and batchId > 0 and self.adopt_legacy:
-            # one-time upgrade path, EXPLICIT OPT-IN ONLY: snapshots
-            # committed by the pre-scope code carry batch ids with NO
-            # query-scope. A query resumed from an EXISTING checkpoint
-            # replays its last committed batch with batchId > 0, and the
-            # legacy unscoped guard should suppress that replay — but
-            # "no scoped history yet, replaying batch > 0" is NOT proof
-            # of a migration restart: unscoped batch ids are also written
-            # TODAY by other writers (streaming/jobs.py
-            # append_stream_batch without a scope), and inferring
-            # adoption from their presence silently aborts a resumed
-            # scoped query's batches — data loss. So adoption requires
-            # the migration step to declare it: set the table property
-            # `streaming.adopt-unscoped-guard=true` (or pass the writer
-            # option `adopt-unscoped-guard=true`) when upgrading a
-            # pre-scope table, and unset it once this query has committed
-            # its first scoped batch. Without the opt-in, unscoped ids
-            # are always foreign and never consulted.
-            snaps = t.snapshots()
-            if _max_batch_id(snaps, lambda su: "streaming.query-scope" in su) is None:
-                done = _max_batch_id(snaps, lambda su: "streaming.query-scope" not in su)
-        if done is not None and batchId <= done:
+        stamp = SnapshotTable(None, self.root).stream_stamp(self.scope, batchId, self.branch)
+        if stamp is None:
             self._abort_stage()  # at-least-once replay of a committed batch
             return
         # publish exactly the files this batch's tasks reported
         self._publish_messages(messages)
-        summary = {
-            "streaming.batch-id": int(batchId),
-            "streaming.query-scope": self.scope,
-        }
-        self._commit_stage(summary_extra=summary)
+        self._commit_stage(summary_extra=stamp)
 
     def abort(self, messages, batchId):
         self._abort_stage()

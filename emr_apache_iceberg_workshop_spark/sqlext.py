@@ -718,6 +718,16 @@ class SqlCatalog:
             src = self.table(src_text).scan()
         else:
             src = self.spark.table(src_text)
+        # `SnapshotTable.merge` takes one source row per key; SQL MERGE
+        # enforces it the way Spark does, for matched keys only (duplicate
+        # unmatched keys all insert)
+        dup = src.groupBy(*keys).count().filter("count > 1").select(*keys)
+        if not dup.join(t.scan().select(*keys), list(keys), "left_semi").isEmpty():
+            raise ValueError(
+                "[MERGE_CARDINALITY_VIOLATION] The ON search condition of the "
+                "MERGE statement matched a single row from the target table "
+                "with multiple rows of the source table."
+            )
         if computed:
             if sets == "*":  # SET * alongside a computed INSERT clause
                 tcols = {f.name for f in t.schema().fields}

@@ -248,12 +248,10 @@ def apply_cdc_batch(
 
     `scope` namespaces the replay guard the way Iceberg's streaming sink
     scopes its epochId by query id: batch ids are only compared against
-    commits stamped with the SAME scope, so a stream restarted on a fresh
+    commits stamped with exactly the SAME scope
+    (`SnapshotTable.stream_stamp`), so a stream restarted on a fresh
     checkpoint (ids restart at 0) or a second query feeding the same table
-    applies its batches instead of having them silently dropped. Commits
-    recorded without a scope (pre-scoping writers) are conservatively
-    treated as belonging to every scope — the old behavior, never a new
-    data-loss mode."""
+    applies its batches instead of having them silently dropped."""
     from ..operators import dedup_latest
     from ..tables import SnapshotTable
 
@@ -262,12 +260,6 @@ def apply_cdc_batch(
     src = dedup_latest(batch_df, keys, [F.col(order_col).desc(), *keys])
     if SnapshotTable.exists(table_root):
         table = SnapshotTable(spark, table_root)
-        # O(1) property lookup (stamped atomically with every commit below)
-        # — never a per-batch walk of the snapshot log; unscoped commits
-        # count for every scope (pre-scoping writers, old behavior)
-        done = table.max_stream_batch_id(scope, adopt_unscoped=True)
-        if done is not None and batch_id <= done:
-            return False  # at-least-once replay of a committed batch
     else:
         data_cols = [c for c in src.columns if op_col is None or c != op_col]
         table = SnapshotTable.create(
@@ -277,12 +269,12 @@ def apply_cdc_batch(
             partition_by=partition_by,
             properties={"write.merge.mode": merge_mode},
         )
-    summary = {"streaming.batch-id": int(batch_id)}
-    if scope is not None:
-        summary["streaming.query-scope"] = scope
+    stamp = table.stream_stamp(scope, batch_id)
+    if stamp is None:
+        return False  # at-least-once replay of a committed batch
     table.merge(
         src, keys, op_col=op_col, delete_value=delete_value,
-        summary_extra=summary,
+        summary_extra=stamp,
     )
     return True
 
@@ -307,17 +299,14 @@ def append_stream_batch(
         return False
     if SnapshotTable.exists(table_root):
         table = SnapshotTable(spark, table_root)
-        done = table.max_stream_batch_id(scope, adopt_unscoped=True)
-        if done is not None and batch_id <= done:
-            return False
     else:
         table = SnapshotTable.create(
             spark, table_root, batch_df.schema, partition_by=partition_by
         )
-    summary = {"streaming.batch-id": int(batch_id)}
-    if scope is not None:
-        summary["streaming.query-scope"] = scope
-    table.write(batch_df, mode="append", summary_extra=summary)
+    stamp = table.stream_stamp(scope, batch_id)
+    if stamp is None:
+        return False
+    table.write(batch_df, mode="append", summary_extra=stamp)
     return True
 
 
@@ -418,7 +407,8 @@ def stream_cdc_upsert(
     into the snapshot summary IN THE SAME atomic metadata swap (the trick
     Iceberg's streaming sink uses with `spark.sql.streaming.epochId`), and
     a replayed batch — foreachBatch is at-least-once — is SKIPPED when its
-    id is already committed UNDER THE SAME scope: no duplicate snapshot,
+    id is already committed under exactly the same scope (the table's one
+    replay guard, `SnapshotTable.stream_stamp`): no duplicate snapshot,
     no duplicate work, and a stream restarted on a fresh checkpoint (whose
     batch ids restart at 0) still applies its batches. The
     latest-wins MERGE stays idempotent underneath as a second line of

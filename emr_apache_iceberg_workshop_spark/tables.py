@@ -80,13 +80,15 @@ from .session import scoped_confs
 
 _META = "_meta.json"
 _LOCK = ".commit.lock"
-# streaming replay-guard property: max committed batch id, per query scope
+# streaming replay guard: the summary stamp of a sink commit, and the
+# property that holds the max committed batch id per query scope
+_BATCH_ID = "streaming.batch-id"
+_QUERY_SCOPE = "streaming.query-scope"
 _STREAM_GUARD_PROP = "streaming.max-batch-id"
 
 
 def _stream_guard_key(scope: str | None) -> str:
     return _STREAM_GUARD_PROP if scope is None else f"{_STREAM_GUARD_PROP}.{scope}"
-
 
 
 _LOCK_STALE_S = 60.0  # a lock older than this is a crashed writer's orphan
@@ -445,7 +447,7 @@ class SnapshotTable:
         rec["summary"] = summary
         meta["snapshots"].append(rec)
         if branch == "main":
-            self._stamp_stream_guard(meta, summary, head_sid=sid)
+            self._stamp_stream_guard(meta, summary)
         self._advance(meta, branch, sid, main["snapshot_id"] if main else None)
         self._commit(meta)
         return sid
@@ -477,127 +479,64 @@ class SnapshotTable:
         )
         self._commit(meta)
 
-    # -- streaming replay guard (scoped max batch id) -----------------------
-    # Every scope-stamped streaming commit ALSO folds its batch id into the
-    # versioned table property `streaming.max-batch-id[.<scope>]`, in the
-    # SAME metadata swap as the snapshot append (atomic — a commit and its
-    # guard stamp can never diverge). The per-batch replay lookup then
-    # reads one property instead of walking the snapshot log, so guard
-    # cost stays O(1) in table history: a continuous stream committing one
-    # snapshot per batch no longer pays an O(N)-per-batch / O(N²)-
-    # cumulative summary walk (VERDICT r12 "What's wrong #2").
+    # -- streaming replay guard (exact-scope max batch id) ------------------
+    # A streaming sink stamps each commit's summary with its batch id and
+    # query scope (`stream_stamp`). A commit that advances main also folds
+    # the id into the table property `streaming.max-batch-id[.<scope>]`, in
+    # the same metadata swap as the snapshot, so the replay lookup on main
+    # reads one property instead of walking the snapshot log. A scope's
+    # stamps guard that scope only: an unscoped commit guards unscoped
+    # callers, never a scoped stream.
 
-    def _stamp_stream_guard(
-        self, meta: dict, summary_extra: dict | None, head_sid: int
-    ) -> None:
-        """Fold `summary_extra`'s (streaming.query-scope,
-        streaming.batch-id) stamp into the guard property. Called by
-        `_commit_snapshot` for every MAIN-advancing commit (and by
-        `fast_forward` at publish time), on the in-flight `meta`, before
-        `_commit` — never a separate metadata version. Branch/WAP-staged
-        commits never stamp (ADVICE r13: a stamp for data that may never
-        reach main would make a later replay skip a lost batch).
-
-        The FIRST guard stamp on a table also MIGRATES every legacy
-        in-summary stamp (pre-property streaming history) into per-scope
-        properties — one O(history) pass, once per table ever. Without
-        this, a table mixing property-era commits in one scope with
-        legacy-only stamps in another would hide the legacy scope's
-        replay history from the property-only lookup (r13 review
-        finding): scope B's pre-upgrade max must stay visible even after
-        scope A creates the first property. The migration walks the MAIN
-        lineage of the in-flight commit (its parent chain), so stamps on
-        off-lineage staged snapshots are never adopted."""
-        if not summary_extra:
-            return
-        bid = summary_extra.get("streaming.batch-id")
+    @staticmethod
+    def _stamp_stream_guard(meta: dict, summary: dict | None) -> None:
+        """Fold `summary`'s streaming stamp into the guard property of its
+        scope. Called for main-advancing commits only (`_commit_snapshot`,
+        and `fast_forward` at publish), on the in-flight `meta`."""
+        bid = (summary or {}).get(_BATCH_ID)
         if bid is None:
             return
         props = meta.setdefault("properties", {})
-        if not any(
-            k == _STREAM_GUARD_PROP or k.startswith(_STREAM_GUARD_PROP + ".")
-            for k in props
-        ):
-            # every caller passes the sid of the main head it just
-            # appended (or, for fast_forward, the post-publish head) —
-            # never inferred from list position, which a branch snapshot
-            # appended last would silently mis-anchor (ADVICE r14)
-            for s in self._lineage(meta, head_sid):
-                su = s.get("summary", {})
-                b = su.get("streaming.batch-id")
-                if b is None:
-                    continue
-                k = _stream_guard_key(su.get("streaming.query-scope"))
-                if props.get(k) is None or int(b) > int(props[k]):
-                    props[k] = str(int(b))
-        key = _stream_guard_key(summary_extra.get("streaming.query-scope"))
-        cur = props.get(key)
-        if cur is None or int(bid) > int(cur):
+        key = _stream_guard_key(summary.get(_QUERY_SCOPE))
+        if props.get(key) is None or int(bid) > int(props[key]):
             props[key] = str(int(bid))
 
-    def _legacy_stream_guard_walk(
-        self, meta: dict, scope: str | None, adopt_unscoped: bool
-    ) -> int | None:
-        """Pre-property fallback: max stamped batch id found by walking the
-        snapshot summaries — the original guard, kept for tables whose
-        streaming history predates the guard property. O(history); only
-        reached when NO guard property exists (see max_stream_batch_id).
-
-        Walks the MAIN lineage only (ADVICE r13): a stamp on a snapshot
-        staged to a never-published branch must not mark its batch id as
-        done — the data never reached main, so a replay must re-run."""
-        head = self._head(meta)
-        if head is None:
-            return None
-        done = [
-            int(s["summary"]["streaming.batch-id"])
-            for s in self._lineage(meta, head["snapshot_id"])
-            if s.get("summary", {}).get("streaming.batch-id") is not None
-            and (
-                s["summary"].get("streaming.query-scope") == scope
-                or (
-                    adopt_unscoped
-                    and s["summary"].get("streaming.query-scope") is None
-                )
-            )
-        ]
-        return max(done) if done else None
-
-    def max_stream_batch_id(
-        self, scope: str | None, adopt_unscoped: bool = True
-    ) -> int | None:
-        """Highest streaming batch id committed under `scope` (None when
-        the table has no same-scope streaming commit). `adopt_unscoped`
-        keeps the CDC sink's conservative semantics — commits stamped
-        without a scope (pre-scoping writers) count for every scope; the
-        incremental-dedup sinks pass False for exact-scope isolation.
-
-        Cost: one metadata load + two property reads. The snapshot-log
-        walk runs ONLY for a table with NO guard property at all (pure
-        pre-r13 streaming history): the first post-upgrade stamp MIGRATES
-        every legacy in-summary stamp into per-scope properties
-        (_stamp_stream_guard), so once any guard property exists the
-        property map is complete for every scope — a mixed-era table
-        cannot hide a legacy scope's replay history from this lookup."""
+    def max_stream_batch_id(self, scope: str | None, branch: str = "main") -> int | None:
+        """Highest streaming batch id committed under exactly `scope` on
+        `branch` (None: none yet). On main this is the guard property, O(1)
+        in table history. Branch commits never stamp the property (ADVICE
+        r13: a stamp for data that may never reach main would make a later
+        replay skip a lost batch), so a branch walks its head's lineage."""
         meta = self._load()
-        props = meta.get("properties", {})
-        vals = []
-        v = props.get(_stream_guard_key(scope))
-        if v is not None:
-            vals.append(int(v))
-        if adopt_unscoped and scope is not None:
-            v = props.get(_STREAM_GUARD_PROP)
-            if v is not None:
-                vals.append(int(v))
-        has_guard_props = any(
-            k == _STREAM_GUARD_PROP or k.startswith(_STREAM_GUARD_PROP + ".")
-            for k in props
-        )
-        if not has_guard_props:
-            legacy = self._legacy_stream_guard_walk(meta, scope, adopt_unscoped)
-            if legacy is not None:
-                vals.append(legacy)
-        return max(vals) if vals else None
+        if branch == "main":
+            v = meta.get("properties", {}).get(_stream_guard_key(scope))
+            return None if v is None else int(v)
+        head = self._ref_head(meta, branch)
+        ids = [
+            int(s["summary"][_BATCH_ID])
+            for s in (self._lineage(meta, head["snapshot_id"]) if head else [])
+            if s.get("summary", {}).get(_BATCH_ID) is not None
+            and s["summary"].get(_QUERY_SCOPE) == scope
+        ]
+        return max(ids, default=None)
+
+    def stream_stamp(
+        self, scope: str | None, batch_id: int | None, branch: str = "main"
+    ) -> dict | None:
+        """The replay guard of every streaming sink. None: batch `batch_id`
+        of `scope` is already committed on `branch`, so the caller skips it.
+        Otherwise the summary stamp the caller passes as `summary_extra` to
+        the commit that lands the batch. A None `batch_id` is an unguarded
+        call: an empty stamp, no lookup."""
+        if batch_id is None:
+            return {}
+        done = self.max_stream_batch_id(scope, branch)
+        if done is not None and batch_id <= done:
+            return None
+        stamp = {_BATCH_ID: int(batch_id)}
+        if scope is not None:
+            stamp[_QUERY_SCOPE] = scope
+        return stamp
 
     # -- branch refs (Iceberg branch/WAP model) ----------------------------
     # `meta["branches"]` maps ref name → snapshot id. The map is
@@ -828,9 +767,7 @@ class SnapshotTable:
     @staticmethod
     def _stat_one(fp: str, base: str, rel_dir: str) -> dict:
         """Manifest entry for ONE parquet file (partition tuple parsed
-        from the hive path, footer-derived rows/bounds/nulls/splits).
-        Static and self-free so the parallel stats path can run it
-        executor-side without dragging a SparkSession into the closure."""
+        from the hive path, footer-derived rows/bounds/nulls/splits)."""
         import pyarrow.parquet as pq
 
         relp = os.path.relpath(fp, base)
@@ -856,41 +793,15 @@ class SnapshotTable:
         partition tuple, row count (parquet footer), bytes, per-column
         min/max bounds + null counts, row-group split offsets — exactly
         the bookkeeping an Iceberg writer does when it builds a manifest.
-
-        The listing walk is driver-side; the footer READS distribute as a
-        Spark job once the dir holds ≥ `write.stats.parallel-threshold`
-        files — on a 100 TB bootstrap (`add_files` over a million files
-        on OBJECT STORAGE, where each footer read is a 20-50 ms GET)
-        serial driver-side reads would be the commit bottleneck, while a
-        map-only job over the path list is embarrassingly parallel. The
-        default threshold is 20000 because the regime is latency-bound,
-        not CPU-bound: measured on local disk, serial footer reads cost
-        ~0.3 ms/file while the job path costs ~1.9 ms/file in scheduling
-        overhead at 2k files (SCALE.md, round 10) — set the threshold
-        low only when the warehouse is remote. Spark-free callers (the
-        DSv2 commit worker) always use the serial path."""
+        A driver-side walk and footer read, about 0.3 ms per file on local
+        disk (SCALE.md, round 10)."""
         base = os.path.join(self.root, rel_dir)
-        paths: list[str] = []
-        for dirpath, _dirs, files in os.walk(base):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    paths.append(os.path.join(dirpath, fn))
-        threshold = int(
-            self._load().get("properties", {}).get(
-                "write.stats.parallel-threshold", 20000
-            )
-        )
-        if self.spark is not None and len(paths) >= threshold:
-            stat_one, rd = SnapshotTable._stat_one, rel_dir
-            out = (
-                self.spark.sparkContext.parallelize(
-                    paths, min(len(paths), 256)
-                )
-                .map(lambda fp: stat_one(fp, base, rd))
-                .collect()
-            )
-        else:
-            out = [self._stat_one(fp, base, rel_dir) for fp in paths]
+        out = [
+            self._stat_one(os.path.join(dirpath, fn), base, rel_dir)
+            for dirpath, _dirs, files in os.walk(base)
+            for fn in files
+            if fn.endswith(".parquet")
+        ]
         out.sort(key=lambda f: f["path"])
         return out
 
@@ -1254,7 +1165,10 @@ class SnapshotTable:
         sid = self._next_sid(meta)
         published = False
         rel = parts = files = None
-        for _attempt in range(8):
+        # the budget is time, not tries: under host load concurrent
+        # appends can lose more races in a row than any fixed count allows
+        deadline = time.time() + _LOCK_WAIT_S
+        while True:
             rel = f"data/s{sid}"
             out = os.path.join(self.root, rel)
             try:
@@ -1289,6 +1203,9 @@ class SnapshotTable:
                     # refuse; withdraw the uncommitted dir
                     _shutil.rmtree(out, ignore_errors=True)
                     raise
+                if time.time() > deadline:
+                    break
+                time.sleep(0.01)
                 meta = self._load()
                 new_sid = self._next_sid(meta)
                 if not published:
@@ -1322,7 +1239,9 @@ class SnapshotTable:
                 # ref change): plain retry against the fresh metadata
         if not published:
             _shutil.rmtree(stage, ignore_errors=True)
-        raise CommitConflict(f"append to {self.root} lost the commit race 8 times")
+        raise CommitConflict(
+            f"append to {self.root} lost the commit race for {_LOCK_WAIT_S:.0f}s"
+        )
 
     def _commit_write(
         self,
@@ -1405,25 +1324,16 @@ class SnapshotTable:
                 out["main"] = head["snapshot_id"]
         return out
 
-    def _adopt_stream_stamps(
-        self, meta: dict, published: list[dict], head_sid: int
-    ) -> None:
-        """Publication-time replay-guard adoption (review r14): a
-        scope-stamped batch staged to a branch stamps the guard only when
-        its data actually reaches main — at fast_forward time, from the
-        published snapshots' summaries (a cherry-pick copies the stamp
-        into its own summary, which `_commit_snapshot` folds in). Branch
-        writes themselves never stamp (ADVICE r13: an unpublished batch
-        must stay replayable); without THIS half, a published WAP batch would
-        replay as duplicates on any guard-property-era table (the
-        property-only lookup never sees staged summaries). Routed through
-        _stamp_stream_guard with the POST-publish main head so a first
-        property created here still migrates legacy in-summary stamps."""
+    def _adopt_stream_stamps(self, meta: dict, published: list[dict]) -> None:
+        """Publication-time replay-guard adoption (review r14): a batch
+        staged to a branch stamps main's guard only when its data reaches
+        main — at fast_forward time, from the published snapshots'
+        summaries (a cherry-pick copies the stamp into its own summary,
+        which `_commit_snapshot` folds in). Without it, a published WAP
+        batch would replay as duplicates: main's lookup reads only the
+        property."""
         for s in published:
-            su = s.get("summary", {})
-            if su.get("streaming.batch-id") is None:
-                continue
-            self._stamp_stream_guard(meta, su, head_sid=head_sid)
+            self._stamp_stream_guard(meta, s.get("summary"))
 
     def fast_forward(self, branch: str, to: str = "main") -> int:
         """Publish step of write-audit-publish (Iceberg
@@ -1451,7 +1361,6 @@ class SnapshotTable:
                 meta,
                 [s for s in self._lineage(meta, src["snapshot_id"])
                  if s["snapshot_id"] not in dst_ids],
-                head_sid=src["snapshot_id"],
             )
         self._advance(
             meta, to, src["snapshot_id"], dst["snapshot_id"] if dst else None
@@ -1516,11 +1425,11 @@ class SnapshotTable:
                 f"retroactively apply to the incoming rows"
             )
         # carry the staged commit's streaming stamp into the published
-        # summary (main-lineage visibility for the legacy walk); the
-        # commit folds it into the guard property — the publish half of
-        # the branch-write stamp skip (see _adopt_stream_stamps)
+        # summary; the commit folds it into the guard property — the
+        # publish half of the branch-write stamp skip (see
+        # _adopt_stream_stamps)
         summary = {"cherry_picked_from": snapshot_id}
-        for k in ("streaming.batch-id", "streaming.query-scope"):
+        for k in (_BATCH_ID, _QUERY_SCOPE):
             if k in src.get("summary", {}):
                 summary[k] = src["summary"][k]
         return self._commit_snapshot(

@@ -120,7 +120,7 @@ def test_analyze_ndv_integer_exact(spark, tmp_path):
     assert stored["ndv_est"] == s["ndv_est"]
 
 
-# -- 5. replay-guard legacy migration ----------------------------------------
+# -- 5. replay-guard scope isolation -------------------------------------------
 def _writer(root: str, ckpt: str):
     from emr_apache_iceberg_workshop_spark.sources.dsv2 import (
         SnapshotTableStreamWriter,
@@ -129,37 +129,6 @@ def _writer(root: str, ckpt: str):
     return SnapshotTableStreamWriter(
         {"table": root, "checkpointlocation": ckpt}, [("id", "bigint")], False
     )
-
-
-def test_stream_guard_accepts_legacy_unscoped_on_resume(spark, tmp_path):
-    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
-
-    t = SnapshotTable.create(spark, str(tmp_path / "t"), "id bigint")
-    # legacy snapshot: batch id stamped, NO query-scope key (pre-scope code)
-    t.write(
-        spark.createDataFrame([(1,)], "id bigint"),
-        summary_extra={"streaming.batch-id": 2},
-    )
-    assert "streaming.query-scope" not in t.snapshots()[-1].summary
-    # round 11: adoption is an explicit migration step (unscoped ids are
-    # also written by other live writers — inferring adoption loses data)
-    t.set_properties({"streaming.adopt-unscoped-guard": "true"})
-    w = _writer(t.root, str(tmp_path / "ckpt"))
-    # resumed checkpoint replays its last committed batch (2) -> dropped
-    w.commit([], batchId=2)
-    assert len(t.snapshots()) == 1
-    # the NEXT batch commits normally, now scoped
-    w2 = _writer(t.root, str(tmp_path / "ckpt"))
-    w2.commit([], batchId=3)
-    snaps = t.snapshots()
-    assert len(snaps) == 2
-    assert snaps[-1].summary["streaming.batch-id"] == 3
-    assert snaps[-1].summary["streaming.query-scope"].startswith("ckpt-")
-    # once scoped history exists, legacy snapshots are never consulted:
-    # replaying batch 3 is dropped by the scoped guard itself
-    w3 = _writer(t.root, str(tmp_path / "ckpt"))
-    w3.commit([], batchId=3)
-    assert len(t.snapshots()) == 2
 
 
 def test_stream_guard_fresh_query_not_suppressed_by_legacy(spark, tmp_path):
@@ -606,32 +575,3 @@ def test_metadata_log_survives_table_relocation(spark, tmp_path):
         "v1.metadata.json", "v2.metadata.json", "v3.metadata.json",
     ]
     assert [r["latest_snapshot_id"] for r in rows] == [1, 2, 3]
-
-
-def test_parallel_file_stats_identical_to_serial(spark, tmp_path):
-    """Above write.stats.parallel-threshold, footer stats compute as a
-    Spark job; output must be byte-identical to the serial path (the
-    manifest is the correctness anchor for pruning, .files, emission)."""
-    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
-
-    ddl = "id bigint, category string, qty double"
-    t = SnapshotTable.create(
-        spark, str(tmp_path / "t"), ddl, partition_by=["category"],
-        properties={"write.stats.parallel-threshold": "4"},
-    )
-    df = spark.createDataFrame(
-        [(i, "abc"[i % 3], float(i) / 7) for i in range(200)], ddl
-    ).repartition(6)
-    t.write(df)  # committed via the PARALLEL stats path (>= 4 files)
-    rel = t.snapshots()[-1].files[0]["path"].rsplit("/", 2)[0]
-    par = t._file_stats(rel)
-    assert len(par) >= 4
-    # force the serial path on the same dir and compare exactly
-    t.set_properties({"write.stats.parallel-threshold": "100000"})
-    ser = t._file_stats(rel)
-    assert par == ser
-    # manifest-derived surfaces work off the parallel-computed stats
-    assert t.scan().count() == 200
-    assert sum(f["rows"] for f in t.snapshots()[-1].files) == 200
-    kept, total = t.plan_files("id", 0, 3)
-    assert 0 < len(kept) <= total

@@ -125,15 +125,15 @@ def test_metadata_log_entries_tolerates_removed_history(spark, tmp_path):
     assert v2["latest_snapshot_id"] == 2 and v3["latest_snapshot_id"] == 3
 
 
-# -- replay-guard: no implicit legacy adoption ----------------------------------
+# -- replay-guard: no adoption of unscoped ids ----------------------------------
 def test_stream_guard_foreign_unscoped_never_swallows_without_optin(
     spark, tmp_path
 ):
     """A scoped DSv2 query resumed (batchId > 0) against a table whose
     ONLY streaming history is unscoped ids from another live writer
-    (append_stream_batch without a scope) must COMMIT its batch: without
-    the explicit migration opt-in, unscoped ids are always foreign —
-    inferring legacy adoption from their presence was silent data loss."""
+    (append_stream_batch without a scope) must COMMIT its batch: unscoped
+    ids are always foreign — adopting them as the query's history was
+    silent data loss."""
     from emr_apache_iceberg_workshop_spark.sources.dsv2 import (
         SnapshotTableStreamWriter,
     )
@@ -153,21 +153,6 @@ def test_stream_guard_foreign_unscoped_never_swallows_without_optin(
     snaps = t.snapshots()
     assert len(snaps) == 2  # committed — NOT swallowed by foreign id 9
     assert snaps[-1].summary["streaming.batch-id"] == 3
-
-    # with the table-property opt-in the migration path still works
-    t2 = SnapshotTable.create(spark, str(tmp_path / "t2"), "id bigint")
-    t2.write(
-        spark.createDataFrame([(1,)], "id bigint"),
-        summary_extra={"streaming.batch-id": 9},  # own pre-scope history
-    )
-    t2.set_properties({"streaming.adopt-unscoped-guard": "true"})
-    w2 = SnapshotTableStreamWriter(
-        {"table": t2.root, "checkpointlocation": str(tmp_path / "ckpt2")},
-        [("id", "bigint")],
-        False,
-    )
-    w2.commit([], batchId=9)  # replay of the legacy-committed batch
-    assert len(t2.snapshots()) == 1  # suppressed, as migration intends
 
 
 # -- incremental dedup against a persisted signature store ----------------------

@@ -608,13 +608,11 @@ def test_maintenance_merge_replay_guard(spark, tmp_path):
 
     # crash window: df already folded batch 1, stats missed it — the
     # replay folds ONLY stats
-    from emr_apache_iceberg_workshop_spark.plans.textops import _merge_stamp
-
     b3 = spark.createDataFrame([(3, "delta")], DDL)
     # simulate the crash: fold df alone, stamped, as the dying run did
     df_t.merge(
         spark.createDataFrame([("delta", 1)], "token string, df bigint"),
-        keys=["token"], summary_extra=_merge_stamp(1, "s1"),
+        keys=["token"], summary_extra=df_t.stream_stamp("s1", 1),
     )
     update_doc_freq(spark, b3, df_t, st_t, batch_id=1, scope="s1")
     assert {r.token: r.df for r in df_t.scan().collect()}["delta"] == 1  # once

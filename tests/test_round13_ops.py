@@ -12,7 +12,6 @@ per-batch lookup does not walk the snapshot log (VERDICT r12 #2)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -58,24 +57,20 @@ def test_guard_property_stamped_atomically(spark, tmp_path):
 
 
 def test_guard_lookup_semantics(spark, tmp_path):
-    """Scope isolation + unscoped adoption match the pre-r13 snapshot-walk
-    guard exactly."""
+    """Scope isolation: each scope, and the unscoped stamp, sees only its
+    own batch ids."""
     t = _mk_table(spark, tmp_path)
     df = spark.createDataFrame([(1, "a")], DDL)
     t.write(df, summary_extra={"streaming.batch-id": 2, "streaming.query-scope": "qA"})
-    t.write(df, summary_extra={"streaming.batch-id": 9})  # unscoped legacy writer
-    assert t.max_stream_batch_id("qA", adopt_unscoped=False) == 2
-    # CDC-sink semantics: unscoped commits count for every scope
-    assert t.max_stream_batch_id("qA", adopt_unscoped=True) == 9
-    # a scope with no commits: only the unscoped stamp is adopted
-    assert t.max_stream_batch_id("qB", adopt_unscoped=False) is None
-    assert t.max_stream_batch_id("qB", adopt_unscoped=True) == 9
+    t.write(df, summary_extra={"streaming.batch-id": 9})  # unscoped writer
+    assert t.max_stream_batch_id("qA") == 2
+    assert t.max_stream_batch_id("qB") is None
     assert t.max_stream_batch_id(None) == 9
 
 
 def test_guard_lookup_is_property_only_no_snapshot_walk(spark, tmp_path, monkeypatch):
-    """The per-batch lookup must not scale with snapshot count: once any
-    guard property exists, the legacy snapshot-log walk is never taken."""
+    """The per-batch lookup on main must not scale with snapshot count: it
+    reads the guard property and never walks the lineage."""
     from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
 
     t = _mk_table(spark, tmp_path)
@@ -83,34 +78,12 @@ def test_guard_lookup_is_property_only_no_snapshot_walk(spark, tmp_path, monkeyp
     t.write(df, summary_extra={"streaming.batch-id": 4, "streaming.query-scope": "qA"})
 
     def _boom(*a, **k):  # any walk attempt fails the test
-        raise AssertionError("legacy snapshot walk taken on a property-era table")
+        raise AssertionError("replay guard walked the lineage on main")
 
-    monkeypatch.setattr(SnapshotTable, "_legacy_stream_guard_walk", staticmethod(_boom))
-    assert t.max_stream_batch_id("qA", adopt_unscoped=False) == 4
-    assert t.max_stream_batch_id("qA", adopt_unscoped=True) == 4
-    assert t.max_stream_batch_id("qZ", adopt_unscoped=True) is None
-
-
-def test_guard_legacy_unstamped_store_stays_conservative(spark, tmp_path):
-    """A table whose streaming history predates the guard property (stamps
-    only in snapshot summaries) still honors those stamps via the one-time
-    walk — replays on legacy stores are never re-applied."""
-    t = _mk_table(spark, tmp_path)
-    df = spark.createDataFrame([(1, "a")], DDL)
-    t.write(df, summary_extra={"streaming.batch-id": 6, "streaming.query-scope": "qA"})
-    t.write(df, summary_extra={"streaming.batch-id": 8})
-    # simulate a pre-r13 table: strip the guard properties, keep summaries
-    meta_path = os.path.join(t.root, "_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    for k in list(meta.get("properties", {})):
-        if k.startswith("streaming.max-batch-id"):
-            del meta["properties"][k]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    assert t.max_stream_batch_id("qA", adopt_unscoped=False) == 6
-    assert t.max_stream_batch_id("qA", adopt_unscoped=True) == 8
-    assert t.max_stream_batch_id("qB", adopt_unscoped=False) is None
+    monkeypatch.setattr(SnapshotTable, "_lineage", _boom)
+    assert t.stream_stamp("qA", 4) is None
+    assert t.stream_stamp("qA", 5) == {"streaming.batch-id": 5, "streaming.query-scope": "qA"}
+    assert t.stream_stamp("qZ", 0) == {"streaming.batch-id": 0, "streaming.query-scope": "qZ"}
 
 
 def test_append_stream_batch_guard_equivalence(spark, tmp_path):
@@ -595,34 +568,6 @@ def test_adaptive_components_paths_agree(spark):
 
 # --------------------------------------------------------------------------
 # emission freshness guard: both-ways snapshot-set comparison
-
-
-def test_stamp_migrates_legacy_scopes_on_first_property(spark, tmp_path):
-    """r13 review: the FIRST guard property stamp migrates every legacy
-    in-summary stamp — a mixed-era table cannot hide a legacy scope's
-    replay history from the property-only lookup."""
-    t = _mk_table(spark, tmp_path)
-    df = spark.createDataFrame([(1, "a")], DDL)
-    # legacy history: stamps in summaries only (strip properties after)
-    t.write(df, summary_extra={"streaming.batch-id": 6, "streaming.query-scope": "qB"})
-    t.write(df, summary_extra={"streaming.batch-id": 9})  # unscoped
-    meta_path = os.path.join(t.root, "_meta.json")
-    with open(meta_path) as f:
-        meta = json.load(f)
-    for k in list(meta.get("properties", {})):
-        if k.startswith("streaming.max-batch-id"):
-            del meta["properties"][k]
-    with open(meta_path, "w") as f:
-        json.dump(meta, f)
-    # post-upgrade: scope A commits its first batch -> migration fires
-    t.write(df, summary_extra={"streaming.batch-id": 0, "streaming.query-scope": "qA"})
-    props = t.properties()
-    assert props["streaming.max-batch-id.qA"] == "0"
-    assert props["streaming.max-batch-id.qB"] == "6"  # migrated
-    assert props["streaming.max-batch-id"] == "9"  # migrated unscoped
-    # scope B's replay history stays visible property-only
-    assert t.max_stream_batch_id("qB", adopt_unscoped=False) == 6
-    assert t.max_stream_batch_id("qB", adopt_unscoped=True) == 9
 
 
 def test_cluster_retraction_recovers_from_mid_crash(spark, tmp_path):

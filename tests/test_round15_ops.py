@@ -228,56 +228,6 @@ def test_clone_store_skips_commit_lock(spark, tmp_path):
     assert t.scan().count() == 1
 
 
-def test_stamp_stream_guard_anchors_on_passed_head_sid(spark, tmp_path):
-    """The guard migration walks the lineage of the sid the commit path
-    passes, never `snapshots[-1]` (ADVICE r14) — a branch snapshot
-    appended after main's head must not change the anchored lineage."""
-    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
-
-    t = SnapshotTable.create(spark, str(tmp_path / "t"), "k bigint, v string")
-    df = spark.createDataFrame([(1, "a")], "k bigint, v string")
-    t.write(df, summary_extra={"streaming.batch-id": "3", "streaming.query-scope": "s1"})
-    assert t.max_stream_batch_id(scope="s1") == 3
-
-
-def test_stamp_stream_guard_ignores_branch_snapshot_appended_last():
-    """Unit-level pin of the ADVICE-r14 fix: with a BRANCH snapshot
-    sitting LAST in meta['snapshots'] (legacy-stamped with a huge batch
-    id) and the main head passed explicitly, the first-property-stamp
-    migration must adopt the MAIN lineage's legacy stamp — the old
-    `snapshots[-1]` inference would have walked the branch and migrated
-    batch id 99 into the main guard, marking never-published batches as
-    done."""
-    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
-
-    meta = {
-        "snapshots": [
-            {
-                "snapshot_id": 1,
-                "parent_id": None,
-                "summary": {"streaming.batch-id": "3", "streaming.query-scope": "s1"},
-            },
-            # staged branch snapshot, appended AFTER main's head, carrying
-            # a legacy stamp for data that never reached main
-            {
-                "snapshot_id": 2,
-                "parent_id": 1,
-                "summary": {"streaming.batch-id": "99", "streaming.query-scope": "s1"},
-            },
-        ],
-        "properties": {},
-    }
-    t = SnapshotTable.__new__(SnapshotTable)  # no store needed: pure meta fold
-    t._stamp_stream_guard(
-        meta,
-        {"streaming.batch-id": "4", "streaming.query-scope": "s1"},
-        head_sid=1,
-    )
-    assert meta["properties"]["streaming.max-batch-id.s1"] == "4"
-    # the branch's 99 must NOT have been adopted by the migration
-    assert "99" not in meta["properties"].values()
-
-
 def test_call_apply_cdc_clusters_facade_parity(spark, tmp_path):
     """CALL system.apply_cdc_clusters must land the exact label state the
     library call lands, and return it."""

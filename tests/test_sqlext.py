@@ -397,6 +397,30 @@ def test_merge_partial_set_keeps_target_columns(spark, cat):
     assert got == {1: ("A1", "b1"), 2: ("a2", "b2")}
 
 
+@pytest.mark.parametrize("mode", ["copy-on-write", "merge-on-read"])
+def test_merge_cardinality_violation(spark, cat, mode):
+    """Spark's MERGE rule: a target row matched by two USING rows raises
+    MERGE_CARDINALITY_VIOLATION and commits nothing; duplicate UNMATCHED
+    keys are no violation, and each of their rows inserts."""
+    cat.sql(f"CREATE TABLE cv (id BIGINT, v STRING) TBLPROPERTIES ('write.merge.mode'='{mode}')")
+    cat.sql("INSERT INTO cv VALUES (1, 'a'), (2, 'b')")
+    stmt = """MERGE INTO cv AS t USING cv_batch AS s ON t.id = s.id
+              WHEN MATCHED THEN UPDATE SET *
+              WHEN NOT MATCHED THEN INSERT *"""
+    ddl = "id bigint, v string"
+    spark.createDataFrame([(1, "x"), (1, "y"), (3, "c")], ddl).createOrReplaceTempView("cv_batch")
+    n = len(cat.table("cv").snapshots())
+    with pytest.raises(ValueError, match="MERGE_CARDINALITY_VIOLATION"):
+        cat.sql(stmt)
+    assert len(cat.table("cv").snapshots()) == n
+    assert sorted(cat.sql("SELECT * FROM cv").collect()) == [(1, "a"), (2, "b")]
+    spark.createDataFrame([(1, "x"), (5, "n1"), (5, "n2")], ddl).createOrReplaceTempView("cv_batch")
+    cat.sql(stmt)
+    assert sorted(cat.sql("SELECT * FROM cv").collect()) == [
+        (1, "x"), (2, "b"), (5, "n1"), (5, "n2"),
+    ]
+
+
 def test_merge_computed_with_delete_clause(spark, cat):
     """Computed assignments compose with the CDC delete branch."""
     cat.sql("CREATE TABLE cw (k BIGINT, n BIGINT)")

@@ -267,8 +267,7 @@ def test_apply_cdc_batch_scope_isolates_checkpoint_restarts(spark, tmp_path):
     """The replay guard is scoped to the streaming query: a stream
     restarted on a FRESH checkpoint (batch ids restart at 0) applies its
     batch 0 instead of having it silently dropped, while a same-scope
-    replay is still skipped and legacy unscoped commits still guard
-    conservatively."""
+    replay is still skipped and an unscoped commit guards no scope."""
     from emr_apache_iceberg_workshop_spark.streaming.jobs import apply_cdc_batch
     from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
 
@@ -292,10 +291,29 @@ def test_apply_cdc_batch_scope_isolates_checkpoint_restarts(spark, tmp_path):
     assert {r.k: r.v for r in t.scan().collect()} == {1: "a2", 2: "b"}
     assert t.snapshots()[-1].summary["streaming.query-scope"] == "qB"
 
-    # legacy unscoped commit guards every scope (old conservative behavior)
+    # an unscoped commit is another writer's history: scope qC commits
     tbl2 = str(tmp_path / "tbl2")
     assert apply_cdc_batch(spark, b0, 5, tbl2, ["k"], order_col="ts")  # unscoped
-    assert apply_cdc_batch(spark, b1, 3, tbl2, ["k"], order_col="ts", scope="qC") is False
+    assert apply_cdc_batch(spark, b1, 3, tbl2, ["k"], order_col="ts", scope="qC") is True
+
+
+def test_apply_cdc_batch_unscoped_commit_never_swallows_fresh_scope(spark, tmp_path):
+    """One unscoped batch 5 must not mark a fresh stream's batches 0..2
+    (scope qNew) as replays: each commits, and a same-scope replay is
+    still skipped."""
+    from emr_apache_iceberg_workshop_spark.streaming.jobs import apply_cdc_batch
+    from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
+
+    tbl = str(tmp_path / "tbl")
+    ddl = "k bigint, ts string, v string"
+    rows = [spark.createDataFrame([(k, f"t{k}", f"v{k}")], ddl) for k in range(4)]
+    assert apply_cdc_batch(spark, rows[3], 5, tbl, ["k"], order_col="ts")  # unscoped
+    for b in range(3):
+        assert apply_cdc_batch(spark, rows[b], b, tbl, ["k"], order_col="ts", scope="qNew")
+    assert apply_cdc_batch(spark, rows[2], 2, tbl, ["k"], order_col="ts", scope="qNew") is False
+    t = SnapshotTable(spark, tbl)
+    assert sorted(r.k for r in t.scan().collect()) == [0, 1, 2, 3]
+    assert t.max_stream_batch_id("qNew") == 2 and t.max_stream_batch_id(None) == 5
 
 
 def test_stream_append_table_exactly_once(spark, tmp_path):

@@ -100,21 +100,21 @@ def test_maintain_rewrites_escaped_partition(spark, tmp_path):
 def test_merge_replay_guard_is_property_only(spark, tmp_path, monkeypatch):
     """The MERGE replay guard reads the exact-scope guard property: no
     walk over the snapshot summaries, whose cost grows with history."""
-    from emr_apache_iceberg_workshop_spark.plans.textops import _merge_replayed, _merge_stamp
     from emr_apache_iceberg_workshop_spark.tables import SnapshotTable
 
     t = SnapshotTable.create(spark, str(tmp_path / "freq"), "token string, freq bigint")
     src = spark.createDataFrame([("a", 1)], "token string, freq bigint")
-    t.merge(src, keys=["token"], summary_extra=_merge_stamp(4, "qA"))
-    t.merge(src, keys=["token"], summary_extra=_merge_stamp(7, None))
+    t.merge(src, keys=["token"], summary_extra=t.stream_stamp("qA", 4))
+    t.merge(src, keys=["token"], summary_extra=t.stream_stamp(None, 7))
 
-    def _boom(self):
+    def _boom(*a, **k):
         raise AssertionError("replay guard walked the snapshot log")
 
     monkeypatch.setattr(SnapshotTable, "snapshots", _boom)
-    assert _merge_replayed(t, 4, "qA") and not _merge_replayed(t, 5, "qA")
-    assert not _merge_replayed(t, 1, "qB")  # exact scope: other scopes never count
-    assert _merge_replayed(t, 7, None) and not _merge_replayed(t, 8, None)
+    monkeypatch.setattr(SnapshotTable, "_lineage", _boom)
+    assert t.stream_stamp("qA", 4) is None and t.stream_stamp("qA", 5) is not None
+    assert t.stream_stamp("qB", 1) is not None  # exact scope: other scopes never count
+    assert t.stream_stamp(None, 7) is None and t.stream_stamp(None, 8) is not None
 
 
 def test_stream_sink_replay_guard_is_property_only(spark, tmp_path, monkeypatch):
@@ -162,11 +162,14 @@ _RULES = {"_lineage", "_births", "_name_at", "_dir_manifest", "_head", "_ddl_at"
 _STATE_KEYS = {
     "active_dirs", "active_deletes", "dir_manifests", "evolve-partition", "prev_partition_by",
 }
+# the streaming replay guard's stamp and property keys (`stream_stamp`)
+_GUARD_KEYS = {"streaming.batch-id", "streaming.query-scope", "streaming.max-batch-id"}
 
 
 def test_format_rules_have_one_definition():
-    """No engine module but the owner defines a format rule, and none but
-    the owner and the oracle module names a table-state key."""
+    """No engine module but the owner defines a format rule or names a
+    replay-guard key, and none but the owner and the oracle module names
+    a table-state key."""
     bad = []
     for dirpath, _dirs, names in os.walk(ENGINE):
         for name in names:
@@ -187,4 +190,6 @@ def test_format_rules_have_one_definition():
                     and node.value in _STATE_KEYS
                 ):
                     bad.append(f"{rel}:{node.lineno} reads {node.value!r}")
+                if isinstance(node, ast.Constant) and node.value in _GUARD_KEYS:
+                    bad.append(f"{rel}:{node.lineno} names guard key {node.value!r}")
     assert not bad, bad

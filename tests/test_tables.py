@@ -1338,6 +1338,25 @@ def test_call_expire_snapshots_older_than_sql(spark, tmp_path):
     assert [s.snapshot_id for s in t.snapshots()] == [3]
 
 
+def test_append_retries_past_eight_lost_races(spark, tmp_path, monkeypatch):
+    """An append that loses the commit race retries until a time budget
+    runs out, not for a fixed count: nine straight conflicts still land."""
+    from emr_apache_iceberg_workshop_spark.tables import CommitConflict, SnapshotTable
+
+    t = SnapshotTable.create(spark, str(tmp_path / "t"), "k bigint")
+    real, lost = SnapshotTable._commit_write, [9]
+
+    def flaky(self, *a, **k):
+        if lost[0]:
+            lost[0] -= 1
+            raise CommitConflict("simulated lost race")
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(SnapshotTable, "_commit_write", flaky)
+    t.write(spark.createDataFrame([(1,)], "k bigint"))
+    assert lost == [0] and [r.k for r in t.scan().collect()] == [1]
+
+
 def test_optimistic_concurrency_two_writers(spark, tmp_path):
     """Optimistic multi-writer commits (the Glue/Iceberg locking the
     reference inherits): concurrent appends BOTH land (the loser rebases
